@@ -1,7 +1,8 @@
 package graft.sink
 
-import java.sql.Connection
+import java.sql.{Connection, PreparedStatement}
 import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
@@ -33,7 +34,7 @@ import org.apache.spark.sql.functions._
 class AggDeltaSink(url: String, val name: String, version: Int,
                    keys: Seq[ColumnSpec], sums: Seq[ColumnSpec],
                    dialect: SinkDialect = AnsiDialect)
-    extends Serializable {
+    extends DeltaBatchSink with Serializable {
 
   private val spec = TableSpec(name, version,
     keys ++ Seq(ColumnSpec("cnt", "BIGINT")) ++ sums)
@@ -77,62 +78,62 @@ class AggDeltaSink(url: String, val name: String, version: Int,
   /** The per-group UPDATE/INSERT/zero-eliminate protocol over an OPEN
     * transaction — shared by [[applyAdjustmentsStreamed]] (own txn) and
     * [[UnionDeltaSink]] (the group's shared txn, so a raw member and
-    * this view commit all-or-nothing together). */
+    * this view commit all-or-nothing together). Each statement is
+    * prepared once per WHERE shape (the NULL pattern of the key values)
+    * and reused for every group of that shape. */
   private[sink] def applyAdjustmentsInTxn(
       c: Connection, adjustments: Iterator[(Seq[Any], Long, Seq[Any])]): Unit = {
-      val sumSet = sums.map(s => s"${s.name} = ${s.name} + ?").mkString(", ")
-      val setSql = if (sums.isEmpty) "cnt = cnt + ?" else s"cnt = cnt + ?, $sumSet"
-      adjustments.foreach { case (keyVals, dn, dsums) =>
-        require(dsums.length == sums.length,
-          s"expected ${sums.length} sum adjustments, got ${dsums.length}")
-        val (where, whereParams) = DeltaSql.nullSafeWhere(keySpec, keyVals)
-        val upd = c.prepareStatement(
-          s"UPDATE $name SET $setSql WHERE $where")
-        DeltaSql.bind(upd, (dn +: dsums) ++ whereParams)
-        val hit = upd.executeUpdate(); upd.close()
-        if (hit == 0) {
-          // absent group: any net effect (dn ≠ 0 OR a nonzero sum
-          // adjustment — e.g. retract(v=1)+insert(v=5) netting dn=0,
-          // ds=+4) means the stream retracts state the view never had
-          if (dn < 0 || (dn == 0 && !dsums.forall(numericallyZero)))
-            throw new IllegalStateException(
-              s"aggregate retraction for absent group $keyVals in $name (dn=$dn, ds=$dsums)")
-          if (dn > 0) {
-            val ins = c.prepareStatement(
-              s"INSERT INTO $name (${spec.colNames.mkString(", ")}) VALUES (${spec.colNames.map(_ => "?").mkString(", ")})")
-            DeltaSql.bind(ins, (keyVals :+ dn) ++ dsums)
-            ins.executeUpdate(); ins.close()
-          }
-        } else {
-          val sel = c.prepareStatement(
-            s"SELECT cnt FROM $name WHERE $where")
-          DeltaSql.bind(sel, whereParams)
-          val rs = sel.executeQuery(); rs.next()
-          val cnt = rs.getLong(1); rs.close(); sel.close()
-          if (cnt < 0) throw new IllegalStateException(
-            s"group $keyVals in $name driven to cnt=$cnt: more retractions than rows")
-          if (cnt == 0) { // zero-elimination (reference coll.rs:89-101)
-            val del = c.prepareStatement(s"DELETE FROM $name WHERE $where")
-            DeltaSql.bind(del, whereParams)
-            del.executeUpdate(); del.close()
-          }
+    val sumSet = sums.map(s => s"${s.name} = ${s.name} + ?").mkString(", ")
+    val setSql = if (sums.isEmpty) "cnt = cnt + ?" else s"cnt = cnt + ?, $sumSet"
+    val prepared = mutable.Map.empty[String, PreparedStatement]
+    def stmt(sql: String): PreparedStatement =
+      prepared.getOrElseUpdate(sql, c.prepareStatement(sql))
+    try adjustments.foreach { case (keyVals, dn, dsums) =>
+      require(dsums.length == sums.length,
+        s"expected ${sums.length} sum adjustments, got ${dsums.length}")
+      val (where, whereParams) = DeltaSql.nullSafeWhere(keySpec, keyVals)
+      val upd = stmt(s"UPDATE $name SET $setSql WHERE $where")
+      DeltaSql.bind(upd, (dn +: dsums) ++ whereParams)
+      val hit = upd.executeUpdate()
+      if (hit == 0) {
+        // absent group: any net effect (dn ≠ 0 OR a nonzero sum
+        // adjustment — e.g. retract(v=1)+insert(v=5) netting dn=0,
+        // ds=+4) means the stream retracts state the view never had
+        if (dn < 0 || (dn == 0 && !dsums.forall(numericallyZero)))
+          throw new IllegalStateException(
+            s"aggregate retraction for absent group $keyVals in $name (dn=$dn, ds=$dsums)")
+        if (dn > 0) {
+          val ins = stmt(dialect.insertSql(spec))
+          DeltaSql.bind(ins, (keyVals :+ dn) ++ dsums)
+          ins.executeUpdate()
+        }
+      } else {
+        val sel = stmt(s"SELECT cnt FROM $name WHERE $where")
+        DeltaSql.bind(sel, whereParams)
+        val rs = sel.executeQuery(); rs.next()
+        val cnt = rs.getLong(1); rs.close()
+        if (cnt < 0) throw new IllegalStateException(
+          s"group $keyVals in $name driven to cnt=$cnt: more retractions than rows")
+        if (cnt == 0) { // zero-elimination (reference coll.rs:89-101)
+          val del = stmt(s"DELETE FROM $name WHERE $where")
+          DeltaSql.bind(del, whereParams)
+          del.executeUpdate()
         }
       }
-    }
+    } finally prepared.values.foreach(_.close())
+  }
 
   /** `foreachBatch` adapter: the micro-batch DataFrame carries the key
     * columns, the value columns, and `mult`; the per-group reduction to
     * (dn, ds...) runs distributed — only churned groups are collected.
-    * `_source`/`_offset` columns feed the offsets map if present. */
+    * `_source`/`_offset` columns feed the offsets map if present. The
+    * micro-batch plan runs once ([[DeltaSql.onceOverBatch]]): offsets
+    * first, before the transaction, then the reduction from the cache. */
   def foreachBatchWriter(): (DataFrame, Long) => Unit = { (df, batchId) =>
-    val hasOffsets = df.columns.contains("_source")
-    val adj = adjustmentsOf(df.drop("_source", "_offset"))
-    val offsets: Map[String, Long] =
-      if (hasOffsets)
-        df.groupBy("_source").max("_offset").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      else Map.empty
-    applyAdjustmentsStreamed(offsets, batchId, adj)
+    DeltaSql.onceOverBatch(df) { offsets =>
+      applyAdjustmentsStreamed(offsets, batchId,
+        adjustmentsOf(df.drop("_source", "_offset")))
+    }
     ()
   }
 

@@ -1,6 +1,7 @@
 package graft.sink
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row}
 import graft.core.Deltas
 
@@ -11,6 +12,14 @@ final case class ColumnSpec(name: String, sqlType: String, index: Boolean = fals
 final case class TableSpec(name: String, version: Int, columns: Seq[ColumnSpec]) {
   def offsetsTable: String = s"${name}_offsets"
   def colNames: Seq[String] = columns.map(_.name)
+}
+
+/** A transactional sink that [[graft.streaming.DeltaPipeline]] can drive:
+  * a version-checked bootstrap (true ⇒ the caller must replay from
+  * offset 0) and a `foreachBatch` writer. */
+trait DeltaBatchSink {
+  def bootstrap(): Boolean
+  def foreachBatchWriter(): (DataFrame, Long) => Unit
 }
 
 /** Shared row-level SQL for the delta protocol (used by the single-table
@@ -47,60 +56,118 @@ private[sink] object DeltaSql {
     *
     * Driver-memory-bounded: `deltas` is an ITERATOR (fed from
     * `toLocalIterator` by the batch writers, so a full-history replay
-    * never materializes the view on the driver) and inserts go through
-    * JDBC statement batching flushed every `rowBatchSize` rows. Pending
-    * inserts are flushed before ANY delete executes, so unconsolidated
-    * input (insert and retraction of the same tuple in one batch)
-    * behaves exactly like the old statement-at-a-time form.
+    * never materializes the view on the driver), read in chunks of at
+    * most `rowBatchSize` pairwise-distinct tuples; a chunk closes early
+    * when a tuple repeats. Deltas on distinct tuples commute, so within a
+    * chunk every retraction runs first and every insert after. Closing
+    * the chunk on a repeat keeps unconsolidated input (an insert and a
+    * retraction of the same tuple in one batch) exactly as if it were
+    * applied one delta at a time. Tuples are told apart by value — the
+    * same equality the WHERE clause relies on: the bag protocol assumes
+    * the engine's SQL equality on these columns is value equality (no
+    * case-insensitive or blank-padding collation).
     *
-    * Retractions per dialect: with `deleteLimitSql` (MSSQL `DELETE TOP
-    * (?)`) exactly `-mult` rows are deleted; otherwise delete-all and
-    * reinsert `removed + mult` copies, the affected-row count standing
-    * in for a separate COUNT round trip (postgre.rs:245-247 — the
-    * reference reads the delete's row count the same way). */
+    * Both halves go out as JDBC statement batches. Deletes use one
+    * prepared statement per WHERE shape (the NULL pattern of
+    * [[nullSafeWhere]]) per transaction, and each row's deleted count is
+    * read from `executeBatch`'s update counts. Retractions per dialect:
+    * with `deleteLimitSql` (MSSQL `DELETE TOP (?)`) exactly `-mult` rows
+    * are deleted; otherwise delete-all and reinsert `removed + mult`
+    * copies, the affected-row count standing in for a separate COUNT
+    * round trip (postgre.rs:245-247 — the reference reads the delete's
+    * row count the same way). A retraction of more rows than present
+    * throws, and so does a driver that reports no per-row count
+    * (`SUCCESS_NO_INFO`/`EXECUTE_FAILED`); the caller's transaction then
+    * rolls back. The chunk's inserts, reinserted copies included, follow
+    * in batches of at most `rowBatchSize` rows. */
   def applyTableDeltas(c: Connection, spec: TableSpec,
                        deltas: Iterator[(Seq[Any], Long)],
                        dialect: SinkDialect = AnsiDialect,
                        rowBatchSize: Int = 1000): Unit = {
     require(rowBatchSize > 0, "rowBatchSize must be positive")
     val insRow = c.prepareStatement(dialect.insertSql(spec))
+    val deletes = mutable.Map.empty[String, PreparedStatement] // by WHERE shape
+    val chunk = mutable.LinkedHashMap.empty[Seq[Any], Long]
     var pending = 0
-    def flush(): Unit = if (pending > 0) { insRow.executeBatch(); pending = 0 }
+    def flushInserts(): Unit = if (pending > 0) { insRow.executeBatch(); pending = 0 }
     def queueInserts(values: Seq[Any], copies: Long): Unit =
       (0L until copies).foreach { _ =>
         bind(insRow, values)
         insRow.addBatch()
         pending += 1
-        if (pending >= rowBatchSize) flush()
+        if (pending >= rowBatchSize) flushInserts()
       }
-    deltas.foreach { case (values, mult) =>
-      if (mult > 0) queueInserts(values, mult)
-      else if (mult < 0) {
-        flush() // a delete must see every insert queued before it
-        val (where, params) = nullSafeWhere(spec, values)
-        dialect.deleteLimitSql(spec, where) match {
-          case Some(sql) => // bounded delete: remove exactly -mult rows
-            val del = c.prepareStatement(sql)
+    def overRetraction(values: Seq[Any], mult: Long, removed: Int) =
+      new IllegalStateException(
+        s"delta retracts more rows than present in ${spec.name}: $values mult=$mult have=$removed")
+    def applyChunk(): Unit = {
+      val queued = mutable.LinkedHashMap.empty[String, // by WHERE shape
+        mutable.ArrayBuffer[(Seq[Any], Long, Boolean)]]
+      chunk.foreach { case (values, mult) =>
+        if (mult < 0) {
+          val (where, params) = nullSafeWhere(spec, values)
+          val bounded = dialect.deleteLimitSql(spec, where)
+          val del = deletes.getOrElseUpdate(where,
+            c.prepareStatement(bounded.getOrElse(dialect.deleteAllSql(spec, where))))
+          if (bounded.isDefined) { // bounded delete: remove exactly -mult rows
             del.setLong(1, -mult)
             bind2(del, params, offset = 1)
-            val removed = del.executeUpdate(); del.close()
-            if (removed < -mult)
-              throw new IllegalStateException(
-                s"delta retracts more rows than present in ${spec.name}: $values mult=$mult have=$removed")
-          case None => // delete-all, reinsert the surviving copies
-            val del = c.prepareStatement(dialect.deleteAllSql(spec, where))
-            bind(del, params)
-            val removed = del.executeUpdate(); del.close()
-            val remain = removed + mult // delete-then-reinsert (sqlite.rs:238-259)
-            if (remain < 0)
-              throw new IllegalStateException(
-                s"delta retracts more rows than present in ${spec.name}: $values mult=$mult have=$removed")
-            queueInserts(values, remain)
+          } else bind(del, params)
+          del.addBatch()
+          queued.getOrElseUpdate(where, mutable.ArrayBuffer.empty) +=
+            ((values, mult, bounded.isDefined))
         }
       }
+      queued.foreach { case (where, rows) =>
+        val counts = deletes(where).executeBatch()
+        if (counts.length != rows.size || counts.exists(_ < 0))
+          throw new IllegalStateException(
+            s"the ${dialect.name} JDBC driver reported no per-row update count for a " +
+              s"batched DELETE on ${spec.name} (${counts.mkString("[", ",", "]")} for " +
+              s"${rows.size} rows); the delta sink needs every retraction's deleted-row count")
+        rows.zip(counts).foreach { case ((values, mult, bounded), removed) =>
+          if (bounded) { if (removed < -mult) throw overRetraction(values, mult, removed) }
+          else { // delete-all, reinsert the surviving copies (sqlite.rs:238-259)
+            val remain = removed + mult
+            if (remain < 0) throw overRetraction(values, mult, removed)
+            queueInserts(values, remain)
+          }
+        }
+      }
+      chunk.foreach { case (values, mult) => if (mult > 0) queueInserts(values, mult) }
+      flushInserts()
+      chunk.clear()
     }
-    flush()
-    insRow.close()
+    try {
+      deltas.foreach { case (values, mult) =>
+        if (mult != 0) {
+          if (chunk.size >= rowBatchSize || chunk.contains(values)) applyChunk()
+          chunk(values) = mult
+        }
+      }
+      applyChunk()
+    } finally {
+      insRow.close()
+      deletes.values.foreach(_.close())
+    }
+  }
+
+  /** Runs a `foreachBatch` writer's `body` with its micro-batch plan
+    * executed once. The batch is persisted; the per-source max `_offset`
+    * (empty without a `_source` column) is computed first, before any
+    * transaction opens, which fills the cache; `body` receives those
+    * offsets, and the rows it pulls inside its transaction read the
+    * cache. The batch is unpersisted however `body` ends. */
+  def onceOverBatch[A](df: DataFrame)(body: Map[String, Long] => A): A = {
+    df.persist()
+    try {
+      val offsets: Map[String, Long] =
+        if (df.columns.contains("_source"))
+          df.groupBy("_source").max("_offset").collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+        else Map.empty
+      body(offsets)
+    } finally df.unpersist()
   }
 
   private def bind2(ps: PreparedStatement, params: Seq[Any], offset: Int): Unit =
@@ -204,7 +271,7 @@ private[sink] object DeltaSql {
   */
 class JdbcDeltaSink(url: String, spec: TableSpec,
                     dialect: SinkDialect = AnsiDialect,
-                    rowBatchSize: Int = 1000) extends Serializable {
+                    rowBatchSize: Int = 1000) extends DeltaBatchSink with Serializable {
 
   private def withConn[A](f: Connection => A): A = DeltaSql.withConn(url)(f)
 
@@ -323,27 +390,26 @@ class JdbcDeltaSink(url: String, spec: TableSpec,
 
   /** `foreachBatch` adapter: consolidates the micro-batch's delta
     * DataFrame (must carry a `mult` column; plain DataFrames are lifted
-    * at mult 1) and applies it transactionally. Offset columns
-    * (`_source`, `_offset`) are split out if present.
+    * at mult 1) and applies it transactionally through
+    * [[applyDeltasStreamed]]. Offset columns (`_source`, `_offset`) are
+    * split out if present.
     *
-    * The consolidated deltas reach the DB via `toLocalIterator` — one
-    * partition resident on the driver at a time — so a full-history
+    * The micro-batch plan runs once ([[DeltaSql.onceOverBatch]]): the
+    * batch is persisted, its offsets are computed before the transaction
+    * opens, and the consolidation inside the transaction reads the
+    * cache. The consolidated deltas reach the DB via `toLocalIterator` —
+    * one partition resident on the driver at a time — so a full-history
     * replay into a fresh sink is bounded by partition size, not view
     * size (the txn must still span the whole batch; that single-
     * connection invariant is the reference's, runner.rs:113-122). */
   def foreachBatchWriter(): (DataFrame, Long) => Unit = { (df, batchId) =>
     import scala.jdk.CollectionConverters._
-    val hasOffsets = df.columns.contains("_source")
-    val dataDf = df.drop("_source", "_offset")
-    val consolidated = Deltas.consolidate(dataDf)
-    val rows = consolidated.toLocalIterator().asScala
-      .map(r => rowOf(r, spec.colNames))
-    val offsets: Map[String, Long] =
-      if (hasOffsets)
-        df.groupBy("_source").max("_offset").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      else Map.empty
-    applyDeltasStreamed(offsets, batchId, rows)
+    DeltaSql.onceOverBatch(df) { offsets =>
+      val rows = Deltas.consolidate(df.drop("_source", "_offset"))
+        .toLocalIterator().asScala
+        .map(r => rowOf(r, spec.colNames))
+      applyDeltasStreamed(offsets, batchId, rows)
+    }
     ()
   }
 }
@@ -365,7 +431,7 @@ class UnionDeltaSink(url: String, group: String, specs: Seq[TableSpec],
                      dialect: SinkDialect = AnsiDialect,
                      rowBatchSize: Int = 1000,
                      aggMembers: Seq[AggDeltaSink] = Nil)
-    extends Serializable {
+    extends DeltaBatchSink with Serializable {
 
   require(specs.map(_.name).toSet.intersect(aggMembers.map(_.name).toSet).isEmpty,
     "raw and aggregate members must not share table names")
@@ -420,34 +486,36 @@ class UnionDeltaSink(url: String, group: String, specs: Seq[TableSpec],
     * column set — members have different schemas, so untagged columns
     * irrelevant to a member must be null there — and the whole batch
     * commits in one transaction. Offset columns `_source`/`_offset`
-    * split out as in [[JdbcDeltaSink.foreachBatchWriter]]. */
+    * split out as in [[JdbcDeltaSink.foreachBatchWriter]].
+    *
+    * The micro-batch plan runs once for all members
+    * ([[DeltaSql.onceOverBatch]]): the batch is persisted, the shared
+    * offsets are computed before the transaction opens, and every
+    * member's filter-and-consolidate inside the transaction reads the
+    * cache. */
   def foreachBatchWriter(): (DataFrame, Long) => Unit = { (df, batchId) =>
     import org.apache.spark.sql.functions.col
     import scala.jdk.CollectionConverters._
-    val hasOffsets = df.columns.contains("_source")
-    val offsets: Map[String, Long] =
-      if (hasOffsets)
-        df.groupBy("_source").max("_offset").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      else Map.empty
-    // one lazy iterator per member, each drained inside the shared txn
-    // (toLocalIterator: one partition on the driver at a time)
-    DeltaSql.inBatchTxn(url, s"${group}_batches", offsetsTable,
-      batchId, offsets, dialect) { c =>
-      specs.zip(sinks).foreach { case (sp, sink) =>
-        val rows = Deltas.consolidate(
-            df.filter(col("_table") === sp.name)
-              .select(sp.colNames.map(col) :+ col(Deltas.MULT): _*))
-          .toLocalIterator().asScala
-          .map(r => sink.rowOf(r, sp.colNames))
-        DeltaSql.applyTableDeltas(c, sp, rows, dialect, rowBatchSize)
-      }
-      // aggregate members: same tag dispatch, their rows reduced to
-      // per-group adjustments (distributed) and applied in THIS txn
-      aggMembers.foreach { agg =>
-        agg.applyAdjustmentsInTxn(c, agg.adjustmentsOf(
-          df.filter(col("_table") === agg.name)
-            .select(agg.dataColNames.map(col) :+ col(Deltas.MULT): _*)))
+    DeltaSql.onceOverBatch(df) { offsets =>
+      // one lazy iterator per member, each drained inside the shared txn
+      // (toLocalIterator: one partition on the driver at a time)
+      DeltaSql.inBatchTxn(url, s"${group}_batches", offsetsTable,
+        batchId, offsets, dialect) { c =>
+        specs.zip(sinks).foreach { case (sp, sink) =>
+          val rows = Deltas.consolidate(
+              df.filter(col("_table") === sp.name)
+                .select(sp.colNames.map(col) :+ col(Deltas.MULT): _*))
+            .toLocalIterator().asScala
+            .map(r => sink.rowOf(r, sp.colNames))
+          DeltaSql.applyTableDeltas(c, sp, rows, dialect, rowBatchSize)
+        }
+        // aggregate members: same tag dispatch, their rows reduced to
+        // per-group adjustments (distributed) and applied in THIS txn
+        aggMembers.foreach { agg =>
+          agg.applyAdjustmentsInTxn(c, agg.adjustmentsOf(
+            df.filter(col("_table") === agg.name)
+              .select(agg.dataColNames.map(col) :+ col(Deltas.MULT): _*)))
+        }
       }
     }
     ()

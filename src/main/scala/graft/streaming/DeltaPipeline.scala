@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import graft.sink.JdbcDeltaSink
+import graft.sink.DeltaBatchSink
 
 /** The incremental profile's runtime wiring — the analog of the
   * reference's ingestion driver (runner.rs:151-358) on Structured
@@ -16,16 +16,21 @@ import graft.sink.JdbcDeltaSink
   *    `maxOffsetsPerTrigger` on the source;
   *  - `sync_channel(1)` backpressure (runner.rs:103-105) → micro-batch
   *    serialization (one batch in flight, inherent);
-  *  - exactly-once offsets+data transaction → [[JdbcDeltaSink]] inside
-  *    `foreachBatch` with batch-id idempotence.
+  *  - exactly-once offsets+data transaction → [[graft.sink.JdbcDeltaSink]]
+  *    inside `foreachBatch` with batch-id idempotence.
   */
 object DeltaPipeline {
 
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
 
   /** Wire a streaming delta DataFrame (carrying a `mult` column, or
-    * plain rows treated as inserts) into a transactional JDBC sink. */
-  def writer(deltas: DataFrame, sink: JdbcDeltaSink,
+    * plain rows treated as inserts) into a transactional sink: a raw-row
+    * [[graft.sink.JdbcDeltaSink]], an aggregate view
+    * ([[graft.sink.AggDeltaSink]], keys → (cnt, sums…), O(churned groups)
+    * per batch), or a union whose `_table` tag feeds several members in
+    * one transaction per batch ([[graft.sink.UnionDeltaSink]], reference
+    * K4). */
+  def writer(deltas: DataFrame, sink: DeltaBatchSink,
              checkpoint: String,
              trigger: Trigger = DefaultTrigger): DataStreamWriter[Row] = {
     sink.bootstrap()
@@ -36,37 +41,7 @@ object DeltaPipeline {
       .foreachBatch(sink.foreachBatchWriter())
   }
 
-  def start(deltas: DataFrame, sink: JdbcDeltaSink, checkpoint: String,
+  def start(deltas: DataFrame, sink: DeltaBatchSink, checkpoint: String,
             trigger: Trigger = DefaultTrigger): StreamingQuery =
     writer(deltas, sink, checkpoint, trigger).start()
-
-  /** Aggregate-view variant: the delta stream maintains a
-    * keys → (cnt, sums…) table via [[graft.sink.AggDeltaSink]] —
-    * per-batch work is O(churned groups), never a recompute. */
-  def startAgg(deltas: DataFrame, sink: graft.sink.AggDeltaSink,
-               checkpoint: String,
-               trigger: Trigger = DefaultTrigger): StreamingQuery = {
-    sink.bootstrap()
-    deltas.writeStream
-      .outputMode("update")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(sink.foreachBatchWriter())
-      .start()
-  }
-
-  /** Union variant (reference K4): one delta stream carrying a `_table`
-    * tag feeds several member tables; every micro-batch commits all
-    * members + the shared offsets in ONE transaction. */
-  def startUnion(deltas: DataFrame, sink: graft.sink.UnionDeltaSink,
-                 checkpoint: String,
-                 trigger: Trigger = DefaultTrigger): StreamingQuery = {
-    sink.bootstrap()
-    deltas.writeStream
-      .outputMode("update")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(sink.foreachBatchWriter())
-      .start()
-  }
 }

@@ -99,7 +99,7 @@ class AggViewSpec extends SparkTestBase {
     val mem = MemoryStream[(String, Long, Long)]
     val deltas = mem.toDF().toDF("machine", "total_pcs", "mult")
 
-    val q = DeltaPipeline.startAgg(deltas, sink,
+    val q = DeltaPipeline.start(deltas, sink,
       java.nio.file.Files.createTempDirectory("graft-aggckpt").toString,
       Trigger.ProcessingTime(0L))
     try {

@@ -104,4 +104,68 @@ class DialectSpec extends SparkTestBase {
     assert(sink.readRows().size === 450, "failed txn left no partial writes")
     assert(sink.getOffsets() === Map("s" -> 2L))
   }
+
+  private def bagOf(sink: JdbcDeltaSink): Map[Seq[Any], Int] =
+    sink.readRows().groupBy(identity).view.mapValues(_.size).toMap
+
+  test("chunked apply (rowBatchSize 3) equals applying one delta at a time") {
+    // tuples repeat inside a chunk (closing it early) and across chunks;
+    // every retraction is valid when the deltas apply one by one
+    val rnd = new scala.util.Random(2207L)
+    val tuples = Seq[Seq[Any]](Seq("p", 1L), Seq("q", 2L), Seq(null, 3L), Seq("r", null))
+    val have = scala.collection.mutable.Map.empty[Seq[Any], Long].withDefaultValue(0L)
+    val deltas = (1 to 80).map { _ =>
+      val t = tuples(rnd.nextInt(tuples.size))
+      val mult = if (have(t) > 0 && rnd.nextBoolean()) -(1L + rnd.nextInt(have(t).toInt))
+        else 1L + rnd.nextInt(3)
+      have(t) += mult
+      (t, mult)
+    }
+    val chunked = new JdbcDeltaSink("jdbc:derby:memory:dialect_chunk3;create=true",
+      spec, AnsiDialect, rowBatchSize = 3)
+    val single = new JdbcDeltaSink("jdbc:derby:memory:dialect_one;create=true",
+      spec, AnsiDialect, rowBatchSize = 3)
+    chunked.bootstrap(); single.bootstrap()
+    assert(chunked.applyDeltas(Map("s" -> 80L), 0L, deltas))
+    deltas.zipWithIndex.foreach { case (d, i) =>
+      assert(single.applyDeltas(Map("s" -> (i + 1L)), i.toLong, Seq(d)))
+    }
+    assert(bagOf(chunked) === bagOf(single))
+    assert(bagOf(chunked) === have.filter(_._2 > 0).map { case (t, n) => t -> n.toInt }.toMap)
+    assert(chunked.getOffsets() === single.getOffsets())
+  }
+
+  test("one chunk mixes NULL and non-NULL WHERE shapes") {
+    val sink = new JdbcDeltaSink("jdbc:derby:memory:dialect_shapes;create=true",
+      spec, AnsiDialect, rowBatchSize = 100)
+    sink.bootstrap()
+    assert(sink.applyDeltas(Map.empty, 0L, Seq(
+      (Seq[Any](null, 7L), 2L), (Seq[Any]("x", 7L), 1L),
+      (Seq[Any]("y", null), 1L), (Seq[Any](null, null), 1L))))
+    // four retractions over four WHERE shapes, plus inserts, in one chunk
+    assert(sink.applyDeltas(Map.empty, 1L, Seq(
+      (Seq[Any](null, 7L), -1L), (Seq[Any]("x", 7L), -1L), (Seq[Any]("q", null), 1L),
+      (Seq[Any]("y", null), -1L), (Seq[Any](null, null), -1L), (Seq[Any]("x", 8L), 1L))))
+    assert(bagOf(sink) === Map(Seq(null, 7L) -> 1, Seq("q", null) -> 1, Seq("x", 8L) -> 1))
+  }
+
+  test("an over-retraction mid-chunk rolls back the chunk's rows and the offsets") {
+    val sink = new JdbcDeltaSink("jdbc:derby:memory:dialect_midchunk;create=true",
+      spec, AnsiDialect, rowBatchSize = 10)
+    sink.bootstrap()
+    assert(sink.applyDeltas(Map("s" -> 1L), 0L,
+      Seq((Seq[Any]("a", 1L), 1L), (Seq[Any]("b", 2L), 2L))))
+    val before = bagOf(sink)
+    // one chunk: b's delete-all has run (awaiting its reinsert) when a's
+    // count shows the over-retraction
+    val ex = intercept[IllegalStateException] {
+      sink.applyDeltas(Map("s" -> 2L), 1L, Seq(
+        (Seq[Any]("c", 3L), 1L), (Seq[Any]("b", 2L), -1L),
+        (Seq[Any]("a", 1L), -3L), (Seq[Any]("d", 4L), 1L)))
+    }
+    assert(ex.getMessage.contains("retracts more rows than present"))
+    assert(bagOf(sink) === before, "no row of the failed batch survives")
+    assert(sink.getOffsets() === Map("s" -> 1L), "offsets roll back with the rows")
+    assert(sink.lastBatchId() === Some(0L))
+  }
 }

@@ -85,7 +85,7 @@ class PipelineSpec extends SparkTestBase {
     val tagged = dash.unionByName(log)
 
     val ckpt = java.nio.file.Files.createTempDirectory("graft-union-ckpt").toString
-    val q = DeltaPipeline.startUnion(tagged, union, ckpt,
+    val q = DeltaPipeline.start(tagged, union, ckpt,
       Trigger.ProcessingTime(0L))
     try {
       mem.addData(("Drill1", 100L), ("Drill2", 150L))

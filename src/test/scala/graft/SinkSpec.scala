@@ -1,6 +1,7 @@
 package graft
 
-import graft.sink.{ColumnSpec, TableSpec, JdbcDeltaSink, UnionDeltaSink}
+import org.apache.spark.sql.{DataFrame, Encoders}
+import graft.sink.{AggDeltaSink, ColumnSpec, TableSpec, JdbcDeltaSink, UnionDeltaSink}
 
 /** JDBC delta-sink round-trip against in-memory Derby, mirroring the
   * reference's SQLite sink test (sqlite.rs:272-321, FIXTURES.md §4):
@@ -88,6 +89,52 @@ class SinkSpec extends SparkTestBase {
     val rows = sink.readRows().map(r => (r(0), r(1)))
     assert(rows.sortBy(_.toString) === Seq(("aa", 12L), ("aa", 12L)),
       "bb nets to zero; aa consolidates to mult 2")
+  }
+
+  test("each foreachBatch writer runs its micro-batch plan once per call") {
+    import spark.implicits._
+    // counts every input row the writer's Spark jobs compute; a writer
+    // that re-runs the batch plan counts each row more than once
+    val seen = spark.sparkContext.longAccumulator("sink_input_rows")
+    def counted(df: DataFrame): DataFrame = {
+      seen.reset()
+      df.map { r => seen.add(1); r }(Encoders.row(df.schema))
+    }
+    val url = "jdbc:derby:memory:onceper;create=true"
+
+    val raw = newSink("onceper_raw")
+    raw.bootstrap()
+    raw.foreachBatchWriter()(counted(Seq(("aa", 1L, 1L, "s", 3L), ("bb", 2L, 1L, "s", 4L))
+      .toDF("a", "b", "mult", "_source", "_offset")), 0L)
+    assert(seen.value === 2L, "JdbcDeltaSink writer: one pass over 2 rows")
+    assert(raw.readRows().size === 2 && raw.getOffsets() === Map("s" -> 4L))
+
+    def rollup(name: String) = new AggDeltaSink(url, name, 1,
+      keys = Seq(ColumnSpec("m", "VARCHAR(32)")), sums = Seq(ColumnSpec("total", "BIGINT")))
+    val agg = rollup("once_rollup")
+    agg.bootstrap()
+    agg.foreachBatchWriter()(counted(Seq(("m1", 5L, 1L, "s", 1L), ("m1", 7L, 1L, "s", 2L),
+      ("m2", 1L, 1L, "s", 3L)).toDF("m", "total", "mult", "_source", "_offset")), 0L)
+    assert(seen.value === 3L, "AggDeltaSink writer: one pass over 3 rows")
+    assert(agg.readRows().size === 2 && agg.getOffsets() === Map("s" -> 3L))
+
+    // two raw members and one aggregate member share one pass
+    val t1 = TableSpec("once_a", 1, Seq(ColumnSpec("m", "VARCHAR(32)"), ColumnSpec("n", "BIGINT")))
+    val t2 = TableSpec("once_b", 1, Seq(ColumnSpec("m", "VARCHAR(32)"), ColumnSpec("d", "BIGINT")))
+    val union = new UnionDeltaSink(url, "onceg", Seq(t1, t2),
+      aggMembers = Seq(rollup("once_urollup")))
+    union.bootstrap()
+    val tagged = Seq[(String, String, Option[Long], Option[Long], Option[Long], Long, String, Long)](
+      ("once_a", "m1", Some(1L), None, None, 1L, "s", 5L),
+      ("once_b", "m1", None, Some(9L), None, 1L, "s", 6L),
+      ("once_urollup", "m1", None, None, Some(4L), 1L, "s", 7L),
+      ("once_urollup", "m2", None, None, Some(2L), 1L, "s", 8L))
+      .toDF("_table", "m", "n", "d", "total", "mult", "_source", "_offset")
+    union.foreachBatchWriter()(counted(tagged), 0L)
+    assert(seen.value === 4L, "UnionDeltaSink writer: one pass over 4 rows for 3 members")
+    assert(new JdbcDeltaSink(url, t1).readRows().size === 1)
+    assert(new JdbcDeltaSink(url, t2).readRows().size === 1)
+    assert(union.getOffsets() === Map("s" -> 8L))
   }
 
   test("Union: multi-table deltas + shared offsets commit in one transaction") {

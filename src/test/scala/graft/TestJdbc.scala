@@ -10,14 +10,14 @@ import java.sql.{Connection, DriverManager, PreparedStatement, Statement}
   *  2. a `jdbc:tsql:` SHIM DRIVER that executes the FOUR T-SQL statement
   *    shapes [[graft.sink.MssqlDialect]] emits — `IF NOT EXISTS
   *    (… sys.tables …) CREATE TABLE`, the sys.indexes twin,
-  *    `DELETE TOP (?)`, and the UPDLOCK-guarded if-exists offsets
-  *    upsert — with their T-SQL semantics on top of any underlying JDBC
-  *    engine, parameter order preserved. Statement TEXT is untouched in
-  *    the product path: the sink prepares the dialect's exact SQL; the
-  *    shim pattern-matches it at the JDBC boundary (a micro
-  *    "T-SQL-compatible engine", which the container lacks), so live
-  *    protocol runs prove the MSSQL statements' bindings and row-state
-  *    semantics rather than only their golden text.
+  *    batched `DELETE TOP (?)`, and the UPDLOCK-guarded
+  *    if-exists offsets upsert — with their T-SQL semantics on top of
+  *    any underlying JDBC engine, parameter order preserved. Statement
+  *    TEXT is untouched in the product path: the sink prepares the
+  *    dialect's exact SQL; the shim pattern-matches it at the JDBC
+  *    boundary (a micro "T-SQL-compatible engine", which the container
+  *    lacks), so live protocol runs prove the MSSQL statements' bindings
+  *    and row-state semantics rather than only their golden text.
   */
 object TestJdbc {
 
@@ -136,25 +136,34 @@ object TestJdbc {
     * rest bind into `w` (the sink's binder contract). Translated to a
     * rowid-subquery bounded delete; rows matching `w` are value-identical
     * copies, so which `cap` of them go is immaterial (T-SQL TOP without
-    * ORDER BY is equally unordered). */
+    * ORDER BY is equally unordered). The sink sends these deletes as a
+    * statement batch: `addBatch` queues the bound parameters, and
+    * `executeBatch` runs the queue in order and returns each entry's
+    * deleted-row count, as a T-SQL driver does. */
   private def delTopStatement(real: Connection, table: String, where: String): PreparedStatement = {
     val params = scala.collection.mutable.Map.empty[Int, AnyRef]
+    val batch = scala.collection.mutable.ArrayBuffer.empty[Map[Int, AnyRef]]
+    def run(bound: Map[Int, AnyRef]): Int = {
+      val cap = bound(1) match {
+        case l: java.lang.Long => l.longValue
+        case i: java.lang.Integer => i.longValue
+      }
+      val ps = real.prepareStatement(s"DELETE FROM $table WHERE rowid IN " +
+        s"(SELECT rowid FROM $table WHERE $where LIMIT $cap)")
+      try {
+        (1 to where.count(_ == '?'))
+          .foreach(i => ps.setObject(i, bound(i + 1)))
+        ps.executeUpdate()
+      } finally ps.close()
+    }
     proxy(classOf[PreparedStatement]) { (m, args) =>
       m.getName match {
         case s if s.startsWith("set") && args != null && args.length == 2 =>
           params(args(0).asInstanceOf[java.lang.Integer].intValue) = args(1); null
-        case "executeUpdate" =>
-          val cap = params(1) match {
-            case l: java.lang.Long => l.longValue
-            case i: java.lang.Integer => i.longValue
-          }
-          val ps = real.prepareStatement(s"DELETE FROM $table WHERE rowid IN " +
-            s"(SELECT rowid FROM $table WHERE $where LIMIT $cap)")
-          try {
-            (1 to where.count(_ == '?'))
-              .foreach(i => ps.setObject(i, params(i + 1)))
-            Int.box(ps.executeUpdate())
-          } finally ps.close()
+        case "addBatch" if args == null => batch += params.toMap; null
+        case "executeBatch" =>
+          try batch.map(run).toArray finally batch.clear()
+        case "clearBatch" => batch.clear(); null
         case "close" => null
         case other => throw new UnsupportedOperationException(s"tsql-shim DELETE TOP: $other")
       }
