@@ -384,9 +384,13 @@ object Ann {
     * across engines; ties break by id. An item on only one list keeps
     * that list's term (the other contributes 0).
     *
-    * Scale: one full-outer join of two (queries × k)-sized rank tables
-    * + one windowed top-k — shortlist-sized everything; the corpus was
-    * only touched by the upstream rankers.
+    * Scale: a union of two (queries × k)-sized rank tables, one hash
+    * aggregate per (q_id, n_id) and one windowed top-k — shortlist-sized
+    * everything; the corpus was only touched by the upstream rankers.
+    *
+    * Precondition: each ranking has unique (q_id, n_id) rows, as the
+    * `row_number` rankers guarantee. A pair repeated within one list
+    * would have its terms summed into the fused score.
     *
     * @param a,b rankings with columns (q_id, n_id, rank)
     * @return (q_id, n_id, rrf, rank) — top `topK` fused per query

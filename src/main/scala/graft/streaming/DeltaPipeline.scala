@@ -18,6 +18,10 @@ import graft.sink.DeltaBatchSink
   *    serialization (one batch in flight, inherent);
   *  - exactly-once offsets+data transaction → [[graft.sink.JdbcDeltaSink]]
   *    inside `foreachBatch` with batch-id idempotence.
+  *
+  * Spark's exactly-once WAL (offsets and commits logs) and the state-store
+  * files are written each batch through the session's checkpoint file
+  * manager, [[LocalCheckpointFileManager]] on `file:` checkpoints.
   */
 object DeltaPipeline {
 
