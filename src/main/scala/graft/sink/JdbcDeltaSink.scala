@@ -1,8 +1,10 @@
 package graft.sink
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.{Connection, DriverManager, PreparedStatement, ResultSet}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import graft.core.Deltas
 
 /** Declarative output-table schema (reference `DbRecord`/`DbColumn`,
@@ -59,24 +61,34 @@ private[sink] object DeltaSql {
     * never materializes the view on the driver), read in chunks of at
     * most `rowBatchSize` pairwise-distinct tuples; a chunk closes early
     * when a tuple repeats. Deltas on distinct tuples commute, so within a
-    * chunk every retraction runs first and every insert after. Closing
-    * the chunk on a repeat keeps unconsolidated input (an insert and a
-    * retraction of the same tuple in one batch) exactly as if it were
-    * applied one delta at a time. Tuples are told apart by value — the
-    * same equality the WHERE clause relies on: the bag protocol assumes
-    * the engine's SQL equality on these columns is value equality (no
-    * case-insensitive or blank-padding collation).
+    * chunk the updates run first, then the retractions, then the inserts.
+    * Closing the chunk on a repeat keeps unconsolidated input (an insert
+    * and a retraction of the same tuple in one batch) exactly as if it
+    * were applied one delta at a time. Tuples are told apart by value —
+    * the same equality the WHERE clause relies on: the bag protocol
+    * assumes the engine's SQL equality on these columns is value equality
+    * (no case-insensitive or blank-padding collation).
     *
-    * Both halves go out as JDBC statement batches. Deletes use one
-    * prepared statement per WHERE shape (the NULL pattern of
-    * [[nullSafeWhere]]) per transaction, and each row's deleted count is
-    * read from `executeBatch`'s update counts. Retractions per dialect:
-    * with `deleteLimitSql` (MSSQL `DELETE TOP (?)`) exactly `-mult` rows
-    * are deleted; otherwise delete-all and reinsert `removed + mult`
-    * copies, the affected-row count standing in for a separate COUNT
-    * round trip (postgre.rs:245-247 — the reference reads the delete's
-    * row count the same way). A retraction of more rows than present
-    * throws, and so does a driver that reports no per-row count
+    * Paired changes: when the spec has index columns (and others), a
+    * retraction `(A, −1)` and an insertion `(B, +1)` of the same chunk
+    * whose index-column values are equal are matched in arrival order and
+    * applied as one `updateSql` that sets B's non-index columns on a row
+    * matching A. Its count `k` is exact under bag semantics: 0 is an
+    * over-retraction, 1 is done, and `k > 1` (a dialect without a bounded
+    * update changed every copy of A) is repaired by applying `(B, −(k−1))`
+    * as a retraction and `(A, k−1)` as inserts. Every other delta takes
+    * the paths below.
+    *
+    * Updates and deletes go out as JDBC statement batches, one prepared
+    * statement per statement text (the NULL pattern of [[nullSafeWhere]])
+    * per transaction, and each row's affected count is read from
+    * `executeBatch`'s update counts. Retractions per dialect: with
+    * `deleteLimitSql` (MSSQL `DELETE TOP (?)`) exactly `-mult` rows are
+    * deleted; otherwise delete-all and reinsert `removed + mult` copies,
+    * the affected-row count standing in for a separate COUNT round trip
+    * (postgre.rs:245-247 — the reference reads the delete's row count the
+    * same way). A retraction of more rows than present throws, and so
+    * does a driver that reports no per-row count
     * (`SUCCESS_NO_INFO`/`EXECUTE_FAILED`); the caller's transaction then
     * rolls back. The chunk's inserts, reinserted copies included, follow
     * in batches of at most `rowBatchSize` rows. */
@@ -85,8 +97,9 @@ private[sink] object DeltaSql {
                        dialect: SinkDialect = AnsiDialect,
                        rowBatchSize: Int = 1000): Unit = {
     require(rowBatchSize > 0, "rowBatchSize must be positive")
+    val (indexAt, setAt) = spec.columns.indices.partition(i => spec.columns(i).index)
     val insRow = c.prepareStatement(dialect.insertSql(spec))
-    val deletes = mutable.Map.empty[String, PreparedStatement] // by WHERE shape
+    val prepared = mutable.Map.empty[String, PreparedStatement] // UPDATE/DELETE by text
     val chunk = mutable.LinkedHashMap.empty[Seq[Any], Long]
     var pending = 0
     def flushInserts(): Unit = if (pending > 0) { insRow.executeBatch(); pending = 0 }
@@ -100,41 +113,75 @@ private[sink] object DeltaSql {
     def overRetraction(values: Seq[Any], mult: Long, removed: Int) =
       new IllegalStateException(
         s"delta retracts more rows than present in ${spec.name}: $values mult=$mult have=$removed")
-    def applyChunk(): Unit = {
-      val queued = mutable.LinkedHashMap.empty[String, // by WHERE shape
-        mutable.ArrayBuffer[(Seq[Any], Long, Boolean)]]
-      chunk.foreach { case (values, mult) =>
-        if (mult < 0) {
-          val (where, params) = nullSafeWhere(spec, values)
-          val bounded = dialect.deleteLimitSql(spec, where)
-          val del = deletes.getOrElseUpdate(where,
-            c.prepareStatement(bounded.getOrElse(dialect.deleteAllSql(spec, where))))
-          if (bounded.isDefined) { // bounded delete: remove exactly -mult rows
-            del.setLong(1, -mult)
-            bind2(del, params, offset = 1)
-          } else bind(del, params)
-          del.addBatch()
-          queued.getOrElseUpdate(where, mutable.ArrayBuffer.empty) +=
-            ((values, mult, bounded.isDefined))
-        }
+    /** Queues each item on the prepared statement for its text, runs every
+      * statement's batch, and returns each item with its affected-row count. */
+    def counted[T](verb: String, items: Iterable[T])(stmt: T => (String, Seq[Any])): Seq[(T, Int)] = {
+      val queued = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[T]]
+      items.foreach { t =>
+        val (sql, params) = stmt(t)
+        val ps = prepared.getOrElseUpdate(sql, c.prepareStatement(sql))
+        bind(ps, params)
+        ps.addBatch()
+        queued.getOrElseUpdate(sql, mutable.ArrayBuffer.empty) += t
       }
-      queued.foreach { case (where, rows) =>
-        val counts = deletes(where).executeBatch()
-        if (counts.length != rows.size || counts.exists(_ < 0))
+      queued.toSeq.flatMap { case (sql, ts) =>
+        val counts = prepared(sql).executeBatch()
+        if (counts.length != ts.size || counts.exists(_ < 0))
           throw new IllegalStateException(
             s"the ${dialect.name} JDBC driver reported no per-row update count for a " +
-              s"batched DELETE on ${spec.name} (${counts.mkString("[", ",", "]")} for " +
-              s"${rows.size} rows); the delta sink needs every retraction's deleted-row count")
-        rows.zip(counts).foreach { case ((values, mult, bounded), removed) =>
-          if (bounded) { if (removed < -mult) throw overRetraction(values, mult, removed) }
-          else { // delete-all, reinsert the surviving copies (sqlite.rs:238-259)
-            val remain = removed + mult
-            if (remain < 0) throw overRetraction(values, mult, removed)
-            queueInserts(values, remain)
+              s"batched $verb on ${spec.name} (${counts.mkString("[", ",", "]")} for " +
+              s"${ts.size} rows); the delta sink needs every row's affected-row count")
+        ts.zip(counts)
+      }
+    }
+    /** The chunk's (A, B) pairs — a −1 and a +1 with equal index-column
+      * values, matched in arrival order — and its other deltas in order. */
+    def pairUp(): (Seq[(Seq[Any], Seq[Any])], Seq[(Seq[Any], Long)]) =
+      if (!pairable(spec)) (Nil, chunk.toSeq)
+      else {
+        val open = mutable.Map.empty[(Seq[Any], Long), mutable.Queue[Seq[Any]]]
+        val pairs = mutable.ArrayBuffer.empty[(Seq[Any], Seq[Any])]
+        chunk.foreach { case (values, mult) =>
+          if (mult == 1L || mult == -1L) {
+            val key = indexAt.map(values)
+            open.get((key, -mult)).filter(_.nonEmpty) match {
+              case Some(waiting) =>
+                val other = waiting.dequeue()
+                pairs += (if (mult < 0) (values, other) else (other, values))
+              case None => open.getOrElseUpdate((key, mult), mutable.Queue.empty) += values
+            }
           }
         }
+        val paired = pairs.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+        (pairs.toSeq, chunk.toSeq.filterNot { case (values, _) => paired(values) })
       }
-      chunk.foreach { case (values, mult) => if (mult > 0) queueInserts(values, mult) }
+    def applyChunk(): Unit = {
+      val (pairs, single) = pairUp()
+      val retractions = single.filter(_._2 < 0).toBuffer
+      val inserts = single.filter(_._2 > 0).toBuffer
+      counted("UPDATE", pairs) { case (a, b) =>
+        val (where, params) = nullSafeWhere(spec, a)
+        (dialect.updateSql(spec, where), setAt.map(b) ++ params)
+      }.foreach { case ((a, b), k) =>
+        if (k == 0) throw overRetraction(a, -1L, 0)
+        if (k > 1) { // k copies of A became B: one was asked for
+          retractions += ((b, 1L - k))
+          inserts += ((a, k - 1L))
+        }
+      }
+      counted("DELETE", retractions) { case (values, mult) =>
+        val (where, params) = nullSafeWhere(spec, values)
+        dialect.deleteLimitSql(spec, where) match {
+          case Some(bounded) => (bounded, -mult +: params) // removes exactly -mult rows
+          case None => (dialect.deleteAllSql(spec, where), params)
+        }
+      }.foreach { case ((values, mult), removed) =>
+        if (removed < -mult) throw overRetraction(values, mult, removed)
+        // delete-all: reinsert the surviving copies (sqlite.rs:238-259);
+        // a bounded delete removed exactly -mult, leaving none to reinsert
+        queueInserts(values, removed + mult)
+      }
+      inserts.foreach { case (values, mult) => queueInserts(values, mult) }
       flushInserts()
       chunk.clear()
     }
@@ -148,7 +195,56 @@ private[sink] object DeltaSql {
       applyChunk()
     } finally {
       insRow.close()
-      deletes.values.foreach(_.close())
+      prepared.values.foreach(_.close())
+    }
+  }
+
+  /** A batch's consolidated deltas ([[Deltas.consolidate]]) in `spec`'s
+    * column order, pulled one partition at a time (`toLocalIterator`).
+    * When the batch carries multiplicities and the spec has index columns
+    * (and others), the consolidation is co-located for
+    * [[applyTableDeltas]]'s pairing: the batch is hash-partitioned on the
+    * index columns, which already satisfies the consolidation's grouping
+    * (one exchange in all), and each partition is sorted by them, so a
+    * key's retraction and re-insertion arrive next to each other. */
+  def consolidatedRows(batch: DataFrame, spec: TableSpec): Iterator[(Seq[Any], Long)] = {
+    val idx = spec.columns.filter(_.index).map(c => col(c.name))
+    val deltas =
+      if (!pairable(spec) || !batch.columns.contains(Deltas.MULT)) Deltas.consolidate(batch)
+      else Deltas.consolidate(batch.repartition(idx: _*)).sortWithinPartitions(idx: _*)
+    deltas.toLocalIterator().asScala.map(rowOf(_, spec.colNames))
+  }
+
+  /** A spec whose rows can change in place: it has index columns to match
+    * a pair on and other columns for the UPDATE to set. */
+  private def pairable(spec: TableSpec): Boolean =
+    spec.columns.exists(_.index) && spec.columns.exists(!_.index)
+
+  private def rowOf(r: Row, colNames: Seq[String]): (Seq[Any], Long) = {
+    val values = colNames.map(n => r.getAs[Any](n) match {
+      case null => null
+      case v => v.asInstanceOf[AnyRef]
+    })
+    (values, r.getAs[Long](Deltas.MULT))
+  }
+
+  /** Runs `sql` and reads its result; the statement and the result set
+    * are closed however `read` ends. */
+  def query[A](c: Connection, sql: String)(read: ResultSet => A): A = {
+    val st = c.createStatement()
+    try {
+      val rs = st.executeQuery(sql)
+      try read(rs) finally rs.close()
+    } finally st.close()
+  }
+
+  /** The restart point kept in an offsets table (reference K6
+    * `get_offsets`, db/mod.rs:126). */
+  def readOffsets(url: String, table: String): Map[String, Long] = withConn(url) { c =>
+    query(c, s"SELECT source, offset_ FROM $table") { rs =>
+      val b = Map.newBuilder[String, Long]
+      while (rs.next()) b += rs.getString(1) -> rs.getLong(2)
+      b.result()
     }
   }
 
@@ -169,9 +265,6 @@ private[sink] object DeltaSql {
       body(offsets)
     } finally df.unpersist()
   }
-
-  private def bind2(ps: PreparedStatement, params: Seq[Any], offset: Int): Unit =
-    params.zipWithIndex.foreach { case (v, i) => ps.setObject(i + 1 + offset, v) }
 
   /** Connection scope with rollback-before-close: a failure inside `f`
     * must surface, not be masked by Derby's close-with-active-txn error. */
@@ -256,7 +349,10 @@ private[sink] object DeltaSql {
   * (c) the delta application with bag semantics — mult > 0 inserts that
   * many copies; mult < 0 deletes all matching rows and re-inserts
   * `rows + mult` copies (the reference's SQLite strategy, sqlite.rs:
-  * 238-259), with NULL-safe value matching (sqlite.rs:172-174).
+  * 238-259), with NULL-safe value matching (sqlite.rs:172-174); a
+  * retraction and a re-insertion of the same index-column values in one
+  * chunk apply as one UPDATE of the row instead (same table state, half
+  * the row operations — see [[DeltaSql.applyTableDeltas]]).
   *
   * Schema evolution is the reference's version-stamped drop-and-rebuild
   * (db/mod.rs:46-53, 282-315): `schema_versions` mismatch ⇒ drop table +
@@ -332,18 +428,12 @@ class JdbcDeltaSink(url: String, spec: TableSpec,
   }
 
   /** Restart point (reference K6 `get_offsets`, db/mod.rs:126). */
-  def getOffsets(): Map[String, Long] = withConn { c =>
-    val rs = c.createStatement().executeQuery(
-      s"SELECT source, offset_ FROM ${spec.offsetsTable}")
-    val b = Map.newBuilder[String, Long]
-    while (rs.next()) b += rs.getString(1) -> rs.getLong(2)
-    b.result()
-  }
+  def getOffsets(): Map[String, Long] = DeltaSql.readOffsets(url, spec.offsetsTable)
 
   def lastBatchId(): Option[Long] = withConn { c =>
-    val rs = c.createStatement().executeQuery(
-      s"SELECT MAX(batch_id) FROM ${spec.name}_batches")
-    if (rs.next() && rs.getObject(1) != null) Some(rs.getLong(1)) else None
+    DeltaSql.query(c, s"SELECT MAX(batch_id) FROM ${spec.name}_batches") { rs =>
+      if (rs.next() && rs.getObject(1) != null) Some(rs.getLong(1)) else None
+    }
   }
 
   /** The materialized view as a Spark SOURCE: `spark.read.jdbc` over the
@@ -356,11 +446,11 @@ class JdbcDeltaSink(url: String, spec: TableSpec,
 
   /** Current table contents (bag, for tests/inspection). */
   def readRows(): Seq[Seq[Any]] = withConn { c =>
-    val rs = c.createStatement().executeQuery(
-      s"SELECT ${spec.colNames.mkString(", ")} FROM ${spec.name}")
-    val b = Seq.newBuilder[Seq[Any]]
-    while (rs.next()) b += spec.colNames.indices.map(i => rs.getObject(i + 1))
-    b.result()
+    DeltaSql.query(c, s"SELECT ${spec.colNames.mkString(", ")} FROM ${spec.name}") { rs =>
+      val b = Seq.newBuilder[Seq[Any]]
+      while (rs.next()) b += spec.colNames.indices.map(i => rs.getObject(i + 1))
+      b.result()
+    }
   }
 
   /** Apply one consolidated delta batch + offsets in ONE transaction
@@ -380,14 +470,6 @@ class JdbcDeltaSink(url: String, spec: TableSpec,
       batchId, offsets, dialect)(c =>
       DeltaSql.applyTableDeltas(c, spec, deltas, dialect, rowBatchSize))
 
-  private[sink] def rowOf(r: Row, colNames: Seq[String]): (Seq[Any], Long) = {
-    val values = colNames.map(n => r.getAs[Any](n) match {
-      case null => null
-      case v => v.asInstanceOf[AnyRef]
-    })
-    (values, r.getAs[Long](Deltas.MULT))
-  }
-
   /** `foreachBatch` adapter: consolidates the micro-batch's delta
     * DataFrame (must carry a `mult` column; plain DataFrames are lifted
     * at mult 1) and applies it transactionally through
@@ -401,14 +483,14 @@ class JdbcDeltaSink(url: String, spec: TableSpec,
     * one partition resident on the driver at a time — so a full-history
     * replay into a fresh sink is bounded by partition size, not view
     * size (the txn must still span the whole batch; that single-
-    * connection invariant is the reference's, runner.rs:113-122). */
+    * connection invariant is the reference's, runner.rs:113-122). A
+    * batch with a `mult` column is consolidated co-located on the index
+    * columns ([[DeltaSql.consolidatedRows]]), so a key's retraction and
+    * re-insertion reach the DB as one UPDATE. */
   def foreachBatchWriter(): (DataFrame, Long) => Unit = { (df, batchId) =>
-    import scala.jdk.CollectionConverters._
     DeltaSql.onceOverBatch(df) { offsets =>
-      val rows = Deltas.consolidate(df.drop("_source", "_offset"))
-        .toLocalIterator().asScala
-        .map(r => rowOf(r, spec.colNames))
-      applyDeltasStreamed(offsets, batchId, rows)
+      applyDeltasStreamed(offsets, batchId,
+        DeltaSql.consolidatedRows(df.drop("_source", "_offset"), spec))
     }
     ()
   }
@@ -471,13 +553,7 @@ class UnionDeltaSink(url: String, group: String, specs: Seq[TableSpec],
     recreated
   }
 
-  def getOffsets(): Map[String, Long] = withConn { c =>
-    val rs = c.createStatement().executeQuery(
-      s"SELECT source, offset_ FROM $offsetsTable")
-    val b = Map.newBuilder[String, Long]
-    while (rs.next()) b += rs.getString(1) -> rs.getLong(2)
-    b.result()
-  }
+  def getOffsets(): Map[String, Long] = DeltaSql.readOffsets(url, offsetsTable)
 
   /** `foreachBatch` adapter for the union: the micro-batch DataFrame
     * carries a `_table` tag column naming each delta row's target member
@@ -492,21 +568,17 @@ class UnionDeltaSink(url: String, group: String, specs: Seq[TableSpec],
     * ([[DeltaSql.onceOverBatch]]): the batch is persisted, the shared
     * offsets are computed before the transaction opens, and every
     * member's filter-and-consolidate inside the transaction reads the
-    * cache. */
+    * cache. Raw members consolidate as the single-table writer does, so
+    * their retract/re-insert pairs apply as UPDATEs too. */
   def foreachBatchWriter(): (DataFrame, Long) => Unit = { (df, batchId) =>
-    import org.apache.spark.sql.functions.col
-    import scala.jdk.CollectionConverters._
     DeltaSql.onceOverBatch(df) { offsets =>
       // one lazy iterator per member, each drained inside the shared txn
       // (toLocalIterator: one partition on the driver at a time)
       DeltaSql.inBatchTxn(url, s"${group}_batches", offsetsTable,
         batchId, offsets, dialect) { c =>
-        specs.zip(sinks).foreach { case (sp, sink) =>
-          val rows = Deltas.consolidate(
-              df.filter(col("_table") === sp.name)
-                .select(sp.colNames.map(col) :+ col(Deltas.MULT): _*))
-            .toLocalIterator().asScala
-            .map(r => sink.rowOf(r, sp.colNames))
+        specs.foreach { sp =>
+          val rows = DeltaSql.consolidatedRows(df.filter(col("_table") === sp.name)
+            .select(sp.colNames.map(col) :+ col(Deltas.MULT): _*), sp)
           DeltaSql.applyTableDeltas(c, sp, rows, dialect, rowBatchSize)
         }
         // aggregate members: same tag dispatch, their rows reduced to

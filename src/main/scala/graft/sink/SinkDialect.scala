@@ -6,18 +6,25 @@ package graft.sink
   * without a live server (the reference's own Postgres/MSSQL suites are
   * env-gated for the same reason, postgre.rs:303-307).
   *
+  * Row changes take four statement shapes: insert, delete (all matching
+  * rows, or a bounded count where the engine has one), an in-place
+  * UPDATE that turns one retracted row into an inserted row with the
+  * same index-column values, and the offsets upsert.
+  *
   * Three dialects, mirroring the reference's three drivers:
   *  - [[AnsiDialect]] — the portable statements the Derby-backed live
   *    tests exercise (the reference's SQLite driver shape,
   *    sqlite.rs:238-259): delete-all + reinsert `removed + mult` copies,
-  *    two-step offsets upsert.
+  *    a plain UPDATE (every matching copy changes; the sink repairs the
+  *    surplus), two-step offsets upsert.
   *  - [[PostgresDialect]] — postgre.rs:150-162, 233-255: `create table/
   *    index if not exists`, plain delete with the affected-row count
-  *    feeding the reinsert, single-statement `ON CONFLICT` offsets
-  *    upsert (db/mod.rs:384-394).
+  *    feeding the reinsert, plain UPDATE, single-statement `ON CONFLICT`
+  *    offsets upsert (db/mod.rs:384-394).
   *  - [[MssqlDialect]] — mssql.rs:199-226, 142, 288-299: `if not exists
   *    (select * from sys.tables …)` DDL, parameterized `DELETE TOP (?)`
-  *    so a retraction deletes exactly `-mult` rows (no reinsert), the
+  *    so a retraction deletes exactly `-mult` rows (no reinsert),
+  *    `UPDATE TOP (1)` so an update changes at most one copy, the
   *    `updlock`-guarded if-exists upsert, and a SERIALIZABLE session pin.
   */
 trait SinkDialect extends Serializable {
@@ -35,6 +42,18 @@ trait SinkDialect extends Serializable {
     * `-mult` rows directly; without it the sink deletes all matching
     * rows and reinserts `removed + mult` copies. */
   def deleteLimitSql(spec: TableSpec, where: String): Option[String] = None
+
+  /** In-place rewrite of a row matching `where`: the non-index columns
+    * are set (their values bind first, in spec order; `where`'s follow).
+    * The sink only pairs a retraction with an insertion whose index-column
+    * values are equal, so the index columns keep their values. Without a
+    * row bound every matching copy changes and the sink repairs the
+    * surplus from the update count. */
+  def updateSql(spec: TableSpec, where: String): String =
+    s"UPDATE ${spec.name} SET ${setClause(spec)} WHERE $where"
+
+  protected def setClause(spec: TableSpec): String =
+    spec.columns.filterNot(_.index).map(c => s"${c.name} = ?").mkString(", ")
 
   /** Single-statement offsets upsert, if the engine has one; `None`
     * falls back to the update-then-insert-if-absent pair. */
@@ -107,6 +126,11 @@ case object MssqlDialect extends SinkDialect {
     * bind parameter, so one prepared statement serves every retraction. */
   override def deleteLimitSql(spec: TableSpec, where: String): Option[String] =
     Some(s"DELETE TOP (?) FROM ${spec.name} WHERE $where")
+
+  /** Bounded like the delete: one retracted copy becomes the inserted
+    * row, so the update count is 0 or 1. */
+  override def updateSql(spec: TableSpec, where: String): String =
+    s"UPDATE TOP (1) ${spec.name} SET ${setClause(spec)} WHERE $where"
 
   /** mssql.rs:288-299 — correct only while this sink is the table's sole
     * writer (the updlock guard; the reference carries the same warning). */

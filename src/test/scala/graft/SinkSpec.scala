@@ -208,4 +208,43 @@ class SinkSpec extends SparkTestBase {
     assert(u2.applyDeltas(Map("s" -> 7L), 0L, Map("uv_a" -> Seq((Seq("x"), 1L)))))
     assert(new JdbcDeltaSink(url, a2).readRows().size === 1)
   }
+
+  test("writer: each key's retraction and re-insertion go out as one UPDATE") {
+    import spark.implicits._
+    val n = 20
+    def counted(db: String, indexed: Boolean) = {
+      val sink = new JdbcDeltaSink(
+        TestJdbc.Counting.url(s"jdbc:derby:memory:$db;create=true"),
+        TableSpec("test_record", 1, Seq(
+          ColumnSpec("a", "VARCHAR(64)", index = indexed), ColumnSpec("b", "BIGINT"))),
+        rowBatchSize = 4)
+      sink.bootstrap()
+      sink.applyDeltas(Map.empty, 0L, (1 to n).map(i => (Seq(s"k$i", i.toLong), 1L)))
+      TestJdbc.Counting.reset()
+      sink
+    }
+    def sent(verb: String) = TestJdbc.Counting.sent(verb, "test_record")
+    // every retraction before every re-insertion, spread over partitions:
+    // only the writer's co-location brings a key's pair into one chunk
+    val churn = ((1 to n).map(i => (s"k$i", i.toLong, -1L)) ++
+      (1 to n).map(i => (s"k$i", i + 100L, 1L))).toDF("a", "b", "mult").repartition(3)
+    val moved = (1 to n).map(i => Seq(s"k$i", i + 100L)).sortBy(_.toString)
+
+    val sink = counted("pairwriter", indexed = true)
+    sink.foreachBatchWriter()(churn, 1L)
+    assert((sent("UPDATE"), sent("DELETE"), sent("INSERT")) === ((n.toLong, 0L, 0L)))
+    assert(sink.readRows().sortBy(_.toString) === moved)
+
+    // a spec without index columns keeps delete + insert
+    val plain = counted("pairwriter_plain", indexed = false)
+    plain.foreachBatchWriter()(churn, 1L)
+    assert((sent("UPDATE"), sent("DELETE"), sent("INSERT")) === ((0L, n.toLong, n.toLong)))
+    assert(plain.readRows().sortBy(_.toString) === moved)
+
+    // an insert-only batch (no mult column) keeps its inserts
+    val fresh = counted("pairwriter_ins", indexed = true)
+    fresh.foreachBatchWriter()((1 to n).map(i => (s"z$i", i.toLong)).toDF("a", "b"), 1L)
+    assert((sent("UPDATE"), sent("DELETE"), sent("INSERT")) === ((0L, 0L, n.toLong)))
+    assert(fresh.readRows().size === 2 * n)
+  }
 }

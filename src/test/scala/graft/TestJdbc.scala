@@ -7,17 +7,19 @@ import java.sql.{Connection, DriverManager, PreparedStatement, Statement}
   *
   *  1. the DuckDB driver loaded reflectively from the local build cache
   *    (no library dependency; absent jar ⇒ suites cancel as env-blocked);
-  *  2. a `jdbc:tsql:` SHIM DRIVER that executes the FOUR T-SQL statement
+  *  2. a `jdbc:tsql:` SHIM DRIVER that executes the FIVE T-SQL statement
   *    shapes [[graft.sink.MssqlDialect]] emits — `IF NOT EXISTS
   *    (… sys.tables …) CREATE TABLE`, the sys.indexes twin,
-  *    batched `DELETE TOP (?)`, and the UPDLOCK-guarded
+  *    batched `DELETE TOP (?)`, batched `UPDATE TOP (1)`, and the UPDLOCK-guarded
   *    if-exists offsets upsert — with their T-SQL semantics on top of
   *    any underlying JDBC engine, parameter order preserved. Statement
   *    TEXT is untouched in the product path: the sink prepares the
   *    dialect's exact SQL; the shim pattern-matches it at the JDBC
   *    boundary (a micro "T-SQL-compatible engine", which the container
   *    lacks), so live protocol runs prove the MSSQL statements' bindings
-  *    and row-state semantics rather than only their golden text.
+  *    and row-state semantics rather than only their golden text;
+  *  3. a `jdbc:count:` wrapper driver ([[Counting]]) that counts the row
+  *    operations the sink sends, per statement verb and table.
   */
 object TestJdbc {
 
@@ -64,6 +66,7 @@ object TestJdbc {
   private val DdlIndex =
     """(?s)IF NOT EXISTS \(SELECT \* FROM sys\.indexes WHERE name = '([^']+)'\) (CREATE INDEX .+)""".r
   private val DelTop = """DELETE TOP \(\?\) FROM (\S+) WHERE (.+)""".r
+  private val UpdTop = """UPDATE TOP \(1\) (\S+) SET (.+) WHERE (.+)""".r
   private val Upsert =
     ("""IF EXISTS \(SELECT \* FROM (\S+) WITH \(UPDLOCK\) WHERE source = \?\) """ +
       """UPDATE \S+ SET offset_ = \? WHERE source = \? """ +
@@ -83,6 +86,66 @@ object TestJdbc {
     def jdbcCompliant(): Boolean = false
     def getParentLogger: java.util.logging.Logger =
       java.util.logging.Logger.getLogger("tsql-shim")
+  }
+
+  /** `jdbc:count:<url>` connects to `<url>` and counts, per (verb, table),
+    * the rows each INSERT/UPDATE/DELETE prepared statement sends (one per
+    * `addBatch` entry or `executeUpdate` call) and the affected-row counts
+    * its batches return. Counters are JVM-wide; `reset()` clears them. */
+  object Counting extends java.sql.Driver {
+    val PREFIX = "jdbc:count:"
+    private val Target =
+      """(?is)\s*(INSERT|UPDATE|DELETE)\s+(?:TOP\s*\([^)]*\)\s+)?(?:INTO\s+|FROM\s+)?(\w+).*""".r
+    private val sentRows = new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
+    private val affectedRows =
+      new java.util.concurrent.ConcurrentHashMap[(String, String), Vector[Int]]()
+    private lazy val registered: Unit = DriverManager.registerDriver(this)
+
+    /** `url` behind the counting driver. */
+    def url(inner: String): String = { registered; PREFIX + inner }
+    def reset(): Unit = { sentRows.clear(); affectedRows.clear() }
+    /** Rows sent by `verb` statements on `table` (case-insensitive). */
+    def sent(verb: String, table: String): Long =
+      sentRows.getOrDefault((verb.toUpperCase, table.toUpperCase), 0L)
+    /** Every affected-row count `verb` batches on `table` returned. */
+    def affected(verb: String, table: String): Vector[Int] =
+      affectedRows.getOrDefault((verb.toUpperCase, table.toUpperCase), Vector.empty)
+
+    def connect(u: String, p: java.util.Properties): Connection =
+      if (!acceptsURL(u)) null
+      else {
+        val real = DriverManager.getConnection(u.substring(PREFIX.length))
+        proxy(classOf[Connection]) { (m, args) =>
+          val out = if (args == null) m.invoke(real) else m.invoke(real, args: _*)
+          (m.getName, if (args == null) null else args(0)) match {
+            case ("prepareStatement", sql: String) => sql match {
+              case Target(verb, table) =>
+                counted(out.asInstanceOf[PreparedStatement], (verb.toUpperCase, table.toUpperCase))
+              case _ => out
+            }
+            case _ => out
+          }
+        }
+      }
+    private def counted(ps: PreparedStatement, key: (String, String)): PreparedStatement =
+      proxy(classOf[PreparedStatement]) { (m, args) =>
+        val out = if (args == null) m.invoke(ps) else m.invoke(ps, args: _*)
+        if (args == null) m.getName match {
+          case "addBatch" | "executeUpdate" => sentRows.merge(key, 1L, _ + _)
+          case "executeBatch" =>
+            affectedRows.merge(key, out.asInstanceOf[Array[Int]].toVector, _ ++ _)
+          case _ => ()
+        }
+        out
+      }
+    def acceptsURL(u: String): Boolean = u != null && u.startsWith(PREFIX)
+    def getPropertyInfo(u: String, p: java.util.Properties): Array[java.sql.DriverPropertyInfo] =
+      Array.empty
+    def getMajorVersion: Int = 1
+    def getMinorVersion: Int = 0
+    def jdbcCompliant(): Boolean = false
+    def getParentLogger: java.util.logging.Logger =
+      java.util.logging.Logger.getLogger("count-jdbc")
   }
 
   private def proxy[T](iface: Class[T])(h: (Method, Array[AnyRef]) => AnyRef): T =
@@ -136,25 +199,41 @@ object TestJdbc {
     * rest bind into `w` (the sink's binder contract). Translated to a
     * rowid-subquery bounded delete; rows matching `w` are value-identical
     * copies, so which `cap` of them go is immaterial (T-SQL TOP without
-    * ORDER BY is equally unordered). The sink sends these deletes as a
-    * statement batch: `addBatch` queues the bound parameters, and
-    * `executeBatch` runs the queue in order and returns each entry's
-    * deleted-row count, as a T-SQL driver does. */
-  private def delTopStatement(real: Connection, table: String, where: String): PreparedStatement = {
-    val params = scala.collection.mutable.Map.empty[Int, AnyRef]
-    val batch = scala.collection.mutable.ArrayBuffer.empty[Map[Int, AnyRef]]
-    def run(bound: Map[Int, AnyRef]): Int = {
+    * ORDER BY is equally unordered). */
+  private def delTopStatement(real: Connection, table: String, where: String): PreparedStatement =
+    batchedStatement(real, "DELETE TOP") { bound =>
       val cap = bound(1) match {
         case l: java.lang.Long => l.longValue
         case i: java.lang.Integer => i.longValue
       }
-      val ps = real.prepareStatement(s"DELETE FROM $table WHERE rowid IN " +
-        s"(SELECT rowid FROM $table WHERE $where LIMIT $cap)")
-      try {
-        (1 to where.count(_ == '?'))
-          .foreach(i => ps.setObject(i, bound(i + 1)))
-        ps.executeUpdate()
-      } finally ps.close()
+      (s"DELETE FROM $table WHERE rowid IN " +
+        s"(SELECT rowid FROM $table WHERE $where LIMIT $cap)",
+        (1 to where.count(_ == '?')).map(i => bound(i + 1)))
+    }
+
+  /** `UPDATE TOP (1) t SET s WHERE w` — the SET parameters bind first,
+    * then `w`'s. Translated with the same rowid-subquery pattern, capped
+    * at one row, parameter order kept. */
+  private def updTopStatement(real: Connection, table: String, set: String,
+                              where: String): PreparedStatement =
+    batchedStatement(real, "UPDATE TOP") { bound =>
+      (s"UPDATE $table SET $set WHERE rowid IN " +
+        s"(SELECT rowid FROM $table WHERE $where LIMIT 1)",
+        (1 to bound.size).map(bound))
+    }
+
+  /** A bounded T-SQL statement the sink sends as a statement batch:
+    * `addBatch` queues the bound parameters, and `executeBatch` runs the
+    * queue in order through `translate`'s statement and parameters and
+    * returns each entry's affected-row count, as a T-SQL driver does. */
+  private def batchedStatement(real: Connection, shape: String)
+                              (translate: Map[Int, AnyRef] => (String, Seq[AnyRef]))
+      : PreparedStatement = {
+    val params = scala.collection.mutable.Map.empty[Int, AnyRef]
+    val batch = scala.collection.mutable.ArrayBuffer.empty[Map[Int, AnyRef]]
+    def run(bound: Map[Int, AnyRef]): Int = {
+      val (sql, args) = translate(bound)
+      runUpdate(real, sql, args: _*)
     }
     proxy(classOf[PreparedStatement]) { (m, args) =>
       m.getName match {
@@ -165,7 +244,7 @@ object TestJdbc {
           try batch.map(run).toArray finally batch.clear()
         case "clearBatch" => batch.clear(); null
         case "close" => null
-        case other => throw new UnsupportedOperationException(s"tsql-shim DELETE TOP: $other")
+        case other => throw new UnsupportedOperationException(s"tsql-shim $shape: $other")
       }
     }
   }
@@ -212,6 +291,7 @@ object TestJdbc {
         case "prepareStatement" if args != null && args(0).isInstanceOf[String] =>
           args(0).asInstanceOf[String] match {
             case DelTop(t, w) => delTopStatement(real, t, w)
+            case UpdTop(t, set, w) => updTopStatement(real, t, set, w)
             case Upsert(t)    => upsertStatement(real, t)
             case _ => if (args == null) m.invoke(real) else m.invoke(real, args: _*)
           }
