@@ -46,6 +46,8 @@ object Graph {
         case _ => ()
       }
 
+  private val BroadcastStateRows = "spark.graft.broadcastStateRows"
+
   /** Size-gated broadcast of a MEASURED loop-state frame (optimization
     * r17, guide §3.1). Every iterative loop here keeps its node- or
     * (seed × node)-sized state behind `localCheckpoint` leaves whose
@@ -64,13 +66,15 @@ object Graph {
     * results. The gate is conf-parameterized
     * (`spark.graft.broadcastStateRows`, default 4M rows ≈ 100–250 MB
     * built, inside the guide's "few hundred MB is fine" envelope) so a
-    * deployment sizes it to executor memory; `rows < 0` means unknown
-    * and never broadcasts. */
-  private def bcastIfSmall(df: DataFrame, rows: Long): DataFrame = {
-    val gate = df.sparkSession.conf
-      .getOption("spark.graft.broadcastStateRows").map(_.toLong)
-      .getOrElse(4000000L)
-    if (rows >= 0L && rows <= gate) broadcast(df) else df
+    * deployment sizes it to executor memory; a gate ≤ 0 never
+    * broadcasts, `rows < 0` means unknown and never broadcasts, and a
+    * value that is not a whole number fails naming the setting. */
+  private[graft] def bcastIfSmall(df: DataFrame, rows: Long): DataFrame = {
+    val gate = df.sparkSession.conf.getOption(BroadcastStateRows).fold(4000000L) { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$BroadcastStateRows must be a whole number of rows, got '$v'"))
+    }
+    if (gate > 0L && rows >= 0L && rows <= gate) broadcast(df) else df
   }
 
   /** PageRank over a DIRECTED edge list.

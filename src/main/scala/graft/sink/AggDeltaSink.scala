@@ -3,7 +3,6 @@ package graft.sink
 import java.sql.{Connection, PreparedStatement}
 import org.apache.spark.sql.DataFrame
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained AGGREGATE view: `keys -> (cnt, sums...)`
@@ -139,19 +138,20 @@ class AggDeltaSink(url: String, val name: String, version: Int,
 
   /** The distributed per-group reduction of a signed-delta batch to
     * (key, dn, ds…) adjustments — map-side combined, only churned
-    * groups cross the driver. Shared by [[foreachBatchWriter]] and the
-    * union's mixed-member writer. */
+    * groups cross the driver, pulled through [[DeltaSql.pull]] (the
+    * reduction's exchange runs here, coalesced by adaptive execution; one
+    * partition on the driver at a time). Shared by [[foreachBatchWriter]]
+    * and the union's mixed-member writer. */
   private[sink] def adjustmentsOf(dataDf: DataFrame)
       : Iterator[(Seq[Any], Long, Seq[Any])] = {
     val keyCols = keys.map(k => col(k.name))
     val aggs = sum(col(graft.core.Deltas.MULT)).as("_dn") +:
       sums.map(s => sum(col(s.name) * col(graft.core.Deltas.MULT)).as(s.name))
-    dataDf.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
-      .toLocalIterator().asScala.map { r =>
-        (keys.map(k => r.getAs[Any](k.name)),
-         r.getAs[Long]("_dn"),
-         sums.map(s => r.getAs[Any](s.name)))
-      }
+    DeltaSql.pull(dataDf.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)).map { r =>
+      (keys.map(k => r.getAs[Any](k.name)),
+       r.getAs[Long]("_dn"),
+       sums.map(s => r.getAs[Any](s.name)))
+    }
   }
 
   /** Columns a union micro-batch must carry for this member: its keys

@@ -31,11 +31,12 @@ object BatchIncremental {
           sink.readRows().map(vs => Row.fromSeq(vs))).asJava),
       schema)
     val deltas = Deltas.consolidate(Deltas.diff(snapshot, current))
-    // stream the diff through the open txn (one partition on the driver
-    // at a time) — a first sync of a large view is exactly the
-    // full-history-replay case the collect() form would buffer whole
+    // stream the diff through the open txn (DeltaSql.pull: one coalesced
+    // partition on the driver at a time) — a first sync of a large view
+    // is exactly the full-history-replay case the collect() form would
+    // buffer whole
     var applied = 0L
-    val rows = deltas.toLocalIterator().asScala.map { r =>
+    val rows = DeltaSql.pull(deltas).map { r =>
       applied += r.getAs[Long](Deltas.MULT).abs
       (schema.fieldNames.toSeq.map(n => r.getAs[Any](n)), r.getAs[Long](Deltas.MULT))
     }

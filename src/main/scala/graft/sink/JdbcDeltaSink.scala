@@ -5,6 +5,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 import graft.core.Deltas
 
 /** Declarative output-table schema (reference `DbRecord`/`DbColumn`,
@@ -56,18 +57,19 @@ private[sink] object DeltaSql {
 
   /** Bag-semantics application of one table's deltas on an open txn.
     *
-    * Driver-memory-bounded: `deltas` is an ITERATOR (fed from
-    * `toLocalIterator` by the batch writers, so a full-history replay
-    * never materializes the view on the driver), read in chunks of at
-    * most `rowBatchSize` pairwise-distinct tuples; a chunk closes early
-    * when a tuple repeats. Deltas on distinct tuples commute, so within a
-    * chunk the updates run first, then the retractions, then the inserts.
-    * Closing the chunk on a repeat keeps unconsolidated input (an insert
-    * and a retraction of the same tuple in one batch) exactly as if it
-    * were applied one delta at a time. Tuples are told apart by value —
-    * the same equality the WHERE clause relies on: the bag protocol
-    * assumes the engine's SQL equality on these columns is value equality
-    * (no case-insensitive or blank-padding collation).
+    * Driver-memory-bounded: `deltas` is an ITERATOR (fed by [[pull]] in
+    * the batch writers, one coalesced partition at a time, so a
+    * full-history replay never materializes the view on the driver),
+    * read in chunks of at most `rowBatchSize` pairwise-distinct tuples;
+    * a chunk closes early when a tuple repeats. Deltas on distinct
+    * tuples commute, so within a chunk the updates run first, then the
+    * retractions, then the inserts. Closing the chunk on a repeat keeps
+    * unconsolidated input (an insert and a retraction of the same tuple
+    * in one batch) exactly as if it were applied one delta at a time.
+    * Tuples are told apart by value — the same equality the WHERE clause
+    * relies on: the bag protocol assumes the engine's SQL equality on
+    * these columns is value equality (no case-insensitive or
+    * blank-padding collation).
     *
     * Paired changes: when the spec has index columns (and others), a
     * retraction `(A, −1)` and an insertion `(B, +1)` of the same chunk
@@ -200,7 +202,8 @@ private[sink] object DeltaSql {
   }
 
   /** A batch's consolidated deltas ([[Deltas.consolidate]]) in `spec`'s
-    * column order, pulled one partition at a time (`toLocalIterator`).
+    * column order, pulled through [[pull]]: the consolidation's exchange
+    * runs when this is called, its rows as the iterator is drained.
     * When the batch carries multiplicities and the spec has index columns
     * (and others), the consolidation is co-located for
     * [[applyTableDeltas]]'s pairing: the batch is hash-partitioned on the
@@ -212,7 +215,32 @@ private[sink] object DeltaSql {
     val deltas =
       if (!pairable(spec) || !batch.columns.contains(Deltas.MULT)) Deltas.consolidate(batch)
       else Deltas.consolidate(batch.repartition(idx: _*)).sortWithinPartitions(idx: _*)
-    deltas.toLocalIterator().asScala.map(rowOf(_, spec.colNames))
+    pull(deltas).map(rowOf(_, spec.colNames))
+  }
+
+  /** `ds`'s rows on the driver, one partition at a time
+    * (`toLocalIterator`), with `ds` planned under adaptive query execution
+    * so that its final exchange is coalesced to partitions of about
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (or
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize`, if
+    * larger). A batch below that size is one partition, pulled by one job
+    * whatever `spark.sql.shuffle.partitions` is, and the driver holds at
+    * most one such partition at a time; coalescing only merges, so one
+    * shuffle partition larger than the target stays whole. Without AQE,
+    * `toLocalIterator` starts one job per shuffle partition.
+    *
+    * Spark switches AQE off in the session of a stateful streaming query,
+    * which is the session a `foreachBatch` writer's batch belongs to, so
+    * it is switched on here only while `toLocalIterator` plans `ds` and
+    * runs its shuffle map stages (both happen inside that call, before a
+    * caller's transaction opens), and the setting is restored in a
+    * `finally`; the result jobs run as the iterator is drained. */
+  def pull(ds: DataFrame): Iterator[Row] = {
+    val conf = ds.sparkSession.conf
+    val aqe = SQLConf.ADAPTIVE_EXECUTION_ENABLED.key
+    val was = conf.get(aqe)
+    conf.set(aqe, "true")
+    try ds.toLocalIterator().asScala finally conf.set(aqe, was)
   }
 
   /** A spec whose rows can change in place: it has index columns to match
@@ -249,11 +277,12 @@ private[sink] object DeltaSql {
   }
 
   /** Runs a `foreachBatch` writer's `body` with its micro-batch plan
-    * executed once. The batch is persisted; the per-source max `_offset`
-    * (empty without a `_source` column) is computed first, before any
-    * transaction opens, which fills the cache; `body` receives those
-    * offsets, and the rows it pulls inside its transaction read the
-    * cache. The batch is unpersisted however `body` ends. */
+    * executed once, for a writer that reads the batch more than once.
+    * The batch is persisted; the per-source max `_offset` (empty without
+    * a `_source` column) is computed first, before any transaction opens,
+    * which fills the cache; `body` receives those offsets, and every
+    * later read of the batch reads the cache. The batch is unpersisted
+    * however `body` ends. */
   def onceOverBatch[A](df: DataFrame)(body: Map[String, Long] => A): A = {
     df.persist()
     try {
@@ -361,9 +390,11 @@ private[sink] object DeltaSql {
   * Scale note: deltas cross the driver because one transaction must span
   * offsets + all rows — same invariant the reference enforces with a
   * single DB connection. The volume is the *view's churn per trigger*
-  * (already consolidated), not the input rate; a view whose churn
-  * exceeds driver memory needs a partitioned-transaction target (e.g. a
-  * Delta/Iceberg table) instead of a single SQL endpoint.
+  * (already consolidated), not the input rate, and the driver holds one
+  * coalesced partition of it at a time, bounded in bytes by the adaptive
+  * advisory partition size ([[DeltaSql.pull]]); a view whose churn per
+  * trigger outgrows one transaction needs a partitioned-transaction
+  * target (e.g. a Delta/Iceberg table) instead of a single SQL endpoint.
   */
 class JdbcDeltaSink(url: String, spec: TableSpec,
                     dialect: SinkDialect = AnsiDialect,
@@ -476,22 +507,25 @@ class JdbcDeltaSink(url: String, spec: TableSpec,
     * [[applyDeltasStreamed]]. Offset columns (`_source`, `_offset`) are
     * split out if present.
     *
-    * The micro-batch plan runs once ([[DeltaSql.onceOverBatch]]): the
-    * batch is persisted, its offsets are computed before the transaction
-    * opens, and the consolidation inside the transaction reads the
-    * cache. The consolidated deltas reach the DB via `toLocalIterator` —
-    * one partition resident on the driver at a time — so a full-history
-    * replay into a fresh sink is bounded by partition size, not view
-    * size (the txn must still span the whole batch; that single-
-    * connection invariant is the reference's, runner.rs:113-122). A
-    * batch with a `mult` column is consolidated co-located on the index
-    * columns ([[DeltaSql.consolidatedRows]]), so a key's retraction and
+    * The micro-batch plan runs once. A batch with `_source` is read
+    * twice, for its offsets and for its rows, so it is persisted and its
+    * offsets are computed first ([[DeltaSql.onceOverBatch]]); a batch
+    * without is read once and not cached. The consolidation's exchange
+    * runs before the transaction opens, and its rows reach the DB through
+    * [[DeltaSql.pull]]: coalesced by adaptive execution, usually one
+    * partition and one job per batch, and one partition resident on the
+    * driver at a time — so a full-history replay into a fresh sink is
+    * bounded by the advisory partition size, not view size (the txn must
+    * still span the whole batch; that single-connection invariant is the
+    * reference's, runner.rs:113-122). A batch with a `mult` column is
+    * consolidated co-located on the index columns
+    * ([[DeltaSql.consolidatedRows]]), so a key's retraction and
     * re-insertion reach the DB as one UPDATE. */
   def foreachBatchWriter(): (DataFrame, Long) => Unit = { (df, batchId) =>
-    DeltaSql.onceOverBatch(df) { offsets =>
-      applyDeltasStreamed(offsets, batchId,
-        DeltaSql.consolidatedRows(df.drop("_source", "_offset"), spec))
-    }
+    def rows = DeltaSql.consolidatedRows(df.drop("_source", "_offset"), spec)
+    if (df.columns.contains("_source"))
+      DeltaSql.onceOverBatch(df)(offsets => applyDeltasStreamed(offsets, batchId, rows))
+    else applyDeltasStreamed(Map.empty, batchId, rows)
     ()
   }
 }
@@ -569,11 +603,12 @@ class UnionDeltaSink(url: String, group: String, specs: Seq[TableSpec],
     * offsets are computed before the transaction opens, and every
     * member's filter-and-consolidate inside the transaction reads the
     * cache. Raw members consolidate as the single-table writer does, so
-    * their retract/re-insert pairs apply as UPDATEs too. */
+    * their retract/re-insert pairs apply as UPDATEs too, and every member
+    * is pulled through [[DeltaSql.pull]]. */
   def foreachBatchWriter(): (DataFrame, Long) => Unit = { (df, batchId) =>
     DeltaSql.onceOverBatch(df) { offsets =>
       // one lazy iterator per member, each drained inside the shared txn
-      // (toLocalIterator: one partition on the driver at a time)
+      // (DeltaSql.pull: one coalesced partition on the driver at a time)
       DeltaSql.inBatchTxn(url, s"${group}_batches", offsetsTable,
         batchId, offsets, dialect) { c =>
         specs.foreach { sp =>

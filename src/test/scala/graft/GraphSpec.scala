@@ -837,4 +837,36 @@ class GraphSpec extends SparkTestBase {
       "ppr")
     spark.catalog.clearCache()
   }
+
+  private def withStateRowsGate[A](gate: String)(body: => A): A = {
+    spark.conf.set("spark.graft.broadcastStateRows", gate)
+    try body finally spark.conf.unset("spark.graft.broadcastStateRows")
+  }
+
+  private def broadcastHinted(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.find {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
+        h.hints.strategy.contains(org.apache.spark.sql.catalyst.plans.logical.BROADCAST)
+      case _ => false
+    }.isDefined
+
+  test("bcastIfSmall: a gate <= 0 never broadcasts, not even an empty state") {
+    val state = spark.range(3).toDF("node")
+    assert(broadcastHinted(Graph.bcastIfSmall(state, 3L)), "default gate broadcasts 3 rows")
+    Seq("0", "-1").foreach { gate =>
+      withStateRowsGate(gate) {
+        assert(!broadcastHinted(Graph.bcastIfSmall(state, 0L)), s"gate $gate, 0 rows")
+        assert(!broadcastHinted(Graph.bcastIfSmall(state, 3L)), s"gate $gate, 3 rows")
+      }
+    }
+    withStateRowsGate("3")(assert(broadcastHinted(Graph.bcastIfSmall(state, 3L))))
+  }
+
+  test("bcastIfSmall: a malformed spark.graft.broadcastStateRows fails naming the setting") {
+    val state = spark.range(3).toDF("node")
+    val e = intercept[IllegalArgumentException] {
+      withStateRowsGate("4M")(Graph.bcastIfSmall(state, 3L))
+    }
+    assert(e.getMessage.contains("spark.graft.broadcastStateRows") && e.getMessage.contains("4M"))
+  }
 }
