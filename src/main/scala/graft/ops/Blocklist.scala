@@ -124,11 +124,13 @@ object Blocklist {
       idCol, textCol)
 
   /** [[screen]] against the maintained store's CURRENT list — each
-    * call (or each micro-batch, via
-    * [[graft.streaming.BlocklistStream]]) screens with the list as of
-    * now; a policy edit lands in the next batch with no pipeline
-    * restart (the [[graft.streaming.DqStream.OrphanStoreCheck]]
-    * stream-static contract on the policy side). */
+    * call (or each micro-batch, as a [[graft.streaming.StoreLoop]]
+    * step) screens with the list as of now; a policy edit lands in the
+    * next batch with no pipeline restart (the
+    * [[graft.streaming.DqStream.OrphanStoreCheck]] stream-static
+    * contract on the policy side). Batches already screened are NOT
+    * re-judged (the additive report contract; re-screening history is a
+    * batch job over the archive, not a stream's). */
   def screenFromStore(docs: DataFrame, path: String,
                       idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame =

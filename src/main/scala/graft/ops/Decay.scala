@@ -94,9 +94,13 @@ object Decay {
 
   /** Fold one batch's [[decayedBuckets]] rows into an additive append
     * store (the [[Quantiles.storeAppendBy]] lifecycle: marker-gated
-    * exactly-once per `batchTag`, sum-merge at read). Store rows are
-    * (groupCols..., period, cnt, tag) — asOf-independent, so ANY later
-    * asOf replays against the same store. */
+    * exactly-once per `batchTag`, sum-merge at read — sums are not
+    * idempotent, so the marker is load-bearing). Store rows are
+    * (groupCols..., period, cnt, tag) — keyed on ABSOLUTE periods and
+    * asOf-independent, so ANY later asOf replays against the same
+    * store and decay is applied only at read time: the store never
+    * needs rewriting as time advances, unlike stored pre-decayed
+    * scores, which stale the moment they land. */
   def storeAppend(df: DataFrame, path: String, batchTag: String,
                   groupCols: Seq[String], tsUsCol: String,
                   halfLifeUs: Long): Unit = {

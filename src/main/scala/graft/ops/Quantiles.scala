@@ -315,13 +315,13 @@ object Quantiles {
   /** TIME-TRAVEL read of a [[storeAppend]] store: the merged histogram
     * AS OF a batch tag — every batch's rows carry their `tag`, so
     * filtering `tag <= asOfTag` (lexicographic; the zero-padded
-    * [[graft.streaming.SimHashStream.tagFor]] scheme makes that arrival
-    * order) reconstructs exactly the histogram any PAST read saw. The
-    * audit/reproducibility primitive a maintained store gets for free
-    * from its idempotence tags: re-grade yesterday's report, bisect a
-    * drift alarm to the batch that introduced it, or pin an experiment
-    * to a data state — no snapshots, no copies, one predicate that
-    * PRUNES on the tag column's parquet min/max. */
+    * [[Stores.batchTag]] scheme makes that arrival order) reconstructs
+    * exactly the histogram any PAST read saw. The audit/reproducibility
+    * primitive a maintained store gets for free from its idempotence
+    * tags: re-grade yesterday's report, bisect a drift alarm to the
+    * batch that introduced it, or pin an experiment to a data state —
+    * no snapshots, no copies, one predicate that PRUNES on the tag
+    * column's parquet min/max. */
   def fromStoreAsOf(spark: SparkSession, path: String,
                     asOfTag: String): DataFrame = {
     Stores.requireStore(spark, path, "append histogram batches first")
@@ -369,7 +369,11 @@ object Quantiles {
   /** GROUPED [[storeAppend]]: per-(group, bucket) counts, the additive
     * store behind per-source monitors ([[quantilesBy]],
     * [[tukeyOutliers]], [[histRank]] all consume its merge). Same
-    * marker contract — sum-merge is not idempotent. */
+    * marker contract — sum-merge is not idempotent. In a stream it is
+    * the state behind the robust-outlier gate: each batch can be
+    * flagged against fences learned from everything before it
+    * ([[tukeyOutliersFromStore]] read before this batch folds in — or
+    * after, for fences that include it; the caller picks). */
   def storeAppendBy(df: DataFrame, path: String, batchTag: String,
                     groupCols: Seq[String], valueExpr: String,
                     bucketWidth: Long): Unit = {

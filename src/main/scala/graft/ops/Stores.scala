@@ -85,6 +85,15 @@ object Stores {
     spark.read.parquet(path)
   }
 
+  /** The store tag of a Structured Streaming batch id — the one tag
+    * format every streaming store maintainer writes
+    * ([[graft.streaming.StoreLoop]]). Zero-padded so lexicographic tag
+    * order equals batch order: the strictly-earlier reads
+    * ([[Dedup.simhashStoreAppend]], [[Stats.ksDriftFromStoreBefore]],
+    * the DQ dup-key probe) and the as-of reads ([[Quantiles.fromStoreAsOf]])
+    * compare tags as strings, and bare ids would sort `batch_10 < batch_9`. */
+  def batchTag(batchId: Long): String = f"batch_$batchId%09d"
+
   /** EXACTLY-ONCE batch append into a parquet store, replay- and
     * crash-safe where a bare `mode("append")` + marker is not: a crash
     * between the append and the marker write would double-post the

@@ -7359,7 +7359,8 @@ object Queries {
     * event_id mod 3): per-(group, position) count/sum pairs merge by
     * SUM, decimal sums of decimal sums stay exact, so the stored card
     * hash-matches the one-shot oracle — the arriving-shard seasonality
-    * monitor ([[graft.streaming.SeasonalStream]] is the live twin). */
+    * monitor (its live twin is a [[graft.streaming.StoreLoop]] over
+    * the same op). */
   val qSeasonalStored: Q = "q_seasonal_stored" -> (
     (s: SparkSession, d: String) => {
       val ev = Tables.events(s, d).filter(col("k").isNotNull)

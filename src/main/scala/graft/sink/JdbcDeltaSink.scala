@@ -295,6 +295,16 @@ private[sink] object DeltaSql {
     } finally df.unpersist()
   }
 
+  /** The exactly-once protocol's two tables, each as (name, CREATE
+    * statement in `dialect`): the per-source restart offsets and the
+    * applied batch ids that [[inBatchTxn]] writes. One definition for
+    * the single-table and the union bootstraps. */
+  def protocolTables(offsetsTable: String, batchesTable: String,
+                     dialect: SinkDialect): Seq[(String, String)] = Seq(
+    offsetsTable -> dialect.createTableSql(offsetsTable,
+      "source VARCHAR(50) NOT NULL PRIMARY KEY, offset_ BIGINT NOT NULL"),
+    batchesTable -> dialect.createTableSql(batchesTable, "batch_id BIGINT NOT NULL"))
+
   /** Connection scope with rollback-before-close: a failure inside `f`
     * must surface, not be masked by Derby's close-with-active-txn error. */
   def withConn[A](url: String)(f: Connection => A): A = {
@@ -438,12 +448,9 @@ class JdbcDeltaSink(url: String, spec: TableSpec,
         exec(c, dialect.createIndexSql(s"idx_${spec.name}_${col.name}",
           spec.name, col.name))
       }
-      if (protocolTables) {
-        exec(c, dialect.createTableSql(spec.offsetsTable,
-          "source VARCHAR(50) NOT NULL PRIMARY KEY, offset_ BIGINT NOT NULL"))
-        exec(c, dialect.createTableSql(s"${spec.name}_batches",
-          "batch_id BIGINT NOT NULL"))
-      }
+      if (protocolTables)
+        DeltaSql.protocolTables(spec.offsetsTable, s"${spec.name}_batches", dialect)
+          .foreach { case (_, ddl) => exec(c, ddl) }
       if (cur.isDefined) {
         val ps = c.prepareStatement("UPDATE schema_versions SET version = ? WHERE table_name = ?")
         ps.setInt(1, spec.version); ps.setString(2, spec.name)
@@ -554,13 +561,6 @@ class UnionDeltaSink(url: String, group: String, specs: Seq[TableSpec],
 
   private val sinks = specs.map(sp => new JdbcDeltaSink(url, sp, dialect, rowBatchSize))
 
-  private def withConn[A](f: Connection => A): A = DeltaSql.withConn(url)(f)
-
-  private def exec(c: Connection, sql: String): Unit = DeltaSql.exec(c, sql)
-
-  private def tableExists(c: Connection, name: String): Boolean =
-    DeltaSql.tableExists(c, name)
-
   def offsetsTable: String = s"${group}_offsets"
 
   /** Bootstrap every member table plus the shared offsets/batch tables.
@@ -573,15 +573,13 @@ class UnionDeltaSink(url: String, group: String, specs: Seq[TableSpec],
   def bootstrap(): Boolean = {
     val recreated = (sinks.map(_.bootstrapMember()) ++
       aggMembers.map(_.bootstrapMember())).exists(identity)
-    withConn { c =>
+    DeltaSql.withConn(url) { c =>
       c.setAutoCommit(false)
-      for (t <- Seq(offsetsTable, s"${group}_batches")) {
-        if (!tableExists(c, t))
-          exec(c, s"CREATE TABLE $t " + (if (t == offsetsTable)
-            "(source VARCHAR(50) NOT NULL PRIMARY KEY, offset_ BIGINT NOT NULL)"
-          else "(batch_id BIGINT NOT NULL)"))
-        else if (recreated) exec(c, s"DELETE FROM $t")
-      }
+      DeltaSql.protocolTables(offsetsTable, s"${group}_batches", dialect)
+        .foreach { case (t, ddl) =>
+          if (!DeltaSql.tableExists(c, t)) DeltaSql.exec(c, ddl)
+          else if (recreated) DeltaSql.exec(c, s"DELETE FROM $t")
+        }
       c.commit()
     }
     recreated

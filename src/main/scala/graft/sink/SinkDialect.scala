@@ -78,10 +78,6 @@ trait SinkDialect extends Serializable {
   def createIndexSql(index: String, table: String, definition: String): String =
     s"CREATE INDEX $index ON $table ($definition)"
 
-  /** True if `createTableSql` is self-guarding (IF NOT EXISTS built in) —
-    * the bootstrap then skips its metadata existence probe. */
-  def ddlIsIdempotent: Boolean = false
-
   /** Statements to run once per connection (isolation pins etc.). */
   def sessionInitSql: Seq[String] = Seq.empty
 }
@@ -101,8 +97,6 @@ case object PostgresDialect extends SinkDialect {
   override def createIndexSql(index: String, table: String, definition: String): String =
     s"CREATE INDEX IF NOT EXISTS $index ON $table ($definition)"
 
-  override def ddlIsIdempotent: Boolean = true
-
   override def offsetsUpsertSql(table: String): Option[String] = Some(
     s"INSERT INTO $table (source, offset_) VALUES (?, ?) " +
       "ON CONFLICT(source) DO UPDATE SET offset_ = excluded.offset_")
@@ -119,8 +113,6 @@ case object MssqlDialect extends SinkDialect {
   override def createIndexSql(index: String, table: String, definition: String): String =
     s"IF NOT EXISTS (SELECT * FROM sys.indexes WHERE name = '$index') " +
       s"CREATE INDEX $index ON $table ($definition)"
-
-  override def ddlIsIdempotent: Boolean = true
 
   /** mssql.rs:216-218 `delete top ({param}) {clause}` — the cap is a
     * bind parameter, so one prepared statement serves every retraction. */

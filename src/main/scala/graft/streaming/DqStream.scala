@@ -273,16 +273,17 @@ object DqStream {
     }.reduce(_ unionAll _).orderBy(col("check"))
   }
 
-  /** Wire the loop onto a stream (foreachBatch; checkpoint dir is the
-    * caller's, the [[FingerprintStream.selfMaintaining]] convention).
-    * Batch ids map to ZERO-PADDED tags ([[SimHashStream.tagFor]]) —
-    * the strictly-earlier-tag crash guard orders tags
-    * lexicographically, and bare ids would sort `batch_10 < batch_9`. */
+  /** Wire the loop onto a stream through [[StoreLoop]] (checkpoint dir
+    * is the caller's, the [[FingerprintStream.selfMaintaining]]
+    * convention). Batch ids map to ZERO-PADDED tags
+    * ([[graft.ops.Stores.batchTag]]) — the strictly-earlier-tag crash
+    * guard orders tags lexicographically, and bare ids would sort
+    * `batch_10 < batch_9`. */
   def attach(stream: DataFrame, path: String, checks: Seq[Check])
             (onBatch: (Long, DataFrame) => Unit = (_, _) => ())
       : DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      processBatch(batch, path, SimHashStream.tagFor(batchId), checks)
-      onBatch(batchId, report(batch.sparkSession, path, checks))
-    }
+    StoreLoop.writer(stream) { (batch, tag) =>
+      processBatch(batch, path, tag, checks)
+      report(batch.sparkSession, path, checks)
+    }(onBatch)
 }

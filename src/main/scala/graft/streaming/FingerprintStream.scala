@@ -69,10 +69,9 @@ object FingerprintStream {
       : DataStreamWriter[Row] = {
     require(graft.ops.Stores.exists(docs.sparkSession, path, "_SUCCESS"),
       s"no fingerprint store at $path — seed it with winnowStored")
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      processBatch(batch, batchId, path, minShared, dfCap, k, w,
-        idCol, textCol)(onBatch)
-    }
+    StoreLoop.writer(docs)(
+      dedupAppend(path, minShared, dfCap, k, w, idCol, textCol))(
+      released(onBatch))
   }
 
   /** One micro-batch of the loop — public so the at-least-once replay
@@ -84,7 +83,17 @@ object FingerprintStream {
   def processBatch(batch: DataFrame, batchId: Long, path: String,
                    minShared: Int, dfCap: Int, k: Int, w: Int,
                    idCol: String, textCol: String)
-                  (onBatch: (Long, DataFrame, DataFrame) => Unit): Unit = {
+                  (onBatch: (Long, DataFrame, DataFrame) => Unit): Unit =
+    StoreLoop.batchFn(
+      dedupAppend(path, minShared, dfCap, k, w, idCol, textCol))(
+      released(onBatch))(batch, batchId)
+
+  /** Steps 1–4: the batch's persisted postings, cross pairs and
+    * survivors, the survivors' postings folded into the store. */
+  private def dedupAppend(path: String, minShared: Int, dfCap: Int,
+                          k: Int, w: Int, idCol: String, textCol: String)
+                         (batch: DataFrame, tag: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     val spark = batch.sparkSession
     val fps = graft.ops.Fingerprints
       .winnow(batch, k, w, idCol, textCol).persist()
@@ -114,7 +123,15 @@ object FingerprintStream {
     // re-tokenizing the surviving documents
     graft.ops.Fingerprints.postingsAppend(
       fps.join(survivors.select(col(idCol).as("id")), Seq("id"), "left_semi"),
-      path, batchTag = s"batch_$batchId", spark)
+      path, batchTag = tag, spark)
+    (fps, crossPairs, survivors)
+  }
+
+  /** Step 5, then the batch's three caches are released. */
+  private def released(onBatch: (Long, DataFrame, DataFrame) => Unit)
+                      (batchId: Long,
+                       results: (DataFrame, DataFrame, DataFrame)): Unit = {
+    val (fps, crossPairs, survivors) = results
     onBatch(batchId, crossPairs, survivors)
     fps.unpersist(); crossPairs.unpersist(); survivors.unpersist()
     ()

@@ -16,8 +16,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * Exactly-once: the append no-ops on the store's batch marker
   * (redelivery), and the emission reads only STRICTLY-EARLIER tags
   * (crash-retry racing later batches recomputes the identical pair
-  * set). Batch ids map to zero-padded tags ([[SimHashStream.tagFor]])
-  * so lexicographic tag order equals batch order.
+  * set). Batch ids map to zero-padded tags
+  * ([[graft.ops.Stores.batchTag]]) so lexicographic tag order equals
+  * batch order.
   *
   * At 100 TB: each image's bytes are decoded exactly once, in the
   * batch that carries them — the store probe re-reads 17-byte
@@ -30,9 +31,10 @@ object ImageDupStream {
                       idCol: String = "media_id", binCol: String = "content")
                      (onBatch: (Long, DataFrame) => Unit)
       : DataStreamWriter[Row] =
-    media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val pairs = graft.ops.Multimodal.dhashStoreAppend(
-        batch, path, SimHashStream.tagFor(batchId), maxHamming, idCol, binCol)
+    StoreLoop.writer(media) { (batch, tag) =>
+      graft.ops.Multimodal.dhashStoreAppend(
+        batch, path, tag, maxHamming, idCol, binCol)
+    } { (batchId, pairs) =>
       try onBatch(batchId, pairs)
       finally { pairs.unpersist(); () }
     }

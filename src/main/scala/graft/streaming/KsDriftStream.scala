@@ -8,8 +8,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * ([[graft.ops.Stats.ksDriftFromStoreBefore]]), then folded into the
   * additive histogram store ([[graft.ops.Quantiles.storeAppend]]) —
   * the live "is today's data shaped like the corpus so far" gate a
-  * 100 TB ingest runs per arriving shard, complementing
-  * [[DecayStream]] + CUSUM's count-level alarm with a shape-level one.
+  * 100 TB ingest runs per arriving shard, complementing the
+  * [[graft.ops.Decay.storeAppend]] store + CUSUM's count-level alarm
+  * with a shape-level one.
   *
   * Replay stability is the design center: the verdict reads the store
   * STRICTLY BEFORE this batch's tag, so a crash-and-replay — where the
@@ -26,8 +27,6 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object KsDriftStream {
 
-  def tagFor(batchId: Long): String = f"batch_$batchId%09d"
-
   /** @param onVerdict called per batch with (batchId, verdict row) —
     *                  None whenever no reference data exists strictly
     *                  before the batch (batch 0 on a first run AND on
@@ -38,23 +37,29 @@ object KsDriftStream {
                       bucketWidth: Long, thrNum: Long, thrDen: Long)
                      (onVerdict: (Long, Option[Row]) => Unit)
                      : DataStreamWriter[Row] =
-    rows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      batch.persist()
-      val verdict =
-        if (graft.ops.Stores.exists(spark, path, "_SUCCESS"))
-          Some(graft.ops.Stats.ksDriftFromStoreBefore(spark, path,
-            tagFor(batchId), batch, valueExpr, bucketWidth,
-            thrNum, thrDen).collect().head)
-            // an empty strictly-before reference is exactly what the
-            // first evaluation of batch 0 saw — report None on the
-            // replay too (store exists but holds only this batch's own
-            // committed fold), never a zero-reference pseudo-verdict
-            .filter(_.getAs[Long]("n_ref") > 0L)
-        else None
-      graft.ops.Quantiles.storeAppend(batch, path, tagFor(batchId),
-        valueExpr, bucketWidth)
-      batch.unpersist()
-      onVerdict(batchId, verdict)
-    }
+    StoreLoop.writer(rows)(
+      step(path, valueExpr, bucketWidth, thrNum, thrDen))(onVerdict)
+
+  /** One batch: the verdict against the store strictly before `tag`,
+    * then the fold under `tag`. */
+  def step(path: String, valueExpr: String, bucketWidth: Long,
+           thrNum: Long, thrDen: Long)
+          (batch: DataFrame, tag: String): Option[Row] = {
+    val spark = batch.sparkSession
+    batch.persist()
+    val verdict =
+      if (graft.ops.Stores.exists(spark, path, "_SUCCESS"))
+        Some(graft.ops.Stats.ksDriftFromStoreBefore(spark, path,
+          tag, batch, valueExpr, bucketWidth,
+          thrNum, thrDen).collect().head)
+          // an empty strictly-before reference is exactly what the
+          // first evaluation of batch 0 saw — report None on the
+          // replay too (store exists but holds only this batch's own
+          // committed fold), never a zero-reference pseudo-verdict
+          .filter(_.getAs[Long]("n_ref") > 0L)
+      else None
+    graft.ops.Quantiles.storeAppend(batch, path, tag, valueExpr, bucketWidth)
+    batch.unpersist()
+    verdict
+  }
 }

@@ -299,11 +299,11 @@ object NearDupStream {
     *     ≥ tau with a lower-id doc of the same batch — the rank-1-keeps
     *     rule at doc granularity; exact transitive clustering is
     *     [[graft.ops.Dedup.duplicateClusters]]' job, not a stream's);
-    *  2. the SURVIVORS' signatures are appended to the store with
-    *     `batchTag = batch id` — so Structured Streaming's at-least-once
-    *     foreachBatch replay meets the marker file and cannot
-    *     double-sign (the [[graft.sink.JdbcDeltaSink]] batch-stamp
-    *     contract at file granularity);
+    *  2. the SURVIVORS' signatures are appended to the store under the
+    *     batch's tag — so Structured Streaming's at-least-once
+    *     micro-batch replay meets the marker file and cannot
+    *     double-sign ([[StoreLoop]]; the [[graft.sink.JdbcDeltaSink]]
+    *     batch-stamp contract at file granularity);
     *  3. `onBatch(batchId, dupPairs, survivors)` hands both results to
     *     the caller (sink, metrics, quarantine) inside the same batch.
     *
@@ -321,7 +321,7 @@ object NearDupStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     graft.ops.Stores.requireStore(docs.sparkSession, path,
       "seed it with minhashBandsStored")
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StoreLoop.writer(docs) { (batch, tag) =>
       val spark = batch.sparkSession
       // one signing pass per batch, reused by both joins and the append
       val sigs = graft.ops.Dedup
@@ -331,7 +331,7 @@ object NearDupStream {
         .select(col("band"), col("band_hash"),
           col("id").as("corpus_id"), col("sig").as("sig_a"))
       // the batch's OWN ids are excluded from the corpus side: under
-      // foreachBatch's at-least-once replay, a re-executed batch whose
+      // at-least-once micro-batch replay, a re-executed batch whose
       // first attempt already appended its survivors would otherwise
       // "pair" with itself — the anti-join (pair-scale, after the
       // bucket join) makes every attempt compute the same result,
@@ -371,8 +371,9 @@ object NearDupStream {
       // append land first — the batch would then "pair" with itself
       crossPairs.count(); survivors.count()
       graft.ops.Dedup.minhashStoreAppend(survivors, path,
-        batchTag = s"batch_$batchId", shingleLen, bands, rowsPerBand,
-        idCol, textCol)
+        batchTag = tag, shingleLen, bands, rowsPerBand, idCol, textCol)
+      (sigs, crossPairs, survivors)
+    } { case (batchId, (sigs, crossPairs, survivors)) =>
       onBatch(batchId, crossPairs, survivors)
       sigs.unpersist(); crossPairs.unpersist(); survivors.unpersist()
       ()

@@ -22,9 +22,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    even one racing after later batches landed — recomputes the
   *    identical pair set instead of pairing against the future.
   *
-  * The batch id maps to a ZERO-PADDED tag (`batch_%09d`) because the
-  * store contract orders tags lexicographically — bare ids would sort
-  * `batch_10 < batch_9` and break the strictly-earlier cut.
+  * The batch id maps to a ZERO-PADDED tag ([[graft.ops.Stores.batchTag]])
+  * because the strictly-earlier cut compares tags lexicographically.
   *
   * The emission DataFrame is handed to `onBatch` persisted (the batch
   * op's count barrier materialized it) and is unpersisted right after
@@ -36,17 +35,14 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * batch's own chunk keys, never a corpus re-pair. */
 object SimHashStream {
 
-  /** Tag for a Structured Streaming batch id — zero-padded so
-    * lexicographic tag order equals batch order (the store contract). */
-  def tagFor(batchId: Long): String = f"batch_$batchId%09d"
-
   def selfMaintaining(docs: DataFrame, path: String, maxHamming: Int = 3,
                       idCol: String = "doc_id", textCol: String = "text")
                      (onBatch: (Long, DataFrame) => Unit)
       : DataStreamWriter[Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val pairs = graft.ops.Dedup.simhashStoreAppend(
-        batch, path, tagFor(batchId), maxHamming, idCol, textCol)
+    StoreLoop.writer(docs) { (batch, tag) =>
+      graft.ops.Dedup.simhashStoreAppend(
+        batch, path, tag, maxHamming, idCol, textCol)
+    } { (batchId, pairs) =>
       try onBatch(batchId, pairs)
       finally { pairs.unpersist(); () }
     }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *     stored span are cut as corpus-owned, batch-internal repeats
   *     collapse to their rank-1 copy;
   *  2. the batch's spans are folded into the store
-  *     ([[graft.ops.Dedup.spanSetStoredAppend]], `batchTag = batch id`)
+  *     ([[graft.ops.Dedup.spanSetStoredAppend]] under the batch's
+  *     [[StoreLoop]] tag)
   *     so the NEXT batch's copies of them are corpus-owned;
   *  3. `onBatch(batchId, cleaned)` hands the cleaned batch
   *     (id, n_tokens, n_removed, clean_text) to the caller's sink.
@@ -32,8 +33,7 @@ object SpanStream {
                      (onBatch: (Long, DataFrame) => Unit): DataStreamWriter[Row] = {
     graft.ops.Stores.requireStore(docs.sparkSession, path,
       "seed it with spanSetStored")
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val tag = s"batch_$batchId"
+    StoreLoop.writer(docs) { (batch, tag) =>
       // stage FIRST: with the delta on disk before the cleaning plan is
       // built, the plan always reads (store − this batch's delta) — the
       // pre-batch view — so it stays correct even when the commit's
@@ -46,13 +46,15 @@ object SpanStream {
         replayTag = Some(tag)).persist()
       cleaned.count()
       graft.ops.Dedup.spanCommitAppend(batch.sparkSession, path, tag)
+      cleaned
+    } { (batchId, cleaned) =>
       onBatch(batchId, cleaned)
       cleaned.unpersist()
       // the cleaner pins its internal token table (the caller-owned
       // clearCache convention of the batch API); a long-running stream
       // must release it per batch or 10⁴ batches stack 10⁴ pinned
       // token tables. The stream owns its session — clearing is safe.
-      batch.sparkSession.catalog.clearCache()
+      cleaned.sparkSession.catalog.clearCache()
       ()
     }
   }

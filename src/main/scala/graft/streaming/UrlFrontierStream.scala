@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *     store and emits the identical novel set (the
   *     [[FingerprintStream]] step-2 discipline, keyed by tag instead
   *     of id anti-join because the key IS the row);
-  *  3. the novel keys append under `_appended_batch_<id>` marker
+  *  3. the novel keys append under `_appended_<tag>` marker
   *     idempotency ([[graft.ops.Stores.appendCommit]]) — a replayed
   *     append is a no-op, so crash-between-append-and-checkpoint
   *     restarts converge to the uninterrupted run bit-for-bit;
@@ -58,9 +58,7 @@ object UrlFrontierStream {
       : DataStreamWriter[Row] = {
     graft.ops.Stores.requireStore(urls.sparkSession, path,
       "seed it with UrlFrontierStream.seed")
-    urls.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      processBatch(batch, batchId, path, urlCol)(onBatch)
-    }
+    StoreLoop.writer(urls)(novelKeys(path, urlCol))(released(onBatch))
   }
 
   /** One micro-batch — calling this twice with the same (batch,
@@ -68,9 +66,13 @@ object UrlFrontierStream {
     * unchanged the second time. */
   def processBatch(batch: DataFrame, batchId: Long, path: String,
                    urlCol: String)
-                  (onBatch: (Long, DataFrame) => Unit): Unit = {
+                  (onBatch: (Long, DataFrame) => Unit): Unit =
+    StoreLoop.batchFn(novelKeys(path, urlCol))(released(onBatch))(batch, batchId)
+
+  /** Steps 1–3: the batch's novel canonical URLs, persisted. */
+  private def novelKeys(path: String, urlCol: String)
+                       (batch: DataFrame, tag: String): DataFrame = {
     val spark = batch.sparkSession
-    val tag = s"batch_$batchId"
     val keys = batch
       .select(graft.ops.Web.canonicalUrl(col(urlCol)).as("curl"))
       .filter(col("curl").isNotNull)
@@ -86,6 +88,12 @@ object UrlFrontierStream {
       novel.select(col("curl"), lit(tag).as("batch_tag"))
         .write.mode("overwrite").parquet(staging)
     }
+    novel
+  }
+
+  /** Step 4, then the novel set's cache is released. */
+  private def released(onBatch: (Long, DataFrame) => Unit)
+                      (batchId: Long, novel: DataFrame): Unit = {
     onBatch(batchId, novel)
     novel.unpersist()
     ()

@@ -366,9 +366,10 @@ class AbtestSpec extends SparkTestBase {
     val ckpt = java.nio.file.Files.createTempDirectory("ab_ck").toString
     val mem = MemoryStream[(Long, Boolean, Long, Long)]
     val reads = scala.collection.mutable.Map.empty[Long, org.apache.spark.sql.Row]
-    val q = graft.streaming.AbStream.selfMaintaining(
-        mem.toDF().toDF("u", "c", "y", "x"), store, "u", "c", "y", "x",
-        salt = "st2")(Some((bid, r) => { reads(bid) = r; () }))
+    val q = graft.streaming.StoreLoop.writer(mem.toDF().toDF("u", "c", "y", "x"))(
+        Abtest.momentsStoreAppend(_, store, _, "u", "c", "y", "x", salt = "st2")) {
+        (bid, _) => reads(bid) = Abtest.readoutFromStore(spark, store).collect().head
+      }
       .option("checkpointLocation", ckpt).start()
     mem.addData((1L to 100L).map(u => (u, u % 4 == 0, u % 3, 0L)): _*)
     q.processAllAvailable()
@@ -859,9 +860,10 @@ class AbtestSpec extends SparkTestBase {
       .toString + "/s"
     val ckpt = java.nio.file.Files.createTempDirectory("qte_ck").toString
     val mem = MemoryStream[(Long, Long)]
-    val q = graft.streaming.AbStream.selfMaintainingQte(
-        mem.toDF().toDF("u", "y"), store, "u", "y", salt = "st1",
-        bucketWidth = 50L)()
+    // a pure store maintainer: the no-op onBatch runs no readout job
+    val q = graft.streaming.StoreLoop.writer(mem.toDF().toDF("u", "y"))(
+        Abtest.quantileLiftStoreAppend(_, store, _, "u", "y", salt = "st1",
+          bucketWidth = 50L))((_, _) => ())
       .option("checkpointLocation", ckpt).start()
     try {
       val qs = Seq(("p50", 1, 2), ("p90", 9, 10))

@@ -41,8 +41,9 @@ class BlocklistSpec extends SparkTestBase {
       Seq(("bad", "cat1")).toDF("term", "category"), store, "b0")
     val mem = MemoryStream[(Long, String)]
     val seen = scala.collection.mutable.Map.empty[Long, Set[(Long, String)]]
-    val q = graft.streaming.BlocklistStream.attach(
-        mem.toDF().toDF("doc_id", "text"), store) { (bid, hits) =>
+    val q = graft.streaming.StoreLoop.writer(mem.toDF().toDF("doc_id", "text")) {
+        (batch, _) => graft.ops.Blocklist.screenFromStore(batch, store)
+      } { (bid, hits) =>
         seen(bid) = hits.collect()
           .map(r => (r.getLong(0), r.getString(1))).toSet
         ()

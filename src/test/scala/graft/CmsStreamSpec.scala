@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.ops.Cms
-import graft.streaming.CmsStream
+import graft.ops.{Cms, Stores}
+import graft.streaming.StoreLoop
 
 /** Continuously-maintained frequency sketch: per-batch cell appends sum
   * to the one-shot sketch, and the marker (not the algebra — sum is not
@@ -16,7 +16,8 @@ class CmsStreamSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val store = java.nio.file.Files.createTempDirectory("cmss").toString + "/st"
     val mem = MemoryStream[String]
-    val q = CmsStream.selfMaintaining(mem.toDF().toDF("v"), store, "v", D, W)()
+    val q = StoreLoop.writer(mem.toDF().toDF("v"))(
+        Cms.storeAppend(_, store, _, "v", D, W))((_, _) => ())
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("cmss_ckpt").toString)
       .start()
@@ -36,6 +37,6 @@ class CmsStreamSpec extends SparkTestBase {
     assert(est >= 3L)
     val tags = spark.read.parquet(store).select("tag").distinct()
       .as[String].collect().sorted.toSeq
-    assert(tags === Seq(CmsStream.tagFor(0L), CmsStream.tagFor(1L)))
+    assert(tags === Seq(Stores.batchTag(0L), Stores.batchTag(1L)))
   }
 }

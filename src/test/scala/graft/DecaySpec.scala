@@ -38,8 +38,8 @@ class DecaySpec extends SparkTestBase {
     val ckpt = java.nio.file.Files.createTempDirectory("decay_ckpt").toString
     val mem = MemoryStream[(String, Long)]
     val stream = mem.toDF().toDF("g", "ts")
-    val q = graft.streaming.DecayStream
-      .selfMaintaining(stream, store, Seq("g"), "ts", HL)()
+    val q = graft.streaming.StoreLoop.writer(stream)(
+        graft.ops.Decay.storeAppend(_, store, _, Seq("g"), "ts", HL))((_, _) => ())
       .option("checkpointLocation", ckpt).start()
     mem.addData(("a", 1000L), ("a", 950L), ("b", 10L))
     q.processAllAvailable()
@@ -56,7 +56,7 @@ class DecaySpec extends SparkTestBase {
     assert(fromStore === oneShot)
     // replayed batch tag must no-op (marker-gated exactly-once)
     graft.ops.Decay.storeAppend(Seq(("a", 1000L)).toDF("g", "ts"), store,
-      graft.streaming.DecayStream.tagFor(0L), Seq("g"), "ts", HL)
+      graft.ops.Stores.batchTag(0L), Seq("g"), "ts", HL)
     val after = graft.ops.Decay
       .decayedFromStore(spark, store, Seq("g"), 1000L, HL)
       .collect().map(r => r.getString(0) -> r.getAs[Long]("decayed_scaled")).toMap

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.ops.Hll
-import graft.streaming.HllStream
+import graft.ops.{Hll, Stores}
+import graft.streaming.StoreLoop
 
 /** Continuously-maintained distinct-count sketch: per-batch register
   * appends converge to the one-shot sketch over everything ingested,
@@ -19,8 +19,10 @@ class HllStreamSpec extends SparkTestBase {
     val store = java.nio.file.Files.createTempDirectory("hlls").toString + "/st"
     val mem = MemoryStream[(String, String)]
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = HllStream.selfMaintaining(
-        mem.toDF().toDF("g", "v"), store, Seq("g"), "v", M)(seen += _)
+    val q = StoreLoop.writer(mem.toDF().toDF("g", "v"))(
+        Hll.registerStoreAppend(_, store, _, Seq("g"), "v", M)) {
+        (batchId, _) => seen += batchId; ()
+      }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("hlls_ckpt").toString)
       .start()
@@ -43,22 +45,22 @@ class HllStreamSpec extends SparkTestBase {
     // tags are the zero-padded batch ids
     val tags = spark.read.parquet(store).select("tag").distinct()
       .as[String].collect().sorted.toSeq
-    assert(tags === Seq(HllStream.tagFor(0L), HllStream.tagFor(1L)))
+    assert(tags === Seq(Stores.batchTag(0L), Stores.batchTag(1L)))
   }
 
   test("redelivered batch tag is a no-op at both layers") {
     val store = java.nio.file.Files.createTempDirectory("hllr").toString + "/st"
     val rows = (1 to 500).map(i => ("g", s"v$i")).toDF("g", "v")
-    Hll.registerStoreAppend(rows, store, HllStream.tagFor(0L), Seq("g"), "v", M)
+    Hll.registerStoreAppend(rows, store, Stores.batchTag(0L), Seq("g"), "v", M)
     val before = Hll.estimateFromStore(spark, store, Seq("g"), M)
       .select("est").as[Double].head()
     // marker layer: same tag, same data — no new rows land
     val files1 = spark.read.parquet(store).count()
-    Hll.registerStoreAppend(rows, store, HllStream.tagFor(0L), Seq("g"), "v", M)
+    Hll.registerStoreAppend(rows, store, Stores.batchTag(0L), Seq("g"), "v", M)
     assert(spark.read.parquet(store).count() === files1)
     // algebra layer: even a FORCED duplicate post (new tag, same batch)
     // cannot move the estimate — max-merge idempotence
-    Hll.registerStoreAppend(rows, store, HllStream.tagFor(1L), Seq("g"), "v", M)
+    Hll.registerStoreAppend(rows, store, Stores.batchTag(1L), Seq("g"), "v", M)
     val after = Hll.estimateFromStore(spark, store, Seq("g"), M)
       .select("est").as[Double].head()
     assert(before === after)

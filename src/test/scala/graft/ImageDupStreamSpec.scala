@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.ops.Multimodal
-import graft.streaming.{ImageDupStream, SimHashStream}
+import graft.ops.{Multimodal, Stores}
+import graft.streaming.ImageDupStream
 
 /** The image modality's closed-loop streaming near-dup story: per-batch
   * emissions union to the one-shot [[graft.ops.Multimodal.imageNearDup]],
@@ -121,16 +121,16 @@ class ImageDupStreamSpec extends SparkTestBase {
     val b0 = Seq(1L -> imgA, 2L -> imgB).toDF("media_id", "content")
     val junk: Array[Byte] = "not an image".getBytes("UTF-8")
     val b1 = Seq(3L -> imgA2, 4L -> junk).toDF("media_id", "content")
-    val e0 = Multimodal.dhashStoreAppend(b0, store, SimHashStream.tagFor(0L))
+    val e0 = Multimodal.dhashStoreAppend(b0, store, Stores.batchTag(0L))
     assert(pairsOf(e0) === Set.empty[(Long, Long, Long)]); e0.unpersist()
-    val e1 = Multimodal.dhashStoreAppend(b1, store, SimHashStream.tagFor(1L))
+    val e1 = Multimodal.dhashStoreAppend(b1, store, Stores.batchTag(1L))
     assert(pairsOf(e1) === Set((1L, 3L, 1L)),
       "junk row contributes nothing; A2 pairs with the stored ramp")
     e1.unpersist()
     // replay of batch 1: append no-ops on the marker, the emission reads
     // strictly-earlier tags only -> identical pairs, store unchanged
     val rows = spark.read.parquet(store).count()
-    val e1r = Multimodal.dhashStoreAppend(b1, store, SimHashStream.tagFor(1L))
+    val e1r = Multimodal.dhashStoreAppend(b1, store, Stores.batchTag(1L))
     assert(pairsOf(e1r) === Set((1L, 3L, 1L))); e1r.unpersist()
     assert(spark.read.parquet(store).count() === rows,
       "redelivered batch must not double-append signatures")

@@ -70,7 +70,7 @@ class KsDriftStreamSpec extends SparkTestBase {
   test("strictly-before read: a replayed batch never grades against itself") {
     val store = java.nio.file.Files.createTempDirectory("ksd_replay")
       .toString + "/s"
-    def tag(i: Long) = graft.streaming.KsDriftStream.tagFor(i)
+    def tag(i: Long) = graft.ops.Stores.batchTag(i)
     Quantiles.storeAppend((0L until 10L).toDF("v"), store, tag(0), "v", 2L)
     // batch 1 (shifted) ALREADY folded in — the crash-before-checkpoint
     // state a restart replays from

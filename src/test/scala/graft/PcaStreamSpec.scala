@@ -4,8 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.ops.Pca
-import graft.streaming.PcaStream
+import graft.ops.{Pca, Stores}
+import graft.streaming.StoreLoop
 
 /** Streaming moments maintenance: per-batch append, replay safety,
   * and refit-from-store equivalence with the batch fit. */
@@ -22,9 +22,10 @@ class PcaStreamSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("pca_stream").toString
     val store = s"$dir/store"
     val mem = MemoryStream[(Long, Seq[Double])]
-    val q = PcaStream.selfMaintaining(
-        mem.toDF().toDF("vec_id", "embedding"), "embedding", dim = 64,
-        path = store)
+    val q = StoreLoop.writer(mem.toDF().toDF("vec_id", "embedding")) {
+        (batch, tag) => Pca.momentsStored(batch.sparkSession, batch,
+          "embedding", 64, store, batchTag = tag)
+      }((_, _) => ())
       .option("checkpointLocation", s"$dir/ckpt")
       .start()
     try {
@@ -41,7 +42,7 @@ class PcaStreamSpec extends SparkTestBase {
       // a manual replay of batch 0's tag must be a no-op (marker)
       Pca.momentsStored(spark,
         half1.toSeq.toDF("vec_id", "embedding"), "embedding", 64,
-        store, batchTag = "batch_0")
+        store, batchTag = Stores.batchTag(0L))
       val (n3, _, _) = Pca.momentsOfStore(spark, store, 64)
       assert(n3 === emb.length, "replayed batch must not double-count")
 

@@ -91,8 +91,8 @@ class ProfileSpec extends SparkTestBase {
     val store = java.nio.file.Files.createTempDirectory("fds").toString + "/st"
     val mem = MemoryStream[(String, String)]
     val confs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val q = graft.streaming.FdStream.selfMaintaining(
-        mem.toDF().toDF("d", "p"), store, "d", "p") { _ =>
+    val q = graft.streaming.StoreLoop.writer(mem.toDF().toDF("d", "p"))(
+        Profile.fdStoreAppend(_, store, _, "d", "p")) { (_, _) =>
         confs += Profile.fdFromStore(spark, store, "d", "p")
           .collect().head.getAs[Double]("conf")
       }

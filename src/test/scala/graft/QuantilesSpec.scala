@@ -112,8 +112,8 @@ class QuantilesSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val store = java.nio.file.Files.createTempDirectory("hq_s").toString + "/st"
     val mem = MemoryStream[Long]
-    val q = graft.streaming.QuantileStream.selfMaintaining(
-        mem.toDF().toDF("v"), store, "v", 10L)()
+    val q = graft.streaming.StoreLoop.writer(mem.toDF().toDF("v"))(
+        Quantiles.storeAppend(_, store, _, "v", 10L))((_, _) => ())
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("hq_ck").toString)
       .start()
@@ -200,9 +200,12 @@ class QuantilesSpec extends SparkTestBase {
     val store = java.nio.file.Files.createTempDirectory("hby_s").toString + "/st"
     val mem = MemoryStream[(String, Long)]
     val flagged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.QuantileStream.selfMaintainingBy(
-        mem.toDF().toDF("grp", "v"), store, Seq("grp"), "v", 4L) {
-        (batch, _) =>
+    val q = graft.streaming.StoreLoop.writer(mem.toDF().toDF("grp", "v")) {
+        (batch, tag) =>
+          Quantiles.storeAppendBy(batch, store, tag, Seq("grp"), "v", 4L)
+          batch
+      } {
+        (_, batch) =>
           // flag THIS batch against fences learned from all-so-far
           val r = Quantiles.tukeyOutliersFromStore(batch, store,
             Seq("grp"), "v", 4L).collect().head

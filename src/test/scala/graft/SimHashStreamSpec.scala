@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
+import graft.ops.Stores
 import graft.streaming.SimHashStream
 
 /** The SimHash family's closed-loop streaming story: per-batch
@@ -53,11 +54,11 @@ class SimHashStreamSpec extends SparkTestBase {
     // store rows carry the zero-padded batch tags in arrival order
     val tags = spark.read.parquet(store).select("tag").distinct()
       .as[String].collect().sorted.toSeq
-    assert(tags === Seq(SimHashStream.tagFor(0L), SimHashStream.tagFor(1L)))
+    assert(tags === Seq(Stores.batchTag(0L), Stores.batchTag(1L)))
   }
 
   test("zero-padded tags keep lexicographic order past ten batches") {
-    assert(SimHashStream.tagFor(9L) < SimHashStream.tagFor(10L),
+    assert(Stores.batchTag(9L) < Stores.batchTag(10L),
       "bare ids would sort batch_10 < batch_9 and break the earlier-tag cut")
   }
 

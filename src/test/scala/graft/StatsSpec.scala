@@ -664,10 +664,11 @@ class StatsSpec extends SparkTestBase {
     val ckpt = java.nio.file.Files.createTempDirectory("boot_ck").toString
     val mem = MemoryStream[(Long, Long)]
     val reads = scala.collection.mutable.Map.empty[Long, org.apache.spark.sql.Row]
-    val q = graft.streaming.BootstrapStream.selfMaintaining(
-        mem.toDF().toDF("id", "v"), store, "id", "v",
-        replicates = 8, salt = "s2")(
-        Some((bid, r) => { reads(bid) = r; () }))
+    val q = graft.streaming.StoreLoop.writer(mem.toDF().toDF("id", "v"))(
+        Stats.bootstrapStoreAppend(_, store, _, "id", "v",
+          replicates = 8, salt = "s2")) {
+        (bid, _) => reads(bid) = Stats.bootstrapFromStore(spark, store).collect().head
+      }
       .option("checkpointLocation", ckpt).start()
     mem.addData((1L to 100L).map(i => (i, 5L)): _*)
     q.processAllAvailable()

@@ -111,8 +111,8 @@ class TrendSpec extends SparkTestBase {
     val store = java.nio.file.Files.createTempDirectory("seass").toString + "/st"
     val mem = MemoryStream[(String, Long, Long)]
     val peaks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = graft.streaming.SeasonalStream.selfMaintaining(
-        mem.toDF().toDF("grp", "x", "y"), store, Seq("grp"), "x", "y", 3) { _ =>
+    val q = graft.streaming.StoreLoop.writer(mem.toDF().toDF("grp", "x", "y"))(
+        Trend.seasonalStoreAppend(_, store, _, Seq("grp"), "x", "y", 3)) { (_, _) =>
         peaks += Trend.seasonalFromStore(spark, store, Seq("grp"))
           .collect().head.getAs[Long]("peak_pos")
       }
@@ -172,8 +172,8 @@ class TrendSpec extends SparkTestBase {
     val ckpt = java.nio.file.Files.createTempDirectory("cusum_ck").toString
     val mem = MemoryStream[(String, Long)]
     val alarmsAt = scala.collection.mutable.Map.empty[Long, Boolean]
-    val q = graft.streaming.DecayStream.selfMaintaining(
-        mem.toDF().toDF("g", "ts"), store, Seq("g"), "ts", 10L) { bid =>
+    val q = graft.streaming.StoreLoop.writer(mem.toDF().toDF("g", "ts"))(
+        graft.ops.Decay.storeAppend(_, store, _, Seq("g"), "ts", 10L)) { (bid, _) =>
         alarmsAt(bid) = graft.ops.Trend
           .cusumFromStore(spark, store, Seq("g"), allowance = 2L, threshold = 6L)
           .agg(max(when(col("alarm"), 1).otherwise(0))).head.getInt(0) == 1
