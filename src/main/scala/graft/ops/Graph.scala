@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics over plain edge lists.
@@ -28,23 +28,66 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  private val Lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
   /** Deterministically release the block-manager storage behind a
     * `localCheckpoint(true)`'d ROUND frame once the loop no longer
     * reads it. `Dataset.unpersist` and `spark.catalog.clearCache` both
     * operate on the CACHE MANAGER and do NOT free RDD-level local-
     * checkpoint blocks — without this, every iterative loop's storage
     * footprint grows with the round count until JVM GC + ContextCleaner
-    * happen to reclaim the unreferenced RDDs. A frame that was never
-    * checkpointed has no `LogicalRDD` leaf and the call is a no-op, so
-    * the loops may pass their round-0 (persisted or projected) state
-    * through the same release point. */
+    * happen to reclaim the unreferenced RDDs.
+    *
+    * Only the analyzed plan's ROOT is inspected: a checkpointed round
+    * frame IS a `LogicalRDD` root, while a round-0 state (persisted or
+    * projected) has some other root and the call is a no-op. Walking
+    * the whole plan would follow a round-0 state's lineage into the
+    * caller's input and drop a `localCheckpoint`ed edge frame the
+    * caller still reads (GraphSpec's release test). */
   private def releaseCheckpoint(df: DataFrame): Unit =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.analyzed.foreach {
+      .queryExecution.analyzed match {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
           l.rdd.unpersist(false)
         case _ => ()
       }
+
+  /** The round scaffold of the fixed-count loops: each round pins
+    * `step(round, state)` behind `localCheckpoint(true)`, then releases
+    * the previous state (its blocks are dead once the successor is
+    * materialized). Checkpoint per round, NOT persist: each round's plan
+    * nests the previous round's, and the cache substitutes only AFTER
+    * the whole grown tree is re-analyzed — driver planning cost
+    * quadratic in rounds (measured at sf0.1: iters=8 cost 9× iters=2
+    * under persist; linear with checkpoints, BENCH_NOTES r15). The final
+    * state stays checkpointed: the CALLER owns releasing it (or Verify's
+    * between-query clearCache) — the bm25TopK/tokenTable convention. */
+  private def iterate(init: DataFrame, rounds: Int)
+                     (step: (Int, DataFrame) => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(init) { (state, round) =>
+      val next = step(round, state).localCheckpoint(true)
+      releaseCheckpoint(state)
+      next
+    }
+
+  /** The (src, dst) edge relation a loop iterates over, unpinned (the
+    * caller persists or checkpoints it). `symmetric` reads the input as
+    * UNDIRECTED: both directions are unioned in and self loops dropped.
+    * `prepared` is the caller's construction guarantee that the input
+    * already has that shape — duplicate-free, and for `symmetric` both
+    * directions exactly once with no self loops ([[copurchaseEdges]]'
+    * contract) — so the dedup exchange is the identity and is skipped
+    * (optimization r16, guide §2.4: "a distinct on data that is already
+    * unique"). Results are identical when the guarantee holds. */
+  private def edgeList(edges: DataFrame, srcCol: String, dstCol: String,
+                       prepared: Boolean, symmetric: Boolean = false): DataFrame = {
+    val dir = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    if (prepared) dir
+    else if (symmetric)
+      dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
+        .filter(col("src") =!= col("dst")).distinct()
+    else dir.distinct()
+  }
 
   private val BroadcastStateRows = "spark.graft.broadcastStateRows"
 
@@ -120,114 +163,112 @@ object Graph {
     // The raw edge list feeds the degree table and the loop relation —
     // persist it so an expensive upstream lineage (e.g. the co-purchase
     // pair build) runs ONCE, not once per branch.
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (edgesDistinct) e0 else e0.distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("long").as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = edgeList(edges, srcCol, dstCol, edgesDistinct).persist(Lvl)
+    // out-degree: the per-source weight total `sw` at w = 1
+    val deg = e.groupBy("src").agg(count(lit(1)).cast("long").as("sw"))
+      .persist(Lvl)
     // Without dangling handling, deg doubles as the NODE SET (its keys
     // are the distinct sources — every node, under the out-degree>=1
     // invariant); with it, sinks appear only as destinations and the
     // node set is the union of both sides.
-    val nodes0 =
-      if (!dangling) deg.select(col("src").as("node"))
+    val nodes = (if (!dangling) deg.select(col("src").as("node"))
       else e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-    val nodes = nodes0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .union(e.select(col("dst").as("node"))).distinct())
+      .persist(Lvl)
     val n = nodes.count() // one driver scalar (node count), not row data
     // out-degree-0 nodes: their whole rank is redistributed each round.
     // Node-sized, loop-invariant — persist once.
-    val sinks =
-      if (!dangling) null
-      else nodes.join(deg.withColumnRenamed("src", "node"), Seq("node"),
-          "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // (src, dst, deg) is the loop-invariant relation: persist once, reuse
-    // every iteration (re-shuffling |E| per iteration is the naive cost).
-    // Materialized by iteration 1's action — no dedicated warm-up job.
-    val eDeg = e.join(deg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val base = (1.0 - damping) / n
+    val sinks = Option.when(dangling)(nodes
+      .join(deg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
+      .persist(Lvl))
+    val ranks = powerIteration(e, deg, lit(1L),
+      nodes.select(col("node"), lit((1.0 - damping) / n).as("base")), n,
+      nodes.withColumn("rank", lit(1.0 / n)), iters, damping, sinks)
+    deg.unpersist(); nodes.unpersist(); sinks.foreach(_.unpersist())
+    ranks
+  }
 
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    for (it <- 1 to iters) {
-      val contribs = eDeg
-        // node-sized rank state (n rows, counted): broadcast under the
-        // gate so the persisted |E| relation streams from cache with no
-        // per-round exchange/sort (optimization r17, bcastIfSmall note)
+  /** The power-iteration loop shared by [[pageRank]],
+    * [[personalizedPageRank]] and [[pageRankWeighted]]: `iters` rounds of
+    *
+    *   rank(v) = base(v) + d · (Σ_{u→v} floor(rank(u)·w/sw(u)·1e18) + dshare) / 1e18
+    *
+    * Each round is exactly one join of the cached |E| relation against
+    * the rank state plus one aggregation by dst — never a cartesian,
+    * never driver-side iteration over nodes. The per-edge share
+    * rank·w/sw is the identical IEEE expression in any engine (with
+    * w = 1 it is bit-identical to rank/deg), and the inbound mass sums
+    * in fixed-point longs (floor(x·1e18) — per-node mass ≤ total mass 1,
+    * so the scaled sum fits a long; long sums codegen far faster than
+    * Decimal128), so the ranks are order-free exact: bit-identical across
+    * partitionings, engines, and retries.
+    *
+    * @param e     persisted edge relation (src, dst[, w]). The loop-
+    *              invariant relation e ⋈ sw is persisted once and reused by
+    *              every round; round 1 materializes it, after which `e`
+    *              is dropped.
+    * @param sw    persisted per-source weight total (src, sw)
+    * @param w     the per-edge weight: a column of `e`, or lit(1)
+    * @param reset (node, base) over the FULL node set of `n` rows. Every
+    *              round left-joins the inbound mass onto it, so a
+    *              zero-in-degree node keeps its row (and its reset mass),
+    *              and its out-edges keep contributing next round.
+    * @param sinks pageRank's dangling mode: the out-degree-0 nodes, whose
+    *              whole rank is redistributed uniformly each round
+    */
+  private def powerIteration(e: DataFrame, sw: DataFrame, w: Column,
+                             reset: DataFrame, n: Long, init: DataFrame,
+                             iters: Int, damping: Double,
+                             sinks: Option[DataFrame]): DataFrame = {
+    val eW = e.join(sw, "src").persist(Lvl)
+    val ranks = iterate(init, iters) { (round, ranks) =>
+      if (round == 2) e.unpersist() // eW is cached now; drop its input
+      // node-sized rank state (n rows, counted): broadcast under the
+      // gate so the persisted |E| relation streams from cache with no
+      // per-round exchange/sort (optimization r17, bcastIfSmall note)
+      val inMass = bcastIfSmall(eW
         .join(bcastIfSmall(ranks.withColumnRenamed("node", "src"), n), "src")
         .select(col("dst").as("node"),
-          // order-free exact inbound mass: fixed-point LONG partial
-          // aggregates (floor(x·1e18) — deterministic IEEE both engines;
-          // per-node mass ≤ total mass 1, so the scaled sum fits a long;
-          // long sums codegen far faster than Decimal128)
-          floor((col("rank") / col("deg")) * lit(1e18)).cast("long").as("c"))
-      val inMass = bcastIfSmall(
-        contribs.groupBy("node").agg(sum(col("c")).as("in_mass")), n)
+          floor(col("rank") * w / col("sw") * lit(1e18)).cast("long").as("c"))
+        .groupBy("node").agg(sum(col("c")).as("in_mass")), n)
+      val joined = reset.join(inMass, Seq("node"), "left")
       // dangling mode: per-node share of the sink mass = integer
       // floor(dm / n) on the same fixed-point grid (1-row aggregate,
       // broadcast by the cross join — never a driver-side collect)
-      val joined =
-        if (!dangling) nodes.join(inMass, Seq("node"), "left")
-        else nodes.join(inMass, Seq("node"), "left").crossJoin(
-          ranks.join(sinks, Seq("node"))
-            .agg(coalesce(sum(floor(col("rank") * lit(1e18)).cast("long")),
-              lit(0L)).as("dm"))
-            // integer div, NOT floor(double /): dm ≈ 1e18 exceeds 2^53,
-            // so double division would round the share off the grid
-            .select(expr(s"dm div ${n}L").cast("long").as("dshare")))
-      // left join onto the FULL node set: a zero-in-degree node keeps its
-      // row (in_mass 0), so its out-edges keep contributing next round
-      val next = joined
-        .select(col("node"),
-          (lit(base) + lit(damping) *
-            ((coalesce(col("in_mass"), lit(0L)) +
-              (if (dangling) col("dshare") else lit(0L))).cast("double") /
-              lit(1e18))).as("rank"))
-        // localCheckpoint per round, NOT persist (the kCore lineage
-        // discipline): each round's plan nests the previous round's,
-        // and the cache substitutes only AFTER the whole grown tree is
-        // re-analyzed — driver planning cost quadratic in rounds
-        // (measured at sf0.1: iters=8 cost 9× iters=2 under persist;
-        // linear after this change, GraphProbe/BENCH_NOTES r15).
-        // Checkpointing pins the round behind a leaf plan.
-        .localCheckpoint(true)
-      if (it == 1) e.unpersist() // eDeg is cached now; drop its input
-      releaseCheckpoint(ranks) // prev round's blocks (no-op on round 0)
-      ranks = next
+      val (shared, dshare) = sinks.fold((joined, lit(0L))) { s =>
+        (joined.crossJoin(ranks.join(s, Seq("node"))
+          .agg(coalesce(sum(floor(col("rank") * lit(1e18)).cast("long")),
+            lit(0L)).as("dm"))
+          // integer div, NOT floor(double /): dm ≈ 1e18 exceeds 2^53,
+          // so double division would round the share off the grid
+          .select(expr(s"dm div ${n}L").cast("long").as("dshare"))),
+          col("dshare"))
+      }
+      shared.select(col("node"),
+        (col("base") + lit(damping) *
+          ((coalesce(col("in_mass"), lit(0L)) + dshare).cast("double") /
+            lit(1e18))).as("rank"))
     }
-    eDeg.unpersist()
-    deg.unpersist()
-    nodes.unpersist()
-    if (sinks != null) sinks.unpersist()
-    // the final iteration's ranks stay persisted (already materialized);
-    // the CALLER owns releasing them (or Verify's between-query
-    // clearCache) — the bm25TopK/tokenTable convention.
+    e.unpersist(); eW.unpersist()
     ranks
   }
 
   /** Personalized PageRank (Haveliwala 2002, "Topic-sensitive PageRank"):
     * the reset mass lands only on the SEED set, so rank concentrates in
     * the seeds' neighborhood — the "related items" / recommendation form
-    * of the centrality loop. Same execution shape as [[pageRank]] (one
-    * |E| shuffle-join + one aggregation per iteration, fixed-point long
-    * sums, loop-invariant relation persisted once); the per-node reset
-    * vector is a node-sized cached indicator joined after each
-    * aggregation. Seeds outside the node set are ignored.
+    * of the centrality loop. Same loop as [[pageRank]]
+    * ([[powerIteration]]); the per-node reset vector is a node-sized
+    * cached indicator joined after each aggregation. Seeds outside the
+    * node set are ignored.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
                            iters: Int, damping: Double = 0.85,
                            edgesDistinct: Boolean = false): DataFrame = {
     require(iters >= 1, "personalizedPageRank needs at least one iteration")
-    // edgesDistinct: the pageRank precondition — input construction-
-    // guaranteed duplicate-free, dedup exchange skipped (r16)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (edgesDistinct) e0 else e0.distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("long").as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = edgeList(edges, srcCol, dstCol, edgesDistinct).persist(Lvl)
+    val deg = e.groupBy("src").agg(count(lit(1)).cast("long").as("sw"))
+      .persist(Lvl)
     val nodes = deg.select(col("src").as("node"))
     // node-sized seed indicator; ONE materializing action serves both the
     // seed count and the loop's reset joins (node ∈ seeds ⇔ s non-null —
@@ -236,47 +277,19 @@ object Graph {
       .join(seeds.select(col(seedCol).as("node")).distinct()
         .withColumn("s", lit(1)), Seq("node"), "left")
       .select(col("node"), col("s").isNotNull.as("is_seed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     val nS = reset.filter(col("is_seed")).count()
     require(nS > 0, "no seed intersects the node set")
     // node count off the already-materialized node-sized cache (one
-    // cached-block scan) — it gates the loop-state broadcasts below
+    // cached-block scan) — it gates the loop-state broadcasts
     val nN = reset.count()
-    val base = (1.0 - damping) / nS
-    val baseDf = reset.select(col("node"),
-      when(col("is_seed"), lit(base)).otherwise(lit(0.0)).as("base"))
-    val eDeg = e.join(deg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var ranks = reset.select(col("node"),
-      when(col("is_seed"), lit(1.0 / nS)).otherwise(lit(0.0)).as("rank"))
-    for (it <- 1 to iters) {
-      val contribs = eDeg
-        // node-sized rank state: broadcast under the gate — no per-round
-        // exchange of the persisted |E| relation (optimization r17)
-        .join(bcastIfSmall(ranks.withColumnRenamed("node", "src"), nN), "src")
-        .select(col("dst").as("node"),
-          floor((col("rank") / col("deg")) * lit(1e18)).cast("long").as("c"))
-      val inMass = bcastIfSmall(
-        contribs.groupBy("node").agg(sum(col("c")).as("in_mass")), nN)
-      // left join onto the FULL node set (baseDf covers every node): a
-      // zero-in-degree node keeps its row and reset mass, so its
-      // out-edges keep contributing next round — same contract as
-      // pageRank's node-set left join
-      val next = baseDf.join(inMass, Seq("node"), "left")
-        .select(col("node"),
-          (col("base") + lit(damping) *
-            (coalesce(col("in_mass"), lit(0L)).cast("double") /
-              lit(1e18))).as("rank"))
-        // localCheckpoint per round, NOT persist — the pageRank/kCore
-        // lineage discipline (quadratic driver planning otherwise)
-        .localCheckpoint(true)
-      if (it == 1) e.unpersist()
-      releaseCheckpoint(ranks) // prev round's blocks (no-op on round 0)
-      ranks = next
-    }
-    eDeg.unpersist(); deg.unpersist(); reset.unpersist()
-    // final ranks stay checkpointed; caller/clearCache owns release
+    val ranks = powerIteration(e, deg, lit(1L),
+      reset.select(col("node"), when(col("is_seed"), lit((1.0 - damping) / nS))
+        .otherwise(lit(0.0)).as("base")), nN,
+      reset.select(col("node"),
+        when(col("is_seed"), lit(1.0 / nS)).otherwise(lit(0.0)).as("rank")),
+      iters, damping, None)
+    deg.unpersist(); reset.unpersist()
     ranks
   }
 
@@ -308,14 +321,10 @@ object Graph {
                      edgesDistinct: Boolean = false): DataFrame = {
     require(iters >= 1 && alphaInv >= 2 && (alphaInv & (alphaInv - 1)) == 0,
       "alphaInv must be a power of two (dyadic α keeps sums exact)")
-    // edgesDistinct: the pageRank precondition — input construction-
-    // guaranteed duplicate-free, dedup exchange skipped (r16)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (edgesDistinct) e0 else e0.distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = edgeList(edges, srcCol, dstCol, edgesDistinct).persist(Lvl)
     val indeg = e.groupBy(col("dst").as("node"))
       .agg(count(lit(1)).cast("long").as("indeg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     // grid-exactness guard: every partial sum at hop m is an integer
     // multiple of alphaInv^-m bounded by Σ_{k≤m} maxdeg^k·alphaInv^(m-k)
     // ≤ m·max(maxdeg, alphaInv)^m; checked in log2 so the check itself
@@ -327,29 +336,23 @@ object Graph {
       s"katzCentrality: iters=$iters over max in-degree $maxDeg exceeds the " +
         s"2^53 dyadic grid (bound 2^${log2Bound.ceil.toInt}); lower iters " +
         "or raise alphaInv")
-    var ranks = indeg
+    val x1 = indeg
       .select(col("node"),
         (col("indeg").cast("double") / lit(alphaInv)).as("x")) // α·indeg
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nN = ranks.count() // node count — gates the state broadcasts (r17)
+      .persist(Lvl)
+    val nN = x1.count() // node count — gates the state broadcasts (r17)
     indeg.unpersist()
-    for (_ <- 2 to iters) {
-      // LEFT join: an in-neighbor with no x row (zero in-degree) still
-      // contributes its +1 walk — x_m = α·Σ_in (1 + x_{m-1}) exactly.
-      // Node-sized x state broadcast under the gate: the persisted |E|
-      // relation streams with no per-hop exchange (optimization r17)
-      val next = e.join(bcastIfSmall(ranks.withColumnRenamed("node", "src"), nN),
+    // hops 2..iters. LEFT join: an in-neighbor with no x row (zero
+    // in-degree) still contributes its +1 walk — x_m = α·Σ_in (1 +
+    // x_{m-1}) exactly. Node-sized x state broadcast under the gate: the
+    // persisted |E| relation streams with no per-hop exchange (r17)
+    val ranks = iterate(x1, iters - 1) { (_, x) =>
+      e.join(bcastIfSmall(x.withColumnRenamed("node", "src"), nN),
           Seq("src"), "left")
         .groupBy(col("dst").as("node"))
         .agg((sum(lit(1.0) + coalesce(col("x"), lit(0.0))) / lit(alphaInv)).as("x"))
-        // localCheckpoint per round, NOT persist — the pageRank/kCore
-        // lineage discipline (quadratic driver planning otherwise)
-        .localCheckpoint(true)
-      releaseCheckpoint(ranks) // prev round's blocks (no-op on round 0)
-      ranks = next
     }
     e.unpersist()
-    // final frame stays checkpointed; caller/clearCache owns release
     ranks
   }
 
@@ -398,11 +401,11 @@ object Graph {
           greatest(col(srcCol), col(dstCol)).as("b"))
         .filter(col("a") =!= col("b"))
         .distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     val deg = e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).cast("long").as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     // orientation by (deg, id): u -> v iff (deg_u, u) < (deg_v, v);
     // carry dv so the wedge join can order its two far endpoints the
     // same way without a third degree join
@@ -417,7 +420,7 @@ object Graph {
           (col("da") === col("db") && col("a") < col("b")), col("b"))
           .otherwise(col("a")).as("v"),
         greatest(col("da"), col("db")).as("dv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     // wedges rooted at u, far endpoints ordered by the SAME (deg, id)
     // order the orientation uses — the closing edge is then oriented
     // x -> y by construction, so one equi-join against o closes it
@@ -470,14 +473,10 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int, edgesDistinct: Boolean = false): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
-    // edgesDistinct: the pageRank precondition — input construction-
-    // guaranteed duplicate-free, dedup exchange skipped (r16)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (edgesDistinct) e0 else e0.distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = edgeList(edges, srcCol, dstCol, edgesDistinct).persist(Lvl)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     val n = nodes.count()
     val maxIn = e.groupBy("dst").agg(count(lit(1)).as("c"))
       .agg(max(col("c"))).head().getLong(0)
@@ -488,18 +487,19 @@ object Graph {
     require(log2Bound < 53.0,
       s"hits: $iters iterations over maxInDeg=$maxIn × maxOutDeg=$maxOut " +
         s"exceeds the exact-long bound (2^${log2Bound.ceil.toInt}); lower iters")
-    var hub = nodes.withColumn("h", lit(1L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var hub = nodes.withColumn("h", lit(1L)).persist(Lvl)
     var auth: DataFrame = null
+    // hand-written, not [[iterate]]: a round checkpoints TWO frames (auth,
+    // then hub from it) and releases the previous round's pair
     for (_ <- 1 to iters) {
       // full-node-set left joins: a node with no in-edges keeps an
       // auth row of 0 (and symmetrically for hubs) — the pageRank
       // row-keep contract, so the output is one row per node.
-      // localCheckpoint per half-round, NOT persist — the pageRank/
-      // kCore lineage discipline (quadratic driver planning otherwise)
-      // node-sized score state broadcast under the gate (n counted):
-      // neither half-round exchanges the persisted |E| relation, and the
-      // node-set left joins build from the n-row aggregate (r17)
+      // localCheckpoint per half-round, NOT persist (the [[iterate]]
+      // lineage note). Node-sized score state broadcast under the gate
+      // (n counted): neither half-round exchanges the persisted |E|
+      // relation, and the node-set left joins build from the n-row
+      // aggregate (r17)
       val a = nodes.join(bcastIfSmall(
           e.join(bcastIfSmall(hub.withColumnRenamed("node", "src"), n), "src")
             .groupBy(col("dst").as("node")).agg(sum(col("h")).as("s")), n),
@@ -556,25 +556,16 @@ object Graph {
                        iters: Int,
                        symmetricDistinct: Boolean = false): DataFrame = {
     require(iters >= 1, "labelPropagation needs at least one iteration")
-    // symmetricDistinct: input construction-guaranteed to already hold
-    // both directions exactly once, no self loops ([[copurchaseEdges]]'
-    // contract) — the symmetrize-union + dedup exchange over 4|E| rows
-    // is then the identity and is skipped (optimization r16). Results
-    // identical when the guarantee holds.
-    val dir = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (symmetricDistinct) dir
-      else dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
-        .filter(col("src") =!= col("dst")).distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = edgeList(edges, srcCol, dstCol, symmetricDistinct,
+      symmetric = true).persist(Lvl)
+    val nodes = e.select(col("src").as("node")).distinct().persist(Lvl)
     // node count off the node-sized cache — gates the label-state
     // broadcasts below (optimization r17, bcastIfSmall note)
     val nN = nodes.count()
     // init labels: a cheap projection of the cached node set — round 1
     // reads it once, the per-round checkpoints own everything after
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (it <- 1 to iters) {
+    val labels = iterate(nodes.select(col("node"), col("node").as("label")),
+        iters) { (_, labels) =>
       // node-sized label state broadcast under the gate: the persisted
       // |E| relation streams from cache with no per-round exchange (r17)
       val counts = e.join(
@@ -589,27 +580,15 @@ object Graph {
       val top = bcastIfSmall(counts.groupBy(col("node"))
         .agg(max_by(col("label"),
           struct(col("cnt"), (-col("label")).as("nl"))).as("label")), nN)
-      val next = nodes.join(top, Seq("node"), "left")
+      nodes.join(top, Seq("node"), "left")
         // isolated node (no in-rows after symmetrization can only mean
         // no neighbors at all): keeps its own id as label
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-        // localCheckpoint per round, NOT persist — the pageRank/kCore
-        // lineage discipline (quadratic driver planning otherwise)
-        .localCheckpoint(true)
-      releaseCheckpoint(labels) // prev round's blocks (no-op on round 0)
-      labels = next
     }
     e.unpersist(); nodes.unpersist()
-    // final labels stay checkpointed; caller/clearCache owns release
     labels
   }
 
-  /** Co-purchase edge list from (basket, item) rows: undirected item pairs
-    * that share a basket, emitted in BOTH directions, with the same
-    * min-item-support prefilter as Baskets.frequentPairs so the per-basket
-    * pair blow-up is bounded by frequent items only (the df-cap pattern —
-    * rare long-tail items never enter the quadratic step).
-    */
   /** WEIGHTED PageRank over a directed edge list with a positive weight
     * column: each node distributes its rank proportionally to edge
     * weight — contribution = rank · w / Σ_out w — instead of uniformly
@@ -617,10 +596,10 @@ object Graph {
     * baskets should carry 40× the endorsement of a one-off). Same loop
     * shape, exactness discipline (fixed-point long partial sums over
     * floor(rank·w/sw·1e18) — the per-edge scalar is identical IEEE
-    * arithmetic in any engine), per-iteration persist/release, and
-    * keep-every-node-row left join as [[pageRank]]; non-dangling mode
-    * only (every node must appear as a source — the undirected
-    * both-directions invariant).
+    * arithmetic in any engine), per-round checkpoint/release, and
+    * keep-every-node-row left join as [[pageRank]] — the same
+    * [[powerIteration]]; non-dangling mode only (every node must appear
+    * as a source — the undirected both-directions invariant).
     *
     * @param edges (srcCol, dstCol, weightCol) — parallel edges should be
     *              pre-aggregated (duplicates are NOT collapsed here;
@@ -632,37 +611,15 @@ object Graph {
                        weightCol: String, iters: Int,
                        damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "pageRankWeighted needs at least one iteration")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("long").as("w")).persist(lvl)
-    val sw = e.groupBy("src").agg(sum(col("w")).as("sw")).persist(lvl)
-    val nodes = sw.select(col("src").as("node")).persist(lvl)
+      col(weightCol).cast("long").as("w")).persist(Lvl)
+    val sw = e.groupBy("src").agg(sum(col("w")).as("sw")).persist(Lvl)
+    val nodes = sw.select(col("src").as("node")).persist(Lvl)
     val n = nodes.count()
-    val eW = e.join(sw, "src").persist(lvl)
-    val base = (1.0 - damping) / n
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    for (it <- 1 to iters) {
-      // node-sized rank state broadcast under the gate (n counted): no
-      // per-round exchange of the persisted |E| relation (r17)
-      val inMass = bcastIfSmall(eW
-        .join(bcastIfSmall(ranks.withColumnRenamed("node", "src"), n), "src")
-        .select(col("dst").as("node"),
-          floor(col("rank") * col("w") / col("sw") * lit(1e18))
-            .cast("long").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("in_mass")), n)
-      val next = nodes.join(inMass, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + lit(damping) *
-            (coalesce(col("in_mass"), lit(0L)).cast("double") / lit(1e18)))
-            .as("rank"))
-        // localCheckpoint per round, NOT persist — the pageRank/kCore
-        // lineage discipline (quadratic driver planning otherwise)
-        .localCheckpoint(true)
-      if (it == 1) e.unpersist()
-      releaseCheckpoint(ranks) // prev round's blocks (no-op on round 0)
-      ranks = next
-    }
-    eW.unpersist(); sw.unpersist(); nodes.unpersist()
+    val ranks = powerIteration(e, sw, col("w"),
+      nodes.select(col("node"), lit((1.0 - damping) / n).as("base")), n,
+      nodes.withColumn("rank", lit(1.0 / n)), iters, damping, None)
+    sw.unpersist(); nodes.unpersist()
     ranks
   }
 
@@ -706,21 +663,17 @@ object Graph {
             symmetricDistinct: Boolean = false): DataFrame = {
     require(k >= 1, "kCore needs k >= 1")
     require(maxRounds >= 1, "kCore needs maxRounds >= 1")
-    val dir = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // localCheckpoint per round, NOT persist (the duplicateClusters
     // discipline): each round reads `cur` three times (degree agg + both
     // semi joins), so an un-truncated lineage TRIPLES the logical plan
     // every round and the plan string itself OOMs the driver long before
     // the data is large — checkpointing pins the round's edges as cached
-    // blocks behind a leaf plan.
-    // symmetricDistinct: the labelPropagation precondition — input
-    // already both-directions + distinct + no self loops, so the
-    // symmetrize-union + dedup exchange is the identity and is skipped
-    // (optimization r16); round 0 still checkpoints for the loop reads.
-    var cur = (if (symmetricDistinct) dir
-      else dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
-        .filter(col("src") =!= col("dst")).distinct())
-      .localCheckpoint(true)
+    // blocks behind a leaf plan. Round 0 checkpoints too, also when
+    // symmetricDistinct skips the symmetrize-union + dedup exchange.
+    // Hand-written, not [[iterate]]: the round count is a fixpoint, and
+    // the converged round releases its own (unchanged) successor.
+    var cur = edgeList(edges, srcCol, dstCol, symmetricDistinct,
+      symmetric = true).localCheckpoint(true)
     // convergence on EDGE count, not a distinct node count: removing any
     // node removes >= 1 of its edges (every cur node has degree >= 1 by
     // construction), so edge-count equality <=> node-set equality — and
@@ -762,26 +715,71 @@ object Graph {
     out
   }
 
-  /** Seed-truncated harmonic centrality (Boldi & Vigna 2014, "Axioms
-    * for centrality" — harmonic is the closeness variant that handles
-    * disconnection): for every node, Σ_{s ∈ seeds} 1/d(s, node) over
-    * the seeds that reach it within `maxHops` — computed by one
-    * MULTI-SOURCE BFS carrying (seed, node) state, the exact truncated
-    * form of the sketch-based estimators (HyperBall) used when the seed
-    * set is the whole graph. Distances follow edge direction; pass a
-    * symmetrized edge list for the undirected reading.
+  /** The multi-source BFS shared by [[harmonicCentrality]] and the
+    * forward pass of [[betweennessSeeded]]. Seeds are first restricted
+    * to graph nodes (sources of `e`), so a superset seed source gives
+    * the same result (the personalizedPageRank contract). Level t holds
+    * the (seed, node) pairs FIRST reached at hop t; with `pathCounts`
+    * each level also carries sig = the number of shortest seed→node
+    * paths (exact longs, order-free integer sums over the previous
+    * level).
     *
-    * Scale: hop t joins the (seed, node) frontier — ≤ |seeds|·|V| rows,
-    * the explicit state bound — against the edge list once, then
-    * anti-joins the reached set; |seeds| is the caller's lever (this is
-    * the landmark/pivot form of centrality estimation — exact per
-    * seed, sampled over sources). Each hop's reached set is
-    * `localCheckpoint`ed (the kCore lineage discipline).
+    * Each hop joins the previous level against the persisted edge
+    * relation once, aggregates, anti-joins the cumulative reached set,
+    * and checkpoints the new level. Every level is materialized eagerly
+    * anyway, so its row count is one cached-block scan — those measured
+    * counts gate the state broadcasts (optimization r17, bcastIfSmall):
+    * under the gate the hop join streams the persisted edge relation
+    * with NO per-hop exchange of e, and the anti-join builds from the
+    * reached set instead of exchanging the hop's aggregate output.
     *
-    * @return (node, hops × count columns n1..n`maxHops`, harmonic) for
-    *         nodes reached by ≥ 1 seed in 1..maxHops hops; the
-    *         harmonic sum folds n1/1 + n2/2 + … in fixed hop order
+    * The reached set only feeds the NEXT hop's anti-join: it grows by
+    * each level except on the last hop, where the (seed, node)-sized
+    * union + checkpoint would be dead work (optimization r16), and its
+    * previous blocks are released once the successor is materialized.
+    * The levels themselves are never released here: the callers read
+    * them lazily (level 0 is the reached set's round-0 frame when
+    * `pathCounts` is off, and is released with it).
+    *
+    * @return levels 0..maxHops and their row counts
     */
+  private def multiSourceBfs(e: DataFrame, seeds: DataFrame, seedCol: String,
+                             maxHops: Int, pathCounts: Boolean)
+      : (IndexedSeq[DataFrame], IndexedSeq[Long]) = {
+    val s0 = seeds.select(col(seedCol).as("seed")).distinct()
+      .join(e.select(col("src").as("seed")).distinct(), Seq("seed"), "left_semi")
+    var reached = s0.select(col("seed"), col("seed").as("node"))
+      .localCheckpoint(true)
+    val levels = scala.collection.mutable.ArrayBuffer(
+      if (!pathCounts) reached
+      else s0.select(col("seed"), col("seed").as("node"), lit(1L).as("sig"))
+        .localCheckpoint(true))
+    val sizes = scala.collection.mutable.ArrayBuffer(levels(0).count())
+    var reachedRows = sizes(0)
+    for (t <- 1 to maxHops) {
+      val hop = bcastIfSmall(levels(t - 1).withColumnRenamed("node", "src"),
+          sizes(t - 1))
+        .join(e, "src")
+      val next = (if (pathCounts)
+          hop.groupBy(col("seed"), col("dst").as("node"))
+            .agg(sum(col("sig")).as("sig"))
+        else hop.select(col("seed"), col("dst").as("node")).distinct())
+        .join(bcastIfSmall(reached, reachedRows), Seq("seed", "node"),
+          "left_anti")
+        .localCheckpoint(true)
+      levels += next
+      sizes += next.count()
+      if (t < maxHops) {
+        val grown = reached.unionAll(next.select("seed", "node"))
+          .localCheckpoint(true)
+        releaseCheckpoint(reached)
+        reached = grown
+        reachedRows += sizes(t)
+      } else releaseCheckpoint(reached)
+    }
+    (levels.toIndexedSeq, sizes.toIndexedSeq)
+  }
+
   /** Seed-sampled BETWEENNESS centrality (Brandes 2001, "A faster
     * algorithm for betweenness centrality"; sampled-source form per
     * Brandes & Pich 2007) truncated at `maxHops`: for every non-seed
@@ -805,7 +803,7 @@ object Graph {
     * oracle, and the final per-node betweenness is ONE division of an
     * exact long total — order-free, bit-replayable.
     *
-    * Scale: forward = harmonicCentrality's multi-source BFS carrying
+    * Scale: forward = harmonicCentrality's [[multiSourceBfs]] carrying
     * (seed, node, σ) state (≤ |seeds|·|V| rows, each hop one edge join
     * + one anti-join, per-level frames checkpointed); backward = one
     * (v, w) edge join + one (seed, w) equi-join + one hash aggregation
@@ -821,53 +819,11 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 8,
       s"maxHops in [1, 8] (levels are materialized), got $maxHops")
     val Q = 1073741824.0 // 2^30, the fixed-point scale
-    // edgesDistinct: the pageRank precondition — input construction-
-    // guaranteed duplicate-free, dedup exchange skipped (r16)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (edgesDistinct) e0 else e0.distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val s0 = seeds.select(col(seedCol).as("seed")).distinct()
-      .join(e.select(col("src").as("seed")).distinct(), Seq("seed"),
-        "left_semi")
+    val e = edgeList(edges, srcCol, dstCol, edgesDistinct).persist(Lvl)
     // forward: levels(t) = (seed, node, sig) of nodes FIRST reached at
-    // hop t; sig = number of shortest s→node paths (exact longs).
-    // Every level is materialized eagerly anyway (localCheckpoint), so
-    // its row count is one cached-block scan — those measured counts
-    // gate the state broadcasts below (optimization r17, bcastIfSmall):
-    // under the gate the hop join streams the persisted edge relation
-    // with NO per-hop exchange of e, and the anti-join builds from the
-    // reached set instead of exchanging the hop's aggregate output.
-    var reached = s0.select(col("seed"), col("seed").as("node"))
-      .localCheckpoint(true)
-    var level = s0.select(col("seed"), col("seed").as("node"),
-      lit(1L).as("sig")).localCheckpoint(true)
-    val levels = scala.collection.mutable.ArrayBuffer(level)
-    val sizes = scala.collection.mutable.ArrayBuffer(level.count())
-    var reachedRows = sizes(0)
-    (1 to maxHops).foreach { t =>
-      val next = bcastIfSmall(level.withColumnRenamed("node", "src"),
-          sizes(t - 1))
-        .join(e, "src")
-        .groupBy(col("seed"), col("dst").as("node"))
-        .agg(sum(col("sig")).as("sig"))
-        .join(bcastIfSmall(reached, reachedRows), Seq("seed", "node"),
-          "left_anti")
-        .localCheckpoint(true)
-      sizes += next.count()
-      // the cumulative reached set only feeds the NEXT hop's anti-join —
-      // on the final hop the (seed, node)-sized union + checkpoint is
-      // dead work and is skipped (optimization r16); its blocks release
-      // now (next is materialized, nothing else reads them)
-      if (t < maxHops) {
-        val grown = reached.unionAll(next.select("seed", "node"))
-          .localCheckpoint(true)
-        releaseCheckpoint(reached) // levels keep their own blocks
-        reached = grown
-        reachedRows += sizes(t)
-      } else releaseCheckpoint(reached)
-      level = next
-      levels += next
-    }
+    // hop t; sig = number of shortest s→node paths (exact longs)
+    val (levels, sizes) =
+      multiSourceBfs(e, seeds, seedCol, maxHops, pathCounts = true)
     // deepest non-empty level index (driver-side level sizes — L ≤ 8
     // model-sized counts gathered during the loop, not row data)
     val lMax = sizes.lastIndexWhere(_ > 0L)
@@ -875,7 +831,7 @@ object Graph {
     // no non-seed node exists, the result is the empty frame
     if (lMax < 1) {
       e.unpersist()
-      return s0.limit(0).select(col("seed").as("node"),
+      return levels(0).limit(0).select(col("node"),
         lit(0.0).as("betweenness"))
     }
     // backward: delta(t) = (seed, node, sig, num) with δ = num / 2^30.
@@ -885,12 +841,15 @@ object Graph {
     // successor join, quantized partial aggregation — runs MAP-SIDE over
     // the persisted edge relation in one codegen stage; the un-hinted
     // plan exchanged the Σdeg(level)-row join stream by (seed, w) every
-    // level, the single heaviest shuffle of the query (optimization r17,
-    // measured: BwProbe bwd_level1 4.4 s → the exchange was ~3 M rows).
+    // level, the single heaviest shuffle of the query (optimization r17:
+    // ~3 M rows in the 4.4 s level-1 stage at sf0.1, BENCH_NOTES "Graph
+    // probe mains retired").
+    // Hand-written, not [[iterate]]: every level's delta is read lazily
+    // by the final union, so no round's checkpoint can be released.
     var delta = levels(lMax).withColumn("num", lit(0L))
     var deltaRows = sizes(lMax)
-    val perLevel = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (lMax >= 1) perLevel += delta.select(col("node"), col("num"))
+    val perLevel = scala.collection.mutable.ArrayBuffer(
+      delta.select(col("node"), col("num")))
     // stop at level 1: level 0 is the seeds, excluded by the endpoint
     // convention, and nothing consumes their delta
     (lMax - 1 to 1 by -1).foreach { t =>
@@ -913,7 +872,7 @@ object Graph {
           coalesce(col("num"), lit(0L)).as("num"))
         .localCheckpoint(true)
       deltaRows = sizes(t)
-      if (t >= 1) perLevel += delta.select(col("node"), col("num"))
+      perLevel += delta.select(col("node"), col("num"))
     }
     e.unpersist()
     // each (seed, node) lives in exactly ONE level (BFS first-visit),
@@ -925,57 +884,39 @@ object Graph {
         (col("num").cast("double") / lit(Q)).as("betweenness"))
   }
 
+  /** Seed-truncated harmonic centrality (Boldi & Vigna 2014, "Axioms
+    * for centrality" — harmonic is the closeness variant that handles
+    * disconnection): for every node, Σ_{s ∈ seeds} 1/d(s, node) over
+    * the seeds that reach it within `maxHops` — computed by one
+    * MULTI-SOURCE BFS carrying (seed, node) state, the exact truncated
+    * form of the sketch-based estimators (HyperBall) used when the seed
+    * set is the whole graph. Distances follow edge direction; pass a
+    * symmetrized edge list for the undirected reading.
+    *
+    * Scale: hop t joins the (seed, node) frontier — ≤ |seeds|·|V| rows,
+    * the explicit state bound — against the edge list once, then
+    * anti-joins the reached set; |seeds| is the caller's lever (this is
+    * the landmark/pivot form of centrality estimation — exact per
+    * seed, sampled over sources). Each hop's reached set is
+    * `localCheckpoint`ed (the kCore lineage discipline).
+    *
+    * @return (node, hops × count columns n1..n`maxHops`, harmonic) for
+    *         nodes reached by ≥ 1 seed in 1..maxHops hops; the
+    *         harmonic sum folds n1/1 + n2/2 + … in fixed hop order
+    */
   def harmonicCentrality(edges: DataFrame, srcCol: String, dstCol: String,
                          seeds: DataFrame, seedCol: String,
                          maxHops: Int,
                          edgesDistinct: Boolean = false): DataFrame = {
     require(maxHops >= 1 && maxHops <= 8,
       s"maxHops in [1, 8] (hop columns are materialized), got $maxHops")
-    // edgesDistinct: the pageRank precondition — input construction-
-    // guaranteed duplicate-free, dedup exchange skipped (r16)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = (if (edgesDistinct) e0 else e0.distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // seed rows restricted to actual graph nodes, so a superset seed
-    // source gives the same result (the personalizedPageRank contract)
-    val s0 = seeds.select(col(seedCol).as("seed")).distinct()
-      .join(e.select(col("src").as("seed")).distinct(), Seq("seed"), "left_semi")
-    var reached = s0.select(col("seed"), col("seed").as("node"))
-      .localCheckpoint(true)
-    var frontier = reached
-    // measured state sizes (one cached-block scan each — the frames are
-    // already materialized eagerly) gate the hop-join and anti-join
-    // broadcasts: under the gate the persisted edge relation streams
-    // with no per-hop exchange (optimization r17, bcastIfSmall note)
-    var frontierRows = frontier.count()
-    var reachedRows = frontierRows
-    val hopCounts = (1 to maxHops).map { t =>
-      val next = bcastIfSmall(frontier.withColumnRenamed("node", "src"),
-          frontierRows)
-        .join(e, "src")
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(bcastIfSmall(reached, reachedRows), Seq("seed", "node"),
-          "left_anti")
-        .localCheckpoint(true)
-      val nextRows = next.count()
-      val counts = next.groupBy("node")
-        .agg(count(lit(1)).cast("long").as(s"n$t"))
-      // the cumulative reached set only feeds the NEXT hop's anti-join —
-      // on the final hop the (seed, node)-sized union + checkpoint is
-      // dead work and is skipped (optimization r16). Old cumulative
-      // set's blocks are dead once the union (or, on the last hop, the
-      // frontier) is materialized; `next` stays — `counts` reads it
-      // lazily at the caller's action.
-      if (t < maxHops) {
-        val grown = reached.unionAll(next).localCheckpoint(true)
-        releaseCheckpoint(reached)
-        reached = grown
-        reachedRows += nextRows
-      } else releaseCheckpoint(reached)
-      frontier = next
-      frontierRows = nextRows
-      counts
-    }
+    val e = edgeList(edges, srcCol, dstCol, edgesDistinct).persist(Lvl)
+    val (levels, _) =
+      multiSourceBfs(e, seeds, seedCol, maxHops, pathCounts = false)
+    // the levels stay checkpointed: the counts read them lazily at the
+    // caller's action
+    val hopCounts = (1 to maxHops).map(t => levels(t).groupBy("node")
+      .agg(count(lit(1)).cast("long").as(s"n$t")))
     e.unpersist()
     val joined = hopCounts.reduce { (a, b) =>
       a.join(b, Seq("node"), "full_outer")
@@ -1041,7 +982,7 @@ object Graph {
           greatest(col(srcCol), col(dstCol)).as("b"))
         .filter(col("a") =!= col("b"))
         .distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     // both directions re-expand MAP-SIDE from the persisted canonical
     // set (for symmetric input these are exactly the input rows, read
     // from cache instead of re-running the upstream build).
@@ -1070,6 +1011,12 @@ object Graph {
     out
   }
 
+  /** Co-purchase edge list from (basket, item) rows: undirected item pairs
+    * that share a basket, emitted in BOTH directions, with the same
+    * min-item-support prefilter as Baskets.frequentPairs so the per-basket
+    * pair blow-up is bounded by frequent items only (the df-cap pattern —
+    * rare long-tail items never enter the quadratic step).
+    */
   def copurchaseEdges(baskets: DataFrame, basketCol: String, itemCol: String,
                       minItemSupport: Long): DataFrame = {
     // Collected-set shape, NOT a basket self-join: one shuffle collapses
@@ -1085,7 +1032,7 @@ object Graph {
       // read by two branches below (support counts + filtered sets);
       // small (one row per basket). Caller/Verify clearCache owns
       // eviction — the tokenTable convention.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     val b = sets0.select(col("basket"), explode(col("items")).as("item"))
     val freq = b.groupBy("item").agg(count(lit(1)).as("supp"))
       .filter(col("supp") >= minItemSupport)
@@ -1107,7 +1054,7 @@ object Graph {
       .select(col("src"), explode(col("items")).as("dst"))
       .filter(col("src") < col("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     half.unionAll(half.select(col("dst").as("src"), col("src").as("dst")))
   }
 
@@ -1152,7 +1099,7 @@ object Graph {
     val sets0 = baskets
       .select(col(basketCol).as("basket"), col(itemCol).as("item"))
       .groupBy("basket").agg(collect_set(col("item")).as("items"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     val b = sets0.select(col("basket"), explode(col("items")).as("item"))
     val freq = b.groupBy("item").agg(count(lit(1)).as("supp"))
       .filter(col("supp") >= minItemSupport)
@@ -1169,7 +1116,7 @@ object Graph {
       .select(col("src"), explode(col("items")).as("dst"))
       .filter(col("src") < col("dst"))
       .groupBy("src", "dst").agg(count(lit(1)).cast("long").as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     half.unionAll(half.select(col("dst").as("src"), col("src").as("dst"),
       col("w")))
   }
@@ -1211,7 +1158,7 @@ object Graph {
           greatest(col(srcCol), col(dstCol)).as("b"))
         .filter(col("a") =!= col("b"))
         .distinct())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     val adj = e.select(col("a").as("w"), col("b").as("n"))
       .unionAll(e.select(col("b").as("w"), col("a").as("n")))
     val degrees = adj.groupBy("w").agg(count(lit(1)).as("deg"))
@@ -1279,7 +1226,7 @@ object Graph {
         e.select(col("a").as("w"), col("b").as("n"))
           .unionAll(e.select(col("b").as("w"), col("a").as("n")))
       })
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     val degrees = adj.groupBy("w").agg(count(lit(1)).cast("long").as("deg"))
     // degrees is node-count-sized → broadcast twice; the 2|E| adj side
     // stays map-only all the way into the single final aggregation
@@ -1368,7 +1315,7 @@ object Graph {
         nbrs0.select(col("src"), slice(col("nbrs"), 1, m.toInt).as("nbrs")))
       .select(col("src"), col("nbrs"),
         size(col("nbrs")).cast("long").as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     var walks = adj.select(col("src").as("node"), col("src").as("step_0"))
     (1 to walkLen).foreach { t =>
       val cur = col(s"step_${t - 1}")
@@ -1456,7 +1403,7 @@ object Graph {
         transform(col("dc"), s => s.getField("cum")).as("cums"))
       .select(col("src"), col("nbrs"), col("cums"),
         element_at(col("cums"), -1).as("tot"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     var walks = adj.select(col("src").as("node"), col("src").as("step_0"))
     (1 to walkLen).foreach { t =>
       val cur = col(s"step_${t - 1}")
@@ -1549,7 +1496,7 @@ object Graph {
       .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
       .select(col("src"), col("nbrs"),
         size(col("nbrs")).cast("long").as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     def hash(t: Int, curName: String): org.apache.spark.sql.Column =
       expr("cast(conv(substring(md5(concat(cast(node as string), " +
         s"'#$t#', cast($curName as string), '$salt')), 1, 7), " +
@@ -1688,7 +1635,7 @@ object Graph {
         transform(col("dc"), s => s.getField("cum")).as("cums"))
       .select(col("src"), col("nbrs"), col("nbrsD"), col("cums"),
         element_at(col("cums"), -1).as("tot"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     def hash(t: Int, curName: String): org.apache.spark.sql.Column =
       expr("cast(conv(substring(md5(concat(cast(node as string), " +
         s"'#$t#', cast($curName as string), '$salt')), 1, 7), " +
@@ -1816,7 +1763,7 @@ object Graph {
     // release, the tokenTable convention)
     val p = pairs.select(col(centerCol).as("center"),
       col(contextCol).as("context"), col(cntCol).cast("long").as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     val freq = p.groupBy(col("context").as("node"))
       .agg(sum(col("cnt")).as("f"))
     // f^(3/4) scaled to integer weights: every step correctly-rounded
@@ -1835,7 +1782,7 @@ object Graph {
             org.apache.spark.sql.expressions.Window.unboundedPreceding,
             org.apache.spark.sql.expressions.Window.currentRow))
         .cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Lvl)
     val totRow = cum.agg(max(col("cum")).as("tot"))
       .select(col("tot"),
         expr(s"(tot + ${nBuckets.toLong - 1}) div ${nBuckets.toLong}")

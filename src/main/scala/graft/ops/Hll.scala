@@ -67,12 +67,15 @@ object Hll {
 
   /** Register table for `valueExpr` grouped by `groupCols`: one row per
     * (group, bucket) with the max rho observed — ≤ m rows per group.
-    * `valueExpr` is a SQL expression string (hashed as rendered, so the
-    * oracle can repeat it verbatim). */
+    * `valueExpr` is a SQL expression string of any type, hashed as
+    * `md5(cast(valueExpr as string))`: a BIGINT id lands in the same
+    * register as the same id cast to string, and on a string column the
+    * cast is the identity, so the hash equals [[oracleCtes]]' `md5(v)`. */
   def registers(df: DataFrame, groupCols: Seq[String], valueExpr: String,
                 m: Int): DataFrame = {
     val w = rankBits(m)
-    val base = s"cast(conv(substring(md5($valueExpr), 1, 15), 16, 10) as bigint)"
+    val base = s"cast(conv(substring(md5(cast($valueExpr as string)), 1, 15), " +
+      "16, 10) as bigint)"
     val rank = s"shiftright($base, ${log2(m)})"
     df.select(
         (groupCols.map(col) :+

@@ -28,6 +28,16 @@ class SketchSpec extends SparkTestBase {
     assert(lo >= 1L && hi <= Hll.rankBits(M) + 1)
   }
 
+  test("hll: a BIGINT column hashes as its string rendering") {
+    val ids = (1L to 3000L).toDF("v")
+    def regs(df: org.apache.spark.sql.DataFrame) =
+      Hll.registers(df, Nil, "v", M).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val asLong = regs(ids)
+    assert(asLong.nonEmpty)
+    assert(asLong === regs(ids.select(col("v").cast("string").as("v"))))
+  }
+
   test("hll: estimate within published error at known cardinality") {
     val est = Hll.estimate(Hll.registers(known, Nil, "v", M), Nil, M)
       .select("est").as[Double].head()
