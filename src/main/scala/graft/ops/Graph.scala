@@ -48,7 +48,10 @@ object Graph {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed match {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(false)
+          // the call `RDD.unpersist` makes, minus its WARN that a
+          // locally checkpointed RDD cannot be recomputed: this release
+          // is intended, once per round
+          org.apache.spark.sql.graftbridge.RddBridge.release(l.rdd)
         case _ => ()
       }
 
@@ -88,6 +91,32 @@ object Graph {
         .filter(col("src") =!= col("dst")).distinct()
     else dir.distinct()
   }
+
+  /** The canonical (a < b) pair set of an UNDIRECTED edge list, unpinned:
+    * one row per unordered pair, reverses, duplicates and self loops
+    * collapsed by one least/greatest dedup exchange. `symmetricDistinct`
+    * is the caller's construction guarantee that the input holds both
+    * directions of every edge exactly once with no self loops
+    * ([[copurchaseEdges]]' contract): each unordered pair then appears
+    * exactly once with src < dst, so the pair set is a MAP-SIDE filter
+    * and the dedup exchange over 2|E| rows is skipped (optimization r16,
+    * guide §2.4). Results are identical when the guarantee holds. */
+  private def canonicalPairs(edges: DataFrame, srcCol: String, dstCol: String,
+                             symmetricDistinct: Boolean): DataFrame =
+    if (symmetricDistinct)
+      edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+        .filter(col("a") < col("b"))
+    else edges
+      .select(least(col(srcCol), col(dstCol)).as("a"),
+        greatest(col(srcCol), col(dstCol)).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
+  /** Both ends of every canonical pair as (w, n) rows: the undirected
+    * adjacency, re-expanded MAP-SIDE from the pair set. */
+  private def pairEnds(e: DataFrame): DataFrame =
+    e.select(col("a").as("w"), col("b").as("n"))
+      .unionAll(e.select(col("b").as("w"), col("a").as("n")))
 
   private val BroadcastStateRows = "spark.graft.broadcastStateRows"
 
@@ -352,6 +381,10 @@ object Graph {
         .groupBy(col("dst").as("node"))
         .agg((sum(lit(1.0) + coalesce(col("x"), lit(0.0))) / lit(alphaInv)).as("x"))
     }
+    // round 1 is materialized, so the persisted round-0 state is dead
+    // (releaseCheckpoint cannot see it: its root is no LogicalRDD); at
+    // iters = 1 it IS the result and stays caller-owned
+    if (iters > 1) x1.unpersist()
     e.unpersist()
     ranks
   }
@@ -386,22 +419,7 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
                      symmetricDistinct: Boolean = false): DataFrame = {
-    // symmetricDistinct: input construction-guaranteed to hold BOTH
-    // directions of every undirected edge exactly once with no self
-    // loops ([[copurchaseEdges]]' contract) — the canonical (a < b)
-    // pair set is then a MAP-SIDE filter (each unordered pair appears
-    // exactly once with src < dst), skipping the least/greatest dedup
-    // exchange over 2|E| rows (optimization r16, guide §2.4). Results
-    // identical when the guarantee holds.
-    val e = (if (symmetricDistinct)
-        edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-          .filter(col("a") < col("b"))
-      else edges
-        .select(least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct())
-      .persist(Lvl)
+    val e = canonicalPairs(edges, srcCol, dstCol, symmetricDistinct).persist(Lvl)
     val deg = e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).cast("long").as("deg"))
@@ -513,9 +531,10 @@ object Graph {
         .select(col("node"), coalesce(col("s"), lit(0L)).as("h"))
         .localCheckpoint(true)
       // both half-round reads are done: release the PREVIOUS round's
-      // blocks (round-1 hub is the persisted init — no-op there)
-      if (auth != null) releaseCheckpoint(auth)
-      releaseCheckpoint(hub)
+      // blocks (round 1's hub is the persisted init, a cached frame and
+      // no checkpoint, so it is unpersisted instead)
+      if (auth == null) hub.unpersist()
+      else { releaseCheckpoint(auth); releaseCheckpoint(hub) }
       auth = a; hub = h
     }
     // one-row L1 totals, broadcast by the cross join (never a collect
@@ -968,47 +987,54 @@ object Graph {
     */
   def commonNeighborLinks(edges: DataFrame, srcCol: String, dstCol: String,
                           maxCenterDeg: Long, minCommon: Long,
-                          symmetricDistinct: Boolean = false): DataFrame = {
+                          symmetricDistinct: Boolean = false): DataFrame =
+    wedgeLinks(edges, srcCol, dstCol, maxCenterDeg, minCommon,
+        symmetricDistinct) { (wedges, _) =>
+      wedges.groupBy("node_a", "node_b")
+        .agg(count(lit(1)).cast("long").as("common"))
+    }
+
+  /** The wedge pipeline of the two link predictors
+    * ([[commonNeighborLinks]], [[resourceAllocationLinks]]): canonical
+    * pairs (persisted, caller-owned release — the clearCache
+    * convention) → both ends re-expanded MAP-SIDE → centers of degree ≤
+    * `maxCenterDeg` → one center-keyed self-join emitting each wedge
+    * (node_a < node_b) once. `score(wedges, centers)` aggregates the
+    * wedges per pair (centers carry (w, deg)) into a frame with a
+    * `common` count; pairs below `minCommon`, and pairs already
+    * adjacent (anti-join against the canonical set), are dropped.
+    *
+    * Both sides of the wedge join are the SAME semi-joined `adjK` under
+    * identical projections, so one exchange can serve both (exchange
+    * reuse). A per-pair score rides AFTER the self-join, never through
+    * it: carrying the weight through the self-join measured ~2× (the
+    * inner-join adjK shapes defeat semi-join short-circuiting), and a
+    * broadcast hint on `centers` before adjK propagates smallness and
+    * flips the wedge join into broadcasting the full adjacency
+    * (measured 2–3×). An array-adjacency emission — per kept center
+    * one sorted neighbor array, pairs exploded map-side as
+    * (ns[i], ns[j≻i]) via posexplode + slice — was prototyped and
+    * REJECTED (r17): identical wedge multiset and exchange count, but
+    * the per-position slice allocations cost more than the self-join's
+    * hash probes (q_link_predict 7.1 → 9.2 s, q_link_predict_ra
+    * 7.9 → 9.8 s solo A/B at sf0.1). */
+  private def wedgeLinks(edges: DataFrame, srcCol: String, dstCol: String,
+                         maxCenterDeg: Long, minCommon: Long,
+                         symmetricDistinct: Boolean)
+                        (score: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     require(maxCenterDeg >= 1, "maxCenterDeg must be >= 1")
-    // symmetricDistinct: input already both-directions + distinct + no
-    // self loops ([[copurchaseEdges]]' contract) — canonical pairs are
-    // a map-side a < b filter and the adjacency is the input itself,
-    // skipping the dedup exchange AND the 2× union re-expansion (r16)
-    val e = (if (symmetricDistinct)
-        edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-          .filter(col("a") < col("b"))
-      else edges
-        .select(least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct())
-      .persist(Lvl)
-    // both directions re-expand MAP-SIDE from the persisted canonical
-    // set (for symmetric input these are exactly the input rows, read
-    // from cache instead of re-running the upstream build).
-    // NOTE (r17, measured): an array-adjacency wedge emission — per
-    // kept center one sorted neighbor array, pairs exploded map-side as
-    // (ns[i], ns[j≻i]) via posexplode + slice — was prototyped and
-    // REJECTED: identical wedge multiset and exchange count, but the
-    // per-position slice allocations cost more than the self-join's
-    // hash probes (q_link_predict 7.1 → 9.2 s, q_link_predict_ra
-    // 7.9 → 9.8 s solo A/B at sf0.1). The self-join stays.
-    val adj = e.select(col("a").as("w"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("w"), col("a").as("n")))
+    val e = canonicalPairs(edges, srcCol, dstCol, symmetricDistinct).persist(Lvl)
+    val adj = pairEnds(e)
     val centers = adj.groupBy("w").agg(count(lit(1)).as("deg"))
-      .filter(col("deg") <= maxCenterDeg).select("w")
-    val adjK = adj.join(centers, Seq("w"), "left_semi")
+      .filter(col("deg") <= maxCenterDeg)
+    val adjK = adj.join(centers.select("w"), Seq("w"), "left_semi")
     val wedges = adjK.select(col("w"), col("n").as("node_a"))
       .join(adjK.select(col("w"), col("n").as("node_b")), Seq("w"))
       .filter(col("node_a") < col("node_b"))
-    val cn = wedges.groupBy("node_a", "node_b")
-      .agg(count(lit(1)).cast("long").as("common"))
-      .filter(col("common") >= minCommon)
+    val scored = score(wedges, centers).filter(col("common") >= minCommon)
     // predicted = NOT already an edge (e is canonical a<b, like the pair)
-    val out = cn.join(e,
-      cn("node_a") === e("a") && cn("node_b") === e("b"), "left_anti")
-    // e stays persisted until the caller's action; clearCache convention
-    out
+    scored.join(e,
+      scored("node_a") === e("a") && scored("node_b") === e("b"), "left_anti")
   }
 
   /** Co-purchase edge list from (basket, item) rows: undirected item pairs
@@ -1018,7 +1044,17 @@ object Graph {
     * rare long-tail items never enter the quadratic step).
     */
   def copurchaseEdges(baskets: DataFrame, basketCol: String, itemCol: String,
-                      minItemSupport: Long): DataFrame = {
+                      minItemSupport: Long): DataFrame =
+    copurchasePairs(baskets, basketCol, itemCol, minItemSupport)(_.distinct())
+
+  /** The co-purchase build shared by [[copurchaseEdges]] and
+    * [[copurchaseWeightedEdges]]: frequent-item basket sets → canonical
+    * (src < dst) item pairs → `collapse` (the one exchange: a distinct,
+    * or a shared-basket count) → the persisted canonical half, mirrored
+    * MAP-SIDE with its extra columns carried unchanged. */
+  private def copurchasePairs(baskets: DataFrame, basketCol: String,
+                              itemCol: String, minItemSupport: Long)
+                             (collapse: DataFrame => DataFrame): DataFrame = {
     // Collected-set shape, NOT a basket self-join: one shuffle collapses
     // the raw rows to per-basket item sets (collect_set dedups, so no
     // pre-distinct pass), the support filter runs over the exploded sets
@@ -1050,12 +1086,16 @@ object Graph {
     // form physically duplicated the whole upstream build per
     // direction), and canonical pairs are |E|/2 rows of two keys —
     // cache lifetime is caller-owned (clearCache), the sets0 convention.
-    val half = fsets.select(explode(col("items")).as("src"), col("items"))
-      .select(col("src"), explode(col("items")).as("dst"))
-      .filter(col("src") < col("dst"))
-      .distinct()
+    // The weighted build's count is symmetric by construction (the
+    // shared-basket count does not depend on direction), so the mirror
+    // carries the same w.
+    val half = collapse(fsets
+        .select(explode(col("items")).as("src"), col("items"))
+        .select(col("src"), explode(col("items")).as("dst"))
+        .filter(col("src") < col("dst")))
       .persist(Lvl)
-    half.unionAll(half.select(col("dst").as("src"), col("src").as("dst")))
+    half.unionAll(half.select((col("dst").as("src") +: col("src").as("dst") +:
+      half.columns.drop(2).toSeq.map(col)): _*))
   }
 
   /** [[copurchaseEdges]] derived from a [[Baskets.pairStoreAppend]]
@@ -1095,31 +1135,9 @@ object Graph {
     * extra long per row. Feed to [[pageRankWeighted]]. */
   def copurchaseWeightedEdges(baskets: DataFrame, basketCol: String,
                               itemCol: String,
-                              minItemSupport: Long): DataFrame = {
-    val sets0 = baskets
-      .select(col(basketCol).as("basket"), col(itemCol).as("item"))
-      .groupBy("basket").agg(collect_set(col("item")).as("items"))
-      .persist(Lvl)
-    val b = sets0.select(col("basket"), explode(col("items")).as("item"))
-    val freq = b.groupBy("item").agg(count(lit(1)).as("supp"))
-      .filter(col("supp") >= minItemSupport)
-      .select("item")
-    val fsets = b.join(freq, "item")
-      .groupBy("basket").agg(collect_set(col("item")).as("items"))
-    // same canonical halving as [[copurchaseEdges]]: the count exchange
-    // carries each unordered pair once (w is symmetric by construction —
-    // shared-basket count does not depend on direction), and the mirror
-    // is re-added map-side with the same w. Output set byte-identical.
-    // Persisted before mirroring for the same reason as the unweighted
-    // build: union branches do not reuse each other's exchanges.
-    val half = fsets.select(explode(col("items")).as("src"), col("items"))
-      .select(col("src"), explode(col("items")).as("dst"))
-      .filter(col("src") < col("dst"))
-      .groupBy("src", "dst").agg(count(lit(1)).cast("long").as("w"))
-      .persist(Lvl)
-    half.unionAll(half.select(col("dst").as("src"), col("src").as("dst"),
-      col("w")))
-  }
+                              minItemSupport: Long): DataFrame =
+    copurchasePairs(baskets, basketCol, itemCol, minItemSupport)(
+      _.groupBy("src", "dst").agg(count(lit(1)).cast("long").as("w")))
 
   /** Resource-Allocation link prediction (Zhou, Lü & Zhang 2009,
     * "Predicting missing links via local information"): like
@@ -1146,49 +1164,19 @@ object Graph {
   def resourceAllocationLinks(edges: DataFrame, srcCol: String,
                               dstCol: String, maxCenterDeg: Long,
                               minCommon: Long,
-                              symmetricDistinct: Boolean = false): DataFrame = {
-    require(maxCenterDeg >= 1, "maxCenterDeg must be >= 1")
-    // symmetricDistinct: the commonNeighborLinks precondition — the
-    // canonical pair set is a map-side a < b filter over the input (r16)
-    val e = (if (symmetricDistinct)
-        edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-          .filter(col("a") < col("b"))
-      else edges
-        .select(least(col(srcCol), col(dstCol)).as("a"),
-          greatest(col(srcCol), col(dstCol)).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct())
-      .persist(Lvl)
-    val adj = e.select(col("a").as("w"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("w"), col("a").as("n")))
-    val degrees = adj.groupBy("w").agg(count(lit(1)).as("deg"))
-    val centers = degrees.filter(col("deg") <= maxCenterDeg)
-    // EXACTLY commonNeighborLinks' wedge pipeline (semi-joined adjK,
-    // identical projections both sides ⇒ one reusable exchange); the
-    // weight does NOT ride through the wedge self-join — it map-joins
-    // onto the wedge stream afterwards from the node-sized table.
-    // Carrying wt through the self-join instead measured ~2× (the
-    // inner-join adjK shapes defeat semi-join short-circuiting), and a
-    // broadcast hint placed on centers BEFORE adjK propagates smallness
-    // and flips the wedge join into broadcasting the full adjacency
-    // (measured 2-3×) — the hint belongs on the post-wedge weight join
-    // only, where its build side really is the node-sized table. The
-    // r17 array-emission prototype was rejected here too (see
-    // commonNeighborLinks — slice allocations beat by the join probes).
-    val adjK = adj.join(centers.select("w"), Seq("w"), "left_semi")
-    val wedges = adjK.select(col("w"), col("n").as("node_a"))
-      .join(adjK.select(col("w"), col("n").as("node_b")), Seq("w"))
-      .filter(col("node_a") < col("node_b"))
-    val wt = centers
-      .select(col("w"), expr("1048576 div deg").cast("long").as("wt"))
-    val scored = wedges.join(broadcast(wt), Seq("w"))
-      .groupBy("node_a", "node_b")
-      .agg(sum(col("wt")).cast("long").as("score_fp"),
-        count(lit(1)).cast("long").as("common"))
-      .filter(col("common") >= minCommon)
-    scored.join(e,
-      scored("node_a") === e("a") && scored("node_b") === e("b"), "left_anti")
-  }
+                              symmetricDistinct: Boolean = false): DataFrame =
+    wedgeLinks(edges, srcCol, dstCol, maxCenterDeg, minCommon,
+        symmetricDistinct) { (wedges, centers) =>
+      // the weight map-joins onto the wedge stream from the node-sized
+      // table; the broadcast hint belongs here, where its build side
+      // really is node-sized (the wedgeLinks note)
+      val wt = centers
+        .select(col("w"), expr("1048576 div deg").cast("long").as("wt"))
+      wedges.join(broadcast(wt), Seq("w"))
+        .groupBy("node_a", "node_b")
+        .agg(sum(col("wt")).cast("long").as("score_fp"),
+          count(lit(1)).cast("long").as("common"))
+    }
 
   /** Degree assortativity coefficient (Newman 2002, "Assortative mixing
     * in networks"): the Pearson correlation of the degrees at the two
@@ -1217,15 +1205,8 @@ object Graph {
     // re-expand round trip (one 2|E| dedup exchange) is skipped (r16)
     val adj = (if (symmetricDistinct)
         edges.select(col(srcCol).as("w"), col(dstCol).as("n"))
-      else {
-        val e = edges
-          .select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .filter(col("a") =!= col("b"))
-          .distinct()
-        e.select(col("a").as("w"), col("b").as("n"))
-          .unionAll(e.select(col("b").as("w"), col("a").as("n")))
-      })
+      else pairEnds(canonicalPairs(edges, srcCol, dstCol,
+        symmetricDistinct = false)))
       .persist(Lvl)
     val degrees = adj.groupBy("w").agg(count(lit(1)).cast("long").as("deg"))
     // degrees is node-count-sized → broadcast twice; the 2|E| adj side
@@ -1266,21 +1247,15 @@ object Graph {
     * out-edges, possible on directed inputs) truncates the walk: later
     * steps stay NULL.
     *
-    * Scale: the indexed adjacency (src, idx, dst) is built once
-    * (one row_number window partitioned by src) and persisted; each
-    * hop is TWO equi-joins on the walk frontier — a degree lookup on
-    * src (to draw the pick) and the indexed pick on (src, idx) —
-    * 2·walkLen joins total, never a per-node driver loop. State is
-    * one row per walk. The row_number window puts each node's FULL
-    * neighbor list into one task's sort, so a raw web-graph hub
-    * (degree 10⁸) is a straggler: pass `maxDeg` to cap hop choice to
-    * the first `maxDeg` dst-sorted neighbors (the
-    * [[commonNeighborLinks]] `maxCenterDeg` precedent) — the pick
-    * hashes over min(deg, maxDeg), so walks stay deterministic and
-    * any graph whose max degree is below the cap is bit-identical to
-    * the uncapped run. The cap bounds every DOWNSTREAM join and the
-    * persisted adjacency; the one remaining full-list sort is the
-    * price of a deterministic "first by dst" selection.
+    * Scale: the array adjacency ([[uniformAdjacency]], one row per node)
+    * is built once and persisted; each hop is ONE equi-join of the walk
+    * frontier against it with a codegen'd element_at pick — walkLen
+    * joins total, never a per-node driver loop. State is one row per
+    * walk. `maxDeg` caps hop choice to the first `maxDeg` dst-sorted
+    * neighbors (the [[commonNeighborLinks]] `maxCenterDeg` precedent):
+    * the pick hashes over min(deg, maxDeg), so walks stay deterministic
+    * and any graph whose max degree is below the cap is bit-identical
+    * to the uncapped run.
     *
     * @param walkLen number of hops (1..8; output columns step_0 =
     *                start .. step_<walkLen>)
@@ -1294,47 +1269,8 @@ object Graph {
     require(walkLen >= 1 && walkLen <= 8, s"walkLen in [1, 8], got $walkLen")
     require(maxDeg.forall(m => m >= 1L && m <= Int.MaxValue.toLong),
       s"maxDeg in [1, ${Int.MaxValue}], got $maxDeg")
-    // ARRAY adjacency — one (src, dst-sorted neighbor array) row per
-    // node instead of one indexed row per edge (optimization r16,
-    // guide §2.3/§2.4): collect_set dedups INSIDE the aggregation (the
-    // standalone distinct exchange is gone), sort_array replaces the
-    // row_number + count windows (no per-src sort exchange), and each
-    // hop becomes ONE equi-join against the node-sized array relation
-    // with a codegen'd element_at pick — the per-hop (src, deg)
-    // distinct and the second (src, idx) join are gone. Hop values are
-    // BIT-IDENTICAL to the indexed form: element_at(nbrs, pick + 1) is
-    // the dst at row_number idx = pick in the same dst order. The
-    // whole-neighbor-list row is the same hub exposure the window sort
-    // had; `maxDeg` (slice of the first maxDeg dst-sorted neighbors,
-    // exactly the old idx < maxDeg filter) remains the raw-web-graph
-    // guard.
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val nbrs0 = e.groupBy("src")
-      .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
-    val adj = maxDeg.fold(nbrs0)(m =>
-        nbrs0.select(col("src"), slice(col("nbrs"), 1, m.toInt).as("nbrs")))
-      .select(col("src"), col("nbrs"),
-        size(col("nbrs")).cast("long").as("deg"))
-      .persist(Lvl)
-    var walks = adj.select(col("src").as("node"), col("src").as("step_0"))
-    (1 to walkLen).foreach { t =>
-      val cur = col(s"step_${t - 1}")
-      val keep = walks.columns.map(col)
-      // hop choice hashes (start, step, current): per-walk randomness,
-      // byte-replayable — conv(md5) % deg is the srmCheck assignment
-      // convention. A dead end (no adjacency row) leaves h_deg NULL, so
-      // the pick and the step stay NULL — the documented truncation.
-      val pick =
-        expr(("cast(conv(substring(md5(concat(cast(node as string), " +
-          s"'#$t#', cast(step_${t - 1} as string), '$salt')), 1, 7), " +
-          "16, 10) as bigint)")) % col("h_deg")
-      walks = walks
-        .join(adj.select(col("src").as("h_src"), col("nbrs").as("h_nbrs"),
-          col("deg").as("h_deg")), cur === col("h_src"), "left")
-        .select((keep :+ element_at(col("h_nbrs"),
-          (pick + lit(1L)).cast("int")).as(s"step_$t")): _*)
-    }
-    walks
+    val adj = uniformAdjacency(edges, srcCol, dstCol, maxDeg)
+    walk(adj, walkLen, secondOrder = false)(uniformHop(_, adj, _, salt))
   }
 
   /** [[deterministicWalks]] with WEIGHTED hop choice — the node2vec
@@ -1351,13 +1287,12 @@ object Graph {
     * the draw (r is taken modulo the SUM, not the distribution), the
     * documented price of keeping the arithmetic in exact longs.
     *
-    * Scale: one cumulative-weight window (same partitioning the array
-    * aggregation needs) builds a per-node (nbrs, cums, tot) array row
-    * once; each hop is ONE equi-join against that node-sized relation
-    * with a positional pick (#{cum ≤ r} indexes the dst array — the
-    * r17 array-adjacency shape). Parallel (src, dst) duplicates merge
-    * additively (one aggregation) before indexing; weights must be
-    * >= 1 (loud per-row guard, the axisGuard convention).
+    * Scale: the cumulative-weight array adjacency
+    * ([[weightedAdjacency]]) is built once; each hop is ONE equi-join
+    * against that node-sized relation with a positional pick
+    * ([[weightedHop]]). Parallel (src, dst) duplicates merge
+    * additively before indexing; weights must be >= 1 (loud per-row
+    * guard, the axisGuard convention).
     *
     * @param wCol    long-valued positive edge weight column
     * @return per start node: node, step_0..step_<walkLen> */
@@ -1365,70 +1300,13 @@ object Graph {
                                  dstCol: String, wCol: String,
                                  walkLen: Int, salt: String): DataFrame = {
     require(walkLen >= 1 && walkLen <= 8, s"walkLen in [1, 8], got $walkLen")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).cast("long").as("w"))
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .withColumn("w", col("w") + coalesce(assert_true(col("w") >= 1L,
-        concat(lit("deterministicWalksWeighted: merged weight "),
-          col("w").cast("string"),
-          lit(" < 1 — weights must be positive longs"))).cast("long"),
-        lit(0L)))
-    // ARRAY adjacency with PRECOMPUTED cumulative-weight arrays
-    // (optimization r17): the cumulative ranges are a STATIC property of
-    // the weighted adjacency, so they are built once — one Window pass
-    // over |E| rows (same src partitioning the array aggregation needs
-    // anyway) — and collected into one (nbrs, cums) row per node. Each
-    // hop is then ONE equi-join against the node-sized array relation
-    // and a positional pick: idx = #{cum ≤ r} (cum is strictly
-    // increasing since w ≥ 1, so the count IS the old range-condition
-    // row's index), step = nbrs[idx + 1]. The old shape paid TWO joins
-    // per hop — a (src, tot) lookup plus a range-predicate probe
-    // against the |E|-row indexed adjacency; both are gone, and the
-    // picked value is BIT-IDENTICAL (same dst order, same cum grid,
-    // same md5 draw). tot = last cum, so the separate tot window and
-    // the hoisted totTab are gone too.
-    val wOrd = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("dst"))
-    val adj = e
-      .withColumn("cum", sum(col("w")).over(wOrd
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)).cast("long"))
-      .groupBy("src")
-      // sort_array over (dst, cum) structs: dst is unique per src, so
-      // the struct order IS the dst order and cums comes out ascending
-      .agg(sort_array(collect_set(struct(col("dst"), col("cum"))))
-        .as("dc"))
-      .select(col("src"),
-        transform(col("dc"), s => s.getField("dst")).as("nbrs"),
-        transform(col("dc"), s => s.getField("cum")).as("cums"))
-      .select(col("src"), col("nbrs"), col("cums"),
-        element_at(col("cums"), -1).as("tot"))
-      .persist(Lvl)
-    var walks = adj.select(col("src").as("node"), col("src").as("step_0"))
-    (1 to walkLen).foreach { t =>
-      val cur = col(s"step_${t - 1}")
-      val keep = walks.columns.map(col)
-      // IDENTICAL hash string to deterministicWalks — the degenerate
-      // all-weights-1 equivalence depends on it. The draw is projected
-      // into its own column first and referenced twice below, so the
-      // md5 is evaluated once per row, never once per array element
-      // (CollapseProject does not inline non-trivial aliases used > 1×).
-      walks = walks
-        .join(adj.select(col("src").as("h_src"), col("nbrs").as("h_nbrs"),
-          col("cums").as("h_cums"), col("tot").as("h_tot")),
-          cur === col("h_src"), "left")
-        .withColumn("r", when(col("h_tot").isNull,
-          lit(null).cast("long")).otherwise(
-          expr(("cast(conv(substring(md5(concat(cast(node as string), " +
-            s"'#$t#', cast(step_${t - 1} as string), '$salt')), 1, 7), " +
-            "16, 10) as bigint)")) % col("h_tot")))
-        .select((keep :+ when(col("r").isNull,
-          lit(null).cast(e.schema("dst").dataType)).otherwise(
-          element_at(col("h_nbrs"),
-            size(filter(col("h_cums"), c => c <= col("r"))) + lit(1)))
-          .as(s"step_$t")): _*)
-    }
-    walks
+    // the dst array is read out of the (dst, cum) structs — no second
+    // collect_set (the three-array aggregate is node2vecWeighted's only)
+    val adj = weightedAdjacency(edges, srcCol, dstCol, wCol,
+      "deterministicWalksWeighted", arrays = Nil,
+      nbrs = Seq(transform(col("dc"), s => s.getField("dst")).as("nbrs")))
+    walk(adj, walkLen, secondOrder = false)(
+      weightedHop(_, adj, _, salt, "h", "nbrs"))
   }
 
   /** SECOND-ORDER deterministic walks — node2vec's p/q search bias
@@ -1451,13 +1329,13 @@ object Graph {
     * is BIT-IDENTICAL to [[deterministicWalks]] on the same salt — the
     * degenerate case the spec pins.
     *
-    * Scale: hop t ≥ 2 is (a) one frontier × adjacency equi-join on the
-    * current node (Σ deg(frontier) candidate rows — the second-order
-    * state node2vec inherently needs), (b) ONE keyed equality join of
-    * the candidates against the edge set on (prev, x) for the triangle
-    * test — never an all-pairs product, (c) one per-walk window for
-    * the cumulative ranges. A dead end truncates with NULLs, exactly
-    * like the first-order walks.
+    * Scale: hop t ≥ 2 ([[secondOrderHop]]) is one node-sized join
+    * fetching both neighbor arrays, a map-side explode into the
+    * Σ deg(frontier) candidates (the second-order state node2vec
+    * inherently needs), a codegen'd array_contains triangle test —
+    * never an all-pairs product — and one per-walk window for the
+    * cumulative ranges. A dead end truncates with NULLs, exactly like
+    * the first-order walks.
     *
     * @param pNum,pDen return parameter p as a positive rational
     * @param qNum,qDen in-out parameter q as a positive rational
@@ -1467,108 +1345,12 @@ object Graph {
                                  pNum: Long, pDen: Long,
                                  qNum: Long, qDen: Long): DataFrame = {
     require(walkLen >= 1 && walkLen <= 8, s"walkLen in [1, 8], got $walkLen")
-    require(pNum >= 1 && pDen >= 1 && qNum >= 1 && qDen >= 1,
-      s"p and q must be positive rationals, got $pNum/$pDen, $qNum/$qDen")
-    val wReturn = pDen * qNum
-    val wCommon = pNum * qNum
-    val wFar = pNum * qDen
-    // ARRAY adjacency (optimization r16, the deterministicWalks shape):
-    // one (src, dst-sorted neighbor array, deg) row per node replaces
-    // BOTH edge-sized relations the old plan broadcast per query (the
-    // indexed adjacency AND the raw edge set for the triangle test).
-    // Per second-order hop:
-    //   (a) the Σdeg candidate set is generated MAP-SIDE — one equi-join
-    //       against the node-sized array relation + explode, instead of
-    //       a join against the 2|E|-row indexed adjacency;
-    //   (b) the triangle test x ∈ N(prev) is a codegen'd array_contains
-    //       against the prev node's sorted array (fetched by the same
-    //       node-sized join) — the (prev, x) equi-join against the full
-    //       edge set is gone;
-    //   (c) cum and tot share ONE Window operator (same partition+order
-    //       spec, unbounded-following frame for tot) — one sort pass;
-    //   (d) survivors and dead-end walks re-assemble by MAP-SIDE union —
-    //       the per-hop (walks ⟕ picked) join is gone; the walk's step
-    //       columns ride through the window exchange instead (≤ 8 longs).
-    // Weights, hash strings, and the dst-sorted cumulative order are
-    // byte-identical to the joined form — the oracle replay is unchanged.
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val adj = e.groupBy("src")
-      .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
-      .select(col("src"), col("nbrs"),
-        size(col("nbrs")).cast("long").as("deg"))
-      .persist(Lvl)
-    def hash(t: Int, curName: String): org.apache.spark.sql.Column =
-      expr("cast(conv(substring(md5(concat(cast(node as string), " +
-        s"'#$t#', cast($curName as string), '$salt')), 1, 7), " +
-        "16, 10) as bigint)")
-    var walks = adj.select(col("src").as("node"), col("src").as("step_0"))
-    // hop 1: uniform over the adjacency — no previous node yet; the
-    // element_at pick is the deterministicWalks hop (identical hash).
-    // EVERY hop's frontier is localCheckpoint'ed (the pageRank/kCore
-    // lineage discipline): hop t ≥ 2 reads its predecessor TWICE
-    // (candidate branch + dead branch), so an un-truncated chain
-    // re-executes the whole walk history 2^t times — checkpointing
-    // makes each hop run exactly once.
-    walks = walks
-      .join(adj.select(col("src").as("h_src"), col("nbrs").as("h_nbrs"),
-        col("deg").as("h_deg")), col("step_0") === col("h_src"), "left")
-      .select(col("node"), col("step_0"),
-        element_at(col("h_nbrs"),
-          ((hash(1, "step_0") % col("h_deg")) + lit(1L)).cast("int"))
-          .as("step_1"))
-    // the FINAL hop is read once by the caller — no checkpoint needed
-    if (walkLen > 1) walks = walks.localCheckpoint(true)
-    (2 to walkLen).foreach { t =>
-      val prev = s"step_${t - 2}"
-      val cur = s"step_${t - 1}"
-      val keep = walks.columns.map(col)
-      // one node-sized join fetches BOTH neighbor arrays: N(cur) to
-      // explode into candidates, N(prev) for the triangle test. A walk
-      // whose cur is NULL (truncated earlier) or has no adjacency row
-      // (dead end — impossible on symmetrized inputs, possible on
-      // directed ones) takes the map-side dead branch below.
-      val frontier = walks
-        .join(adj.select(col("src").as("c_src"), col("nbrs").as("c_nbrs")),
-          col(cur) === col("c_src"), "left")
-        .join(adj.select(col("src").as("p_src"), col("nbrs").as("p_nbrs")),
-          col(prev) === col("p_src"), "left")
-      val cand = frontier.filter(col("c_nbrs").isNotNull)
-        .select((keep :+ col("p_nbrs") :+
-          explode(col("c_nbrs")).as("x")): _*)
-        .select((keep :+ col("x") :+
-          when(col("x") === col(prev), lit(wReturn))
-            .otherwise(when(array_contains(col("p_nbrs"), col("x")),
-              lit(wCommon)).otherwise(lit(wFar))).cast("long").as("wt")): _*)
-      val wWalk = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("node")).orderBy(col("x"))
-      val picked = cand
-        .withColumn("cum", sum(col("wt")).over(wWalk
-          .rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow))
-          .cast("long"))
-        .withColumn("tot", sum(col("wt")).over(wWalk
-          .rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.unboundedFollowing))
-          .cast("long"))
-        .withColumn("r", hash(t, cur) % col("tot"))
-        .filter(col("r") >= col("cum") - col("wt") && col("r") < col("cum"))
-        .select((keep :+ col("x").as(s"step_$t")): _*)
-      val dead = frontier.filter(col("c_nbrs").isNull)
-        .select((keep :+ lit(null).cast(e.schema("dst").dataType)
-          .as(s"step_$t")): _*)
-      // the FINAL hop is read once by the caller — no checkpoint needed
-      val next =
-        if (t < walkLen) picked.unionAll(dead).localCheckpoint(true)
-        else picked.unionAll(dead)
-      // prev hop's blocks: safe to release only once `next` is itself
-      // materialized; the final (lazy) hop still READS its predecessor —
-      // that last checkpoint is the caller's/clearCache's to release
-      if (t < walkLen) releaseCheckpoint(walks)
-      walks = next
+    val bias = node2vecBias(pNum, pDen, qNum, qDen)
+    val adj = uniformAdjacency(edges, srcCol, dstCol, None)
+    walk(adj, walkLen, secondOrder = true) { (walks, t) =>
+      if (t == 1) uniformHop(walks, adj, 1, salt)
+      else secondOrderHop(walks, adj, t, salt, bias, weighted = false)
     }
-    walks
   }
 
   /** [[deterministicWalksNode2vec]] with EDGE WEIGHTS — the paper's
@@ -1579,9 +1361,8 @@ object Graph {
     * node). Degenerate equivalences the spec pins: p = q = 1 is
     * BIT-IDENTICAL to [[deterministicWalksWeighted]]; all weights 1 is
     * BIT-IDENTICAL to [[deterministicWalksNode2vec]] — the four walk
-    * generators form a commuting square. Same per-hop join shape as
-    * the unweighted second-order walk (candidates ∝ |E|, one triangle
-    * equi-join, one per-walk window); parallel (src, dst) duplicates
+    * generators form a commuting square. Same per-hop shape as the
+    * unweighted second-order walk; parallel (src, dst) duplicates
     * merge additively; weights must be ≥ 1 (loud guard). */
   def deterministicWalksNode2vecWeighted(edges: DataFrame, srcCol: String,
                                          dstCol: String, wCol: String,
@@ -1590,131 +1371,232 @@ object Graph {
                                          qNum: Long, qDen: Long)
       : DataFrame = {
     require(walkLen >= 1 && walkLen <= 8, s"walkLen in [1, 8], got $walkLen")
-    require(pNum >= 1 && pDen >= 1 && qNum >= 1 && qDen >= 1,
-      s"p and q must be positive rationals, got $pNum/$pDen, $qNum/$qDen")
-    val wReturn = pDen * qNum
-    val wCommon = pNum * qNum
-    val wFar = pNum * qDen
+    val bias = node2vecBias(pNum, pDen, qNum, qDen)
+    // per node: the (dst, w) structs hops ≥ 2 explode, the dst-only
+    // array for the triangle test and hop 1's positional pick, plus the
+    // shared cumulative arrays — hop 1's weights are just w, a STATIC
+    // property of the adjacency, so its draw needs no explode + window
+    val adj = weightedAdjacency(edges, srcCol, dstCol, wCol,
+      "deterministicWalksNode2vecWeighted",
+      arrays = Seq(sort_array(collect_set(struct(col("dst"), col("w"))))
+        .as("nbrs"), sort_array(collect_set(col("dst"))).as("nbrsD")),
+      nbrs = Seq(col("nbrs"), col("nbrsD")))
+    walk(adj, walkLen, secondOrder = true) { (walks, t) =>
+      if (t == 1) weightedHop(walks, adj, 1, salt, "c", "nbrsD")
+      else secondOrderHop(walks, adj, t, salt, bias, weighted = true)
+    }
+  }
+
+  /** The walk engine's ARRAY adjacency, persisted (optimization r16,
+    * guide §2.3/§2.4): one (src, dst-sorted neighbor array, deg) row
+    * per node instead of one indexed row per edge. collect_set dedups
+    * INSIDE the aggregation (no standalone distinct exchange) and
+    * sort_array replaces the row_number + count windows, so each hop is
+    * ONE equi-join against this node-sized relation; element_at(nbrs,
+    * pick + 1) is the dst at row_number idx = pick in the same dst
+    * order, BIT-IDENTICAL to the indexed form. [[weightedAdjacency]] is
+    * the cumulative-weight variant.
+    *
+    * HUB BOUND (both adjacency builders): a hub becomes ONE array row
+    * of its full degree — its whole neighbor list is collected into one
+    * task's aggregation buffer and ships as one row to every hop join
+    * that reaches it. `maxDeg` ([[deterministicWalks]] only; slice of
+    * the first maxDeg dst-sorted neighbors) is the only cap, and it
+    * bounds the persisted row and every downstream join; the collect
+    * itself still sees the full list. A raw web graph with degree-10⁸
+    * hubs needs `maxDeg` or pre-capped edges. */
+  private def uniformAdjacency(edges: DataFrame, srcCol: String,
+                               dstCol: String,
+                               maxDeg: Option[Long]): DataFrame = {
+    val nbrs0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .groupBy("src").agg(sort_array(collect_set(col("dst"))).as("nbrs"))
+    maxDeg.fold(nbrs0)(m =>
+        nbrs0.select(col("src"), slice(col("nbrs"), 1, m.toInt).as("nbrs")))
+      .select(col("src"), col("nbrs"),
+        size(col("nbrs")).cast("long").as("deg"))
+      .persist(Lvl)
+  }
+
+  /** The WEIGHTED array adjacency, persisted: parallel (src, dst) rows
+    * merge additively and every merged weight must be ≥ 1 (loud per-row
+    * guard naming `caller`); one cumulative-weight Window over |E| rows
+    * (the src partitioning the array aggregation needs anyway) gives
+    * each edge its cum, and one aggregation per node collects
+    * `arrays` :+ the dst-sorted (dst, cum) structs `dc`. Output: src,
+    * `nbrs` (the neighbor arrays the caller projects, reading `dc` or
+    * `arrays`), cums (strictly increasing since w ≥ 1), tot = last cum.
+    * The ranges are a STATIC property of the adjacency, so a first-
+    * order hop is a positional pick ([[weightedHop]]) with no per-hop
+    * window. Same hub bound as [[uniformAdjacency]], with no cap. */
+  private def weightedAdjacency(edges: DataFrame, srcCol: String,
+                                dstCol: String, wCol: String, caller: String,
+                                arrays: Seq[Column],
+                                nbrs: Seq[Column]): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("long").as("w"))
       .groupBy("src", "dst").agg(sum(col("w")).as("w"))
       .withColumn("w", col("w") + coalesce(assert_true(col("w") >= 1L,
-        concat(lit("deterministicWalksNode2vecWeighted: merged weight "),
+        concat(lit(s"$caller: merged weight "),
           col("w").cast("string"),
           lit(" < 1 — weights must be positive longs"))).cast("long"),
         lit(0L)))
-    // ARRAY adjacency (optimization r16, the deterministicWalksNode2vec
-    // shape): one row per node with the dst-sorted (dst, w) struct array
-    // plus the dst-only array for the codegen'd triangle membership
-    // test — replaces both edge-sized relations (the cum-indexed
-    // adjacency and the raw weighted edge set). Hops ≥ 2 explode the
-    // current node's array MAP-SIDE and draw through ONE shared-spec
-    // Window (cum + tot in one sort pass) — the α_pq weights there
-    // depend on the previous node, so their cumulative ranges are
-    // per-walk state. Hop 1 has NO previous node: its weights are just
-    // w, a STATIC property of the adjacency, so its cumulative array is
-    // precomputed here (one Window pass over |E| at build — the
-    // deterministicWalksWeighted r17 shape) and the hop-1 draw is a
-    // positional pick (#{cum ≤ r} indexes nbrsD) instead of an
-    // explode + Window over the full Σdeg candidate set. Values are
-    // BIT-IDENTICAL (same dst order, same cum grid, same md5 string).
-    // Survivors and dead walks re-assemble by map-side union at hops
-    // ≥ 2 (no per-hop re-join); hop 1 is a single projection.
-    val wOrd0 = org.apache.spark.sql.expressions.Window
+    val wOrd = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst"))
+    // sort_array over (dst, cum) structs: dst is unique per src, so the
+    // struct order IS the dst order and cums comes out ascending
+    val aggs = arrays :+ sort_array(collect_set(struct(col("dst"), col("cum"))))
+      .as("dc")
     val adj = e
-      .withColumn("cum", sum(col("w")).over(wOrd0
+      .withColumn("cum", sum(col("w")).over(wOrd
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.currentRow)).cast("long"))
-      .groupBy("src")
-      .agg(sort_array(collect_set(struct(col("dst"), col("w"))))
-          .as("nbrs"),
-        sort_array(collect_set(col("dst"))).as("nbrsD"),
-        sort_array(collect_set(struct(col("dst"), col("cum")))).as("dc"))
-      .select(col("src"), col("nbrs"), col("nbrsD"),
-        transform(col("dc"), s => s.getField("cum")).as("cums"))
-      .select(col("src"), col("nbrs"), col("nbrsD"), col("cums"),
-        element_at(col("cums"), -1).as("tot"))
+      .groupBy("src").agg(aggs.head, aggs.tail: _*)
+      .select((col("src") +: nbrs :+
+        transform(col("dc"), s => s.getField("cum")).as("cums")): _*)
+    adj.select((adj.columns.toSeq.map(col) :+
+        element_at(col("cums"), -1).as("tot")): _*)
       .persist(Lvl)
-    def hash(t: Int, curName: String): org.apache.spark.sql.Column =
-      expr("cast(conv(substring(md5(concat(cast(node as string), " +
-        s"'#$t#', cast($curName as string), '$salt')), 1, 7), " +
-        "16, 10) as bigint)")
+  }
+
+  /** The hop draw shared by every walk generator: md5(start, t, current,
+    * salt) as a 28-bit long — conv(md5) % range is the srmCheck
+    * assignment convention. The IDENTICAL string in all four walkers is
+    * what makes their degenerate cases bit-identical. */
+  private def walkDraw(t: Int, salt: String): Column =
+    expr("cast(conv(substring(md5(concat(cast(node as string), " +
+      s"'#$t#', cast(step_${t - 1} as string), '$salt')), 1, 7), " +
+      "16, 10) as bigint)")
+
+  /** The p/q biases α_pq of a second-order walk as exact longs
+    * (return, triangle, explore) = (pDen·qNum, pNum·qNum, pNum·qDen). */
+  private def node2vecBias(pNum: Long, pDen: Long,
+                           qNum: Long, qDen: Long): (Long, Long, Long) = {
+    require(pNum >= 1 && pDen >= 1 && qNum >= 1 && qDen >= 1,
+      s"p and q must be positive rationals, got $pNum/$pDen, $qNum/$qDen")
+    (pDen * qNum, pNum * qNum, pNum * qDen)
+  }
+
+  /** The hop loop of the four walk generators: step_0 = every adjacency
+    * source, then `hop(walks, t)` for t = 1..walkLen. A `secondOrder`
+    * walk pins every NON-final hop behind `localCheckpoint(true)` and
+    * then releases its predecessor: hop t ≥ 2 reads its predecessor
+    * TWICE (candidate + dead branches), so an un-truncated chain would
+    * re-execute the whole walk history 2^t times. The final hop is read
+    * once by the caller and stays lazy; the checkpoint it reads is the
+    * caller's/clearCache's to free. First-order hops read their
+    * predecessor once and are never checkpointed. */
+  private def walk(adj: DataFrame, walkLen: Int, secondOrder: Boolean)
+                  (hop: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to walkLen).foldLeft(
+        adj.select(col("src").as("node"), col("src").as("step_0"))) {
+      (walks, t) =>
+        val next = hop(walks, t)
+        if (!secondOrder || t == walkLen) next
+        else {
+          val pinned = next.localCheckpoint(true)
+          releaseCheckpoint(walks)
+          pinned
+        }
+    }
+
+  /** One UNIFORM first-order hop over a [[uniformAdjacency]]: step_t =
+    * nbrs[draw % deg] of step_(t-1). A dead end (no adjacency row)
+    * leaves h_deg NULL, so the pick and the step stay NULL — the
+    * documented truncation. */
+  private def uniformHop(walks: DataFrame, adj: DataFrame, t: Int,
+                         salt: String): DataFrame =
+    walks
+      .join(adj.select(col("src").as("h_src"), col("nbrs").as("h_nbrs"),
+        col("deg").as("h_deg")), col(s"step_${t - 1}") === col("h_src"), "left")
+      .select((walks.columns.toSeq.map(col) :+ element_at(col("h_nbrs"),
+        (walkDraw(t, salt) % col("h_deg") + lit(1L)).cast("int"))
+        .as(s"step_$t")): _*)
+
+  /** One WEIGHTED first-order hop over a [[weightedAdjacency]]: r = draw
+    * % tot, step_t = dsts[#{cum ≤ r} + 1] — the neighbor whose range
+    * [cum − w, cum) contains r. The draw is projected into its own
+    * column and referenced twice, so the md5 is evaluated once per row,
+    * never once per array element (CollapseProject does not inline
+    * non-trivial aliases used > 1×). `dsts` names the adjacency's
+    * dst-only array and `as` prefixes the joined adjacency columns. */
+  private def weightedHop(walks: DataFrame, adj: DataFrame, t: Int,
+                          salt: String, as: String, dsts: String): DataFrame = {
+    val (src, nbrs, cums, tot) =
+      (s"${as}_src", s"${as}_$dsts", s"${as}_cums", s"${as}_tot")
+    walks
+      .join(adj.select(col("src").as(src), col(dsts).as(nbrs),
+        col("cums").as(cums), col("tot").as(tot)),
+        col(s"step_${t - 1}") === col(src), "left")
+      .withColumn("r", when(col(tot).isNull, lit(null).cast("long"))
+        .otherwise(walkDraw(t, salt) % col(tot)))
+      .select((walks.columns.toSeq.map(col) :+ when(col("r").isNull,
+        lit(null).cast(elementType(adj, dsts))).otherwise(
+        element_at(col(nbrs),
+          size(filter(col(cums), c => c <= col("r"))) + lit(1)))
+        .as(s"step_$t")): _*)
+  }
+
+  /** One SECOND-ORDER hop t ≥ 2 (optimization r16 shape): one
+    * node-sized join fetches BOTH neighbor arrays — N(cur) to explode
+    * MAP-SIDE into candidates x, N(prev) for the codegen'd
+    * array_contains triangle test — each candidate weighted α_pq(prev,
+    * x), times the exploded struct's `w` when `weighted` (the arrays
+    * are then the (dst, w) `nbrs` and the dst-only `nbrsD`). cum and
+    * tot share ONE Window (same partition + order spec) — one sort
+    * pass — and r = draw % tot picks the candidate whose range
+    * [cum − wt, cum) contains it. A walk whose cur is NULL (truncated
+    * earlier) or has no adjacency row (a dead end — possible on
+    * directed inputs) takes the map-side dead branch; survivors and
+    * dead walks re-assemble by MAP-SIDE union, no per-hop re-join. */
+  private def secondOrderHop(walks: DataFrame, adj: DataFrame, t: Int,
+                             salt: String, bias: (Long, Long, Long),
+                             weighted: Boolean): DataFrame = {
+    val (wReturn, wCommon, wFar) = bias
+    val prev = s"step_${t - 2}"
+    val dsts = if (weighted) "nbrsD" else "nbrs"
+    val keep = walks.columns.toSeq.map(col)
+    val frontier = walks
+      .join(adj.select(col("src").as("c_src"), col("nbrs").as("c_nbrs")),
+        col(s"step_${t - 1}") === col("c_src"), "left")
+      .join(adj.select(col("src").as("p_src"), col(dsts).as(s"p_$dsts")),
+        col(prev) === col("p_src"), "left")
+    // unweighted candidates are the dst values; weighted, (dst, w) structs
+    val (el, x) = if (weighted) ("s", col("s.dst")) else ("x", col("x"))
+    val alpha = when(x === col(prev), lit(wReturn))
+      .otherwise(when(array_contains(col(s"p_$dsts"), x),
+        lit(wCommon)).otherwise(lit(wFar)))
+    val cand = frontier.filter(col("c_nbrs").isNotNull)
+      .select((keep :+ col(s"p_$dsts") :+ explode(col("c_nbrs")).as(el)): _*)
+      .select((keep :+ (if (weighted) x.as("x") else x) :+
+        (if (weighted) alpha * col("s.w") else alpha).cast("long").as("wt")): _*)
     val wWalk = org.apache.spark.sql.expressions.Window
       .partitionBy(col("node")).orderBy(col("x"))
-    // one hop. Hop 1: static positional pick over the precomputed
-    // cumulative array — one node-sized equi-join, one projection, no
-    // explode, no Window (r17; the draw column is referenced twice so
-    // CollapseProject never inlines the md5 into the per-element
-    // lambda). Hops ≥ 2: explode the (dst, w) array of `cur`, weight
-    // each candidate by α_pq(prev, x) · w, cumulative range pick at
-    // r = md5 % tot — all weights exact longs.
-    def hop(t: Int, walks: DataFrame): DataFrame = {
-      val cur = s"step_${t - 1}"
-      val keep = walks.columns.map(col)
-      val stepped: DataFrame = if (t == 1) {
-        walks
-          .join(adj.select(col("src").as("c_src"), col("nbrsD").as("c_nbrsD"),
-            col("cums").as("c_cums"), col("tot").as("c_tot")),
-            col(cur) === col("c_src"), "left")
-          .withColumn("r", when(col("c_tot").isNull,
-            lit(null).cast("long"))
-            .otherwise(hash(1, cur) % col("c_tot")))
-          .select((keep :+ when(col("r").isNull,
-            lit(null).cast(e.schema("dst").dataType)).otherwise(
-            element_at(col("c_nbrsD"),
-              size(filter(col("c_cums"), c => c <= col("r"))) + lit(1)))
-            .as("step_1")): _*)
-      } else {
-        val frontier = walks
-          .join(adj.select(col("src").as("c_src"), col("nbrs").as("c_nbrs")),
-            col(cur) === col("c_src"), "left")
-          .join(adj.select(col("src").as("p_src"), col("nbrsD").as("p_nbrsD")),
-            col(s"step_${t - 2}") === col("p_src"), "left")
-        val cand = frontier.filter(col("c_nbrs").isNotNull)
-          .select((keep :+ col("p_nbrsD") :+
-            explode(col("c_nbrs")).as("s")): _*)
-          .select((keep :+ col("s.dst").as("x") :+
-            ((when(col("s.dst") === col(s"step_${t - 2}"), lit(wReturn))
-              .otherwise(when(array_contains(col("p_nbrsD"), col("s.dst")),
-                lit(wCommon)).otherwise(lit(wFar))) * col("s.w"))
-              .cast("long")).as("wt")): _*)
-        val picked = cand
-          .withColumn("cum", sum(col("wt")).over(wWalk
-            .rowsBetween(
-              org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.currentRow))
-            .cast("long"))
-          .withColumn("tot", sum(col("wt")).over(wWalk
-            .rowsBetween(
-              org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.unboundedFollowing))
-            .cast("long"))
-          .withColumn("r", hash(t, cur) % col("tot"))
-          .filter(col("r") >= col("cum") - col("wt") && col("r") < col("cum"))
-          .select((keep :+ col("x").as(s"step_$t")): _*)
-        val dead = frontier.filter(col("c_nbrs").isNull)
-          .select((keep :+ lit(null).cast(e.schema("dst").dataType)
-            .as(s"step_$t")): _*)
-        picked.unionAll(dead)
-      }
-      // localCheckpoint per hop (the pageRank/kCore lineage discipline):
-      // hop t ≥ 2 reads its predecessor twice (candidate + dead
-      // branches) — un-truncated, the walk history would re-execute 2^t
-      // times. The FINAL hop is read once by the caller — no checkpoint.
-      if (t < walkLen) stepped.localCheckpoint(true) else stepped
-    }
-    var walks = adj.select(col("src").as("node"), col("src").as("step_0"))
-    (1 to walkLen).foreach { t =>
-      val next = hop(t, walks)
-      // prev hop's blocks: safe to release only once `next` is itself
-      // materialized (t < walkLen — the final hop is lazy and still
-      // reads its predecessor; that checkpoint is clearCache's to free)
-      if (t < walkLen) releaseCheckpoint(walks)
-      walks = next
-    }
-    walks
+    val picked = cand
+      .withColumn("cum", sum(col("wt")).over(wWalk
+        .rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow))
+        .cast("long"))
+      .withColumn("tot", sum(col("wt")).over(wWalk
+        .rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.unboundedFollowing))
+        .cast("long"))
+      .withColumn("r", walkDraw(t, salt) % col("tot"))
+      .filter(col("r") >= col("cum") - col("wt") && col("r") < col("cum"))
+      .select((keep :+ col("x").as(s"step_$t")): _*)
+    val dead = frontier.filter(col("c_nbrs").isNull)
+      .select((keep :+ lit(null).cast(elementType(adj, dsts))
+        .as(s"step_$t")): _*)
+    picked.unionAll(dead)
   }
+
+  /** The element type of an adjacency array column: the walk's dst type,
+    * which a truncated step's NULL is cast to. */
+  private def elementType(adj: DataFrame,
+                          array: String): org.apache.spark.sql.types.DataType =
+    adj.schema(array).dataType
+      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
 
   /** DETERMINISTIC word2vec-style negative sampling over a
     * (center, context, cnt) pair corpus — the third leg of the

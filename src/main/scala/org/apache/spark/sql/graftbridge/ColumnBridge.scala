@@ -25,3 +25,10 @@ object DatasetBridge {
   def analyzed(df: DataFrame): LogicalPlan =
     df.queryExecution.analyzed
 }
+
+/** RDD block release without `RDD.unpersist`'s locally-checkpointed
+  * WARN: `SparkContext.unpersistRDD` is `private[spark]`. */
+object RddBridge {
+  def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+}

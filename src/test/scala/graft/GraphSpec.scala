@@ -879,6 +879,33 @@ class GraphSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  test("katz and hits leave only the round state their result reads persisted, like pageRank") {
+    // A loop's round-0 state is a persisted frame, not a checkpoint, so
+    // releaseCheckpoint cannot free it: the loop must unpersist it once
+    // round 1 is materialized. What a call may leave behind is the final
+    // checkpoint(s) its result reads (caller-owned): one state frame,
+    // two for hits (hub and auth); katz at iters = 1 returns its
+    // round-0 state itself. The cache starts empty, so no earlier frame
+    // of the same plan can stand in for one a call persists.
+    spark.catalog.clearCache()
+    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L))
+    val e = (und ++ und.map(_.swap)).toDF("src", "dst")
+    def added(run: => org.apache.spark.sql.DataFrame): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      run.collect()
+      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    }
+    val got = Seq(
+      "pageRank" -> added(Graph.pageRank(e, "src", "dst", 3)),
+      "labelPropagation" -> added(Graph.labelPropagation(e, "src", "dst", 3)),
+      "katzCentrality" -> added(Graph.katzCentrality(e, "src", "dst", 3)),
+      "katzCentrality iters=1" -> added(Graph.katzCentrality(e, "src", "dst", 1)),
+      "hits" -> added(Graph.hits(e, "src", "dst", 3)))
+    assert(got === Seq("pageRank" -> 1, "labelPropagation" -> 1,
+      "katzCentrality" -> 1, "katzCentrality iters=1" -> 1, "hits" -> 2))
+    spark.catalog.clearCache()
+  }
+
   private def withStateRowsGate[A](gate: String)(body: => A): A = {
     spark.conf.set("spark.graft.broadcastStateRows", gate)
     try body finally spark.conf.unset("spark.graft.broadcastStateRows")

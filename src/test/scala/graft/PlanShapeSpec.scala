@@ -232,6 +232,41 @@ class PlanShapeSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  // Exchange-count pins for the shared wedge and co-purchase builders
+  // (the `hll registers` style; values measured before the builders were
+  // shared). The count covers the cached relations' inner plans too, so
+  // a wedge side projected differently (e.g. carrying deg through the
+  // self-join: 37 → 31, 43 → 37) or a co-purchase half left
+  // un-persisted before mirroring (30 → 14, 28 → 14) both move it.
+  private def exchanges(plan: String): Int = plan.split("Exchange").length - 1
+
+  test("link predictors: wedge sides projected alike, no weight through the self-join (exchange count pinned)") {
+    import spark.implicits._
+    val und = (1L to 40L).flatMap(i => Seq((i, i % 40 + 1), (i, (i + 11) % 40 + 1)))
+    val cnl = planString(graft.ops.Graph.commonNeighborLinks(
+      (und ++ und.map(_.swap)).toDF("src", "dst"), "src", "dst",
+      maxCenterDeg = 10, minCommon = 1))
+    assert(exchanges(cnl) === 37, s"commonNeighborLinks:\n$cnl")
+    val ra = planString(graft.ops.Graph.resourceAllocationLinks(
+      (1L to 60L).flatMap(i => Seq((i, i % 20 + 100), (i % 15 + 100, i)))
+        .toDF("src", "dst"), "src", "dst", maxCenterDeg = 50, minCommon = 1))
+    assert(exchanges(ra) === 43, s"resourceAllocationLinks:\n$ra")
+    spark.catalog.clearCache()
+  }
+
+  test("co-purchase builds: the canonical half is persisted before mirroring (exchange count pinned)") {
+    import spark.implicits._
+    val baskets = (1L to 60L)
+      .flatMap(b => Seq(b % 7, b % 5 + 10, b % 3 + 20).map(i => (b, i)))
+      .toDF("basket", "item")
+    val cp = planString(graft.ops.Graph.copurchaseEdges(baskets, "basket", "item", 2))
+    assert(exchanges(cp) === 30, s"copurchaseEdges:\n$cp")
+    val cpw = planString(
+      graft.ops.Graph.copurchaseWeightedEdges(baskets, "basket", "item", 2))
+    assert(exchanges(cpw) === 28, s"copurchaseWeightedEdges:\n$cpw")
+    spark.catalog.clearCache()
+  }
+
   test("degreeAssortativity: degree table broadcast on both end joins") {
     import spark.implicits._
     val edges = (1L to 200L).map(i => (i, i % 40 + 500)).toDF("src", "dst")
