@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** A/B experiment readout — deterministic unit-level variant
@@ -27,8 +28,101 @@ import org.apache.spark.sql.functions._
   * Scale: one hash aggregation to unit grain (conversion = did the
   * unit EVER convert), one map-combinable aggregation to a single row
   * per group. Nothing unit-level leaves the second aggregation.
+  *
+  * Every card is built from the same few private builders: [[variant]]
+  * (the one md5 assignment), [[unitGrain]]/[[assigned]] (the per-unit
+  * fold), [[pivot]] (per-arm sums, zero on empty input) and, for the
+  * store reads, [[trace]] (the per-tag cumulative window) and
+  * [[spendingBoundary]]. The experiment store is an additive fold of
+  * per-batch deltas, so a trace row is exactly the as-of read at its
+  * tag: each `*Trace` card equals its `*FromStoreAsOf` twin row by row.
   */
 object Abtest {
+
+  private val d19 = "decimal(19,0)"; private val d38 = "decimal(38,0)"
+
+  /** The sticky arm of `unit`: the first 28 bits of md5(unit ‖ salt),
+    * mod k. The salt is a column so [[permutationTest]] can re-draw it
+    * per round; every other card passes `lit(salt)`, so the salt is
+    * hashed exactly as given (no SQL quoting or escape processing). */
+  private def variant(salt: Column, k: Int): Column =
+    conv(substring(md5(concat(col("unit").cast("string"), salt)), 1, 7), 16, 10)
+      .cast("bigint") % k
+
+  /** A per-unit measure: its row expression and its per-unit fold. */
+  private type Measure = (Column, Column)
+
+  /** Did the unit EVER convert (0/1). */
+  private def converted(convExpr: String): Measure =
+    (expr(convExpr).cast("boolean").as("c"),
+      max(when(col("c"), 1L).otherwise(0L)).as("converted"))
+
+  /** The unit's integer total of `e`, as column `name`. */
+  private def metric(e: String, name: String): Measure =
+    (expr(e).cast("long").as(s"${name}r"),
+      sum(col(s"${name}r")).cast("long").as(name))
+
+  /** One row per (keys…, unit) with the measures folded; no measures
+    * means the distinct (keys…, unit) rows. */
+  private def unitGrain(df: DataFrame, unitExpr: String,
+                        measures: Seq[Measure],
+                        keys: Seq[Column] = Nil): DataFrame = {
+    val sel = df.select((keys ++ (expr(unitExpr).as("unit") +:
+      measures.map(_._1))): _*)
+    if (measures.isEmpty) sel.distinct()
+    else sel.groupBy(sel.columns.toSeq.take(keys.size + 1).map(col): _*)
+      .agg(measures.head._2, measures.tail.map(_._2): _*)
+  }
+
+  /** [[unitGrain]] with each unit's [[variant]] under `salt`. */
+  private def assigned(df: DataFrame, unitExpr: String, salt: String,
+                       measures: Seq[Measure], keys: Seq[Column] = Nil,
+                       k: Int = 2): DataFrame =
+    unitGrain(df, unitExpr, measures, keys)
+      .withColumn("variant", variant(lit(salt), k))
+
+  /** A per-arm sum: output name, row value and type ("long" or d38). */
+  private type Cell = (String, Column, String)
+  private def cell(name: String, v: Column, t: String = "long"): Cell =
+    (name, v, t)
+  /** A store column summed per arm under its own name. */
+  private def stored(name: String, t: String = "long"): Cell =
+    cell(name, col(name), t)
+  private val ab = Seq("a", "b")
+  private def armsK(k: Int): Seq[String] = (0 until k).map(_.toString)
+
+  /** The per-arm pivot: `<name>_<arm>` = Σ value over the rows of arm
+    * i (the i-th suffix), arm-major, each coalesced to a zero of its
+    * type so an empty input reads 0 rather than NULL. */
+  private def pivot(arms: Seq[String], cells: Cell*): Seq[Column] =
+    for ((arm, i) <- arms.zipWithIndex; (name, v, t) <- cells) yield {
+      val zero = lit(0).cast(t)
+      coalesce(sum(when(col("variant") === i.toLong, v).otherwise(zero)), zero)
+        .cast(t).as(s"${name}_$arm")
+    }
+
+  /** A pooled (all-arm) sum, coalesced like [[pivot]]'s cells. */
+  private def total(name: String, v: Column, t: String = "long"): Column =
+    coalesce(sum(v), lit(0).cast(t)).cast(t).as(name)
+
+  /** Exact product of two integer columns (d19 × d19 = d38). */
+  private def prod(a: String, b: String): Column =
+    col(a).cast(d19) * col(b).cast(d19)
+
+  private def sums(df: DataFrame, keys: Seq[Column],
+                   aggs: Seq[Column]): DataFrame =
+    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+
+  /** Conversion counts per arm (n_a, conv_a, n_b, conv_b) per key. */
+  private def conversionArms(df: DataFrame, unitExpr: String,
+                             convExpr: String, salt: String,
+                             keys: Seq[Column] = Nil): DataFrame =
+    sums(assigned(df, unitExpr, salt, Seq(converted(convExpr)), keys), keys,
+      pivot(ab, cell("n", lit(1L)), cell("conv", col("converted"))))
+
+  /** Welch moments per arm (n, sy, syy) over per-unit totals `y`. */
+  private val meanCells: Seq[Cell] =
+    Seq(cell("n", lit(1L)), cell("sy", col("y")), cell("syy", prod("y", "y"), d38))
 
   /** @param unitExpr randomization unit (user id — NEVER the event id:
     *                 unit-level independence is what the z test assumes)
@@ -43,22 +137,7 @@ object Abtest {
   def readout(df: DataFrame, groupCols: Seq[String], unitExpr: String,
               convExpr: String, salt: String): DataFrame = {
     val gc = groupCols.map(col)
-    val units = df
-      .select((gc :+ expr(unitExpr).as("unit") :+
-        expr(convExpr).cast("boolean").as("c")): _*)
-      .groupBy((gc :+ col("unit")): _*)
-      .agg(max(when(col("c"), 1L).otherwise(0L)).as("converted"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    val agg = units.groupBy(gc: _*).agg(
-      sum(when(col("variant") === 0, 1L).otherwise(0L)).cast("long").as("n_a"),
-      sum(when(col("variant") === 0, col("converted")).otherwise(0L))
-        .cast("long").as("conv_a"),
-      sum(when(col("variant") === 1, 1L).otherwise(0L)).cast("long").as("n_b"),
-      sum(when(col("variant") === 1, col("converted")).otherwise(0L))
-        .cast("long").as("conv_b"))
-    readoutCard(agg, gc)
+    readoutCard(conversionArms(df, unitExpr, convExpr, salt, gc), gc)
   }
 
   /** The conversion-readout card over pre-aggregated arm counts
@@ -76,8 +155,11 @@ object Abtest {
       when(emptyArm, lit(null)).otherwise(pA).as("rate_a"),
       when(emptyArm, lit(null)).otherwise(pB).as("rate_b"),
       when(emptyArm, lit(null)).otherwise(pB - pA).as("lift"),
-      when(emptyArm || pPool === 0.0 || pPool === 1.0, lit(null))
-        .otherwise((pB - pA) / se).as("z"))): _*)
+      // nested guard: pPool divides by n_a + n_b, which is 0 on an empty
+      // input — clear emptyArm first (the ANSI eager-OR rule)
+      when(emptyArm, lit(null)).otherwise(
+        when(pPool === 0.0 || pPool === 1.0, lit(null))
+          .otherwise((pB - pA) / se)).as("z"))): _*)
   }
 
   /** K-ARM experiment readout — variant = md5 % k (arm 0 is the
@@ -99,19 +181,11 @@ object Abtest {
   def readoutK(df: DataFrame, unitExpr: String, convExpr: String,
                salt: String, k: Int): DataFrame = {
     require(k >= 2 && k <= 64, s"k in [2, 64], got $k")
-    val spark = df.sparkSession
-    val units = df
-      .select(expr(unitExpr).as("unit"),
-        expr(convExpr).cast("boolean").as("c"))
-      .groupBy(col("unit"))
-      .agg(max(when(col("c"), 1L).otherwise(0L)).as("converted"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % $k"))
+    val units = assigned(df, unitExpr, salt, Seq(converted(convExpr)), k = k)
     val agg = units.groupBy(col("variant")).agg(
       count(lit(1)).cast("long").as("n"),
       sum(col("converted")).cast("long").as("conv"))
-    karmCard(spark, agg, k)
+    karmCard(df.sparkSession, agg, k)
   }
 
   /** Two-sided Bonferroni z thresholds at FAMILY α = 0.05 for
@@ -151,7 +225,7 @@ object Abtest {
     * never anti-conservative. Each verdict compares the ROUNDED
     * displayed statistic (round 6) so the boolean is engine-exact —
     * the boundary-crossed convention; NULL z reads NULL on all three. */
-  private def karmCard(spark: org.apache.spark.sql.SparkSession,
+  private def karmCard(spark: SparkSession,
                        agg: DataFrame, k: Int): DataFrame = {
     val axis = spark.range(k).select(col("id").as("variant"))
     val arms = axis.join(agg, Seq("variant"), "left")
@@ -187,13 +261,10 @@ object Abtest {
     // single-partition windows are free). thresholds[j] = Z(k−1−j+1)
     // for rank j, i.e. the Bonferroni table reversed.
     val thr = array(BonferroniZ05.take(k - 1).reverse.map(lit): _*)
-    val wRank = org.apache.spark.sql.expressions.Window
+    val wRank = Window
       .orderBy(abs(round(col("z_vs_ctrl"), 6)).desc, col("variant"))
-    val wCum = org.apache.spark.sql.expressions.Window
-      .orderBy(col("_rk"))
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
+    val wCum = Window.orderBy(col("_rk"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val holm = base.filter(col("z_vs_ctrl").isNotNull)
       .withColumn("_rk", row_number().over(wRank))
       .withColumn("_pass",
@@ -211,7 +282,7 @@ object Abtest {
     * A/B/n dashboard: [[momentsStoreAppend]] with the same k maintains
     * per-arm rows, and the stored card equals the one-shot
     * bit-for-bit by additivity. */
-  def readoutKFromStore(spark: org.apache.spark.sql.SparkSession,
+  def readoutKFromStore(spark: SparkSession,
                         path: String, k: Int): DataFrame = {
     require(k >= 2 && k <= 64, s"k in [2, 64], got $k")
     karmCard(spark,
@@ -244,7 +315,7 @@ object Abtest {
     * variance-reduced A/B/n dashboard; additivity gives the one-shot
     * card bit-for-bit (arms partition units, so pooled moments are the
     * per-arm sums). */
-  def cupedKFromStore(spark: org.apache.spark.sql.SparkSession,
+  def cupedKFromStore(spark: SparkSession,
                       path: String, k: Int): DataFrame = {
     require(k >= 2 && k <= 64, s"k in [2, 64], got $k")
     cupedKCard(spark, mergedArms(spark, path, maxVariant = k - 1L), k)
@@ -254,9 +325,8 @@ object Abtest {
     * sx, sxx, sxy, syy) — shared by [[cupedReadoutK]] and
     * [[cupedKFromStore]] so both emit the SAME double expressions
     * bit-for-bit. */
-  private def cupedKCard(spark: org.apache.spark.sql.SparkSession,
+  private def cupedKCard(spark: SparkSession,
                          agg: DataFrame, k: Int): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
     val zero38 = lit(0).cast(d38)
     val axis = spark.range(k).select(col("id").as("variant"))
     val arms = axis.join(agg, Seq("variant"), "left")
@@ -306,15 +376,12 @@ object Abtest {
 
   /** [[srmCheckK]]'s verdict over the merged store's per-arm unit
     * counts — the A/B/n guardrail on the live dashboard. */
-  def srmKFromStore(spark: org.apache.spark.sql.SparkSession, path: String,
+  def srmKFromStore(spark: SparkSession, path: String,
                     k: Int, thrNum: Long, thrDen: Long): DataFrame = {
     require(k >= 2 && k <= 64, s"k in [2, 64], got $k")
     require(thrNum >= 0 && thrDen >= 1, s"threshold $thrNum/$thrDen invalid")
-    val merged = mergedArms(spark, path, maxVariant = k - 1L)
-    val aggs = (0 until k).map(i =>
-      coalesce(sum(when(col("variant") === i.toLong, col("n"))
-        .otherwise(0L)), lit(0L)).cast("long").as(s"n_$i"))
-    srmKCard(merged.agg(aggs.head, aggs.tail: _*), k, thrNum, thrDen)
+    srmKCard(sums(mergedArms(spark, path, maxVariant = k - 1L), Nil,
+      pivot(armsK(k), stored("n"))), k, thrNum, thrDen)
   }
 
   /** K-ARM [[srmCheck]] — the uniform-split chi-square over k arms:
@@ -329,20 +396,12 @@ object Abtest {
                 thrNum: Long, thrDen: Long): DataFrame = {
     require(k >= 2 && k <= 64, s"k in [2, 64], got $k")
     require(thrNum >= 0 && thrDen >= 1, s"threshold $thrNum/$thrDen invalid")
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
-    val units = df.select(expr(unitExpr).as("unit")).distinct()
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % $k"))
-    val aggs = (0 until k).map(i =>
-      coalesce(sum(when(col("variant") === i.toLong, 1L).otherwise(0L)),
-        lit(0L)).cast("long").as(s"n_$i"))
-    srmKCard(units.agg(aggs.head, aggs.tail: _*), k, thrNum, thrDen)
+    srmKCard(sums(assigned(df, unitExpr, salt, Nil, k = k), Nil,
+      pivot(armsK(k), cell("n", lit(1L)))), k, thrNum, thrDen)
   }
 
   private def srmKCard(agg: DataFrame, k: Int, thrNum: Long,
                        thrDen: Long): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
     val n = (0 until k).map(i => col(s"n_$i")).reduce(_ + _)
     val chi2num = (0 until k).map { i =>
       val d = lit(k.toLong) * col(s"n_$i") - n
@@ -385,32 +444,12 @@ object Abtest {
     *         lift_cuped, var_reduction */
   def cupedReadout(df: DataFrame, unitExpr: String, yExpr: String,
                    xExpr: String, salt: String): DataFrame = {
-    val units = df
-      .select(expr(unitExpr).as("unit"),
-        expr(yExpr).cast("long").as("yr"),
-        expr(xExpr).cast("long").as("xr"))
-      .groupBy(col("unit"))
-      .agg(sum(col("yr")).cast("long").as("y"),
-        sum(col("xr")).cast("long").as("x"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
-    val agg = units.agg(
-      sum(when(col("variant") === 0, 1L).otherwise(0L)).cast("long").as("n_a"),
-      sum(when(col("variant") === 1, 1L).otherwise(0L)).cast("long").as("n_b"),
-      sum(when(col("variant") === 0, col("y")).otherwise(0L)).cast("long")
-        .as("sy_a"),
-      sum(when(col("variant") === 1, col("y")).otherwise(0L)).cast("long")
-        .as("sy_b"),
-      sum(when(col("variant") === 0, col("x")).otherwise(0L)).cast("long")
-        .as("sx_a"),
-      sum(when(col("variant") === 1, col("x")).otherwise(0L)).cast("long")
-        .as("sx_b"),
-      sum(col("x").cast(d19) * col("x").cast(d19)).cast(d38).as("sxx"),
-      sum(col("x").cast(d19) * col("y").cast(d19)).cast(d38).as("sxy"),
-      sum(col("y").cast(d19) * col("y").cast(d19)).cast(d38).as("syy"))
-    cupedCard(agg)
+    val units = assigned(df, unitExpr, salt,
+      Seq(metric(yExpr, "y"), metric(xExpr, "x")))
+    cupedCard(sums(units, Nil,
+      pivot(ab, cell("n", lit(1L)), cell("sy", col("y")), cell("sx", col("x"))) ++
+        Seq(total("sxx", prod("x", "x"), d38), total("sxy", prod("x", "y"), d38),
+          total("syy", prod("y", "y"), d38))))
   }
 
   /** The CUPED card over pre-aggregated moment sums (n_a, n_b, sy_a,
@@ -420,7 +459,6 @@ object Abtest {
     * bit-for-bit. */
   private def cupedCard(agg: DataFrame,
                         gc: Seq[Column] = Nil): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
     val n = col("n_a") + col("n_b")
     val sx = (col("sx_a") + col("sx_b")).cast(d19)
     val sy = (col("sy_a") + col("sy_b")).cast(d19)
@@ -455,42 +493,11 @@ object Abtest {
     *
     * @return per tag: tag, n_a, n_b, sy_a, sy_b, theta, lift_raw,
     *         lift_cuped, var_reduction */
-  def cupedTrace(spark: org.apache.spark.sql.SparkSession,
-                 path: String): DataFrame = {
-    Stores.requireStore(spark, path, "append experiment batches first")
-    val d38 = "decimal(38,0)"
-    val rows = Stores.freshRead(spark, path)
-    val perTag = rows.groupBy(col("tag")).agg(
-      coalesce(sum(when(col("variant") === 0L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("dn_a"),
-      coalesce(sum(when(col("variant") === 1L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("dn_b"),
-      coalesce(sum(when(col("variant") === 0L, col("sy")).otherwise(0L)),
-        lit(0L)).cast("long").as("dsy_a"),
-      coalesce(sum(when(col("variant") === 1L, col("sy")).otherwise(0L)),
-        lit(0L)).cast("long").as("dsy_b"),
-      coalesce(sum(when(col("variant") === 0L, col("sx")).otherwise(0L)),
-        lit(0L)).cast("long").as("dsx_a"),
-      coalesce(sum(when(col("variant") === 1L, col("sx")).otherwise(0L)),
-        lit(0L)).cast("long").as("dsx_b"),
-      coalesce(sum(col("sxx")), lit(0).cast(d38)).cast(d38).as("dsxx"),
-      coalesce(sum(col("sxy")), lit(0).cast(d38)).cast(d38).as("dsxy"),
-      coalesce(sum(col("syy")), lit(0).cast(d38)).cast(d38).as("dsyy"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("tag"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val cum = perTag.select(col("tag"),
-      sum(col("dn_a")).over(w).cast("long").as("n_a"),
-      sum(col("dn_b")).over(w).cast("long").as("n_b"),
-      sum(col("dsy_a")).over(w).cast("long").as("sy_a"),
-      sum(col("dsy_b")).over(w).cast("long").as("sy_b"),
-      sum(col("dsx_a")).over(w).cast("long").as("sx_a"),
-      sum(col("dsx_b")).over(w).cast("long").as("sx_b"),
-      sum(col("dsxx")).over(w).cast(d38).as("sxx"),
-      sum(col("dsxy")).over(w).cast(d38).as("sxy"),
-      sum(col("dsyy")).over(w).cast(d38).as("syy"))
-    cupedCard(cum, Seq(col("tag")))
-  }
+  def cupedTrace(spark: SparkSession,
+                 path: String): DataFrame =
+    cupedCard(trace(spark, path, "cupedTrace",
+      Seq("n" -> "long", "sy" -> "long", "sx" -> "long"),
+      Seq("sxx" -> d38, "sxy" -> d38, "syy" -> d38)), Seq(col("tag")))
 
   /** Ratio-metric experiment readout with the DELTA-METHOD variance
     * (Deng, Knoblich & Lu, KDD 2018 — the standard for metrics like
@@ -511,41 +518,11 @@ object Abtest {
     *         ratio_b, diff, z */
   def ratioReadout(df: DataFrame, unitExpr: String, xExpr: String,
                    yExpr: String, salt: String): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
-    val units = df
-      .select(expr(unitExpr).as("unit"),
-        expr(xExpr).cast("long").as("xr"),
-        expr(yExpr).cast("long").as("yr"))
-      .groupBy(col("unit"))
-      .agg(sum(col("xr")).cast("long").as("x"),
-        sum(col("yr")).cast("long").as("y"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    // ONE pass over the unit grain — CASE-gated sums per arm (the
-    // cupedReadout shape), not two filtered re-aggregations of the
-    // same per-unit groupBy + md5 bucketing
-    def armAggs(v: Int, sfx: String): Seq[Column] = {
-      val in = col("variant") === v
-      Seq(
-        coalesce(sum(when(in, 1L).otherwise(0L)), lit(0L)).cast("long")
-          .as(s"n_$sfx"),
-        coalesce(sum(when(in, col("x")).otherwise(0L)), lit(0L))
-          .cast("long").as(s"sx_$sfx"),
-        coalesce(sum(when(in, col("y")).otherwise(0L)), lit(0L))
-          .cast("long").as(s"sy_$sfx"),
-        coalesce(sum(when(in, (col("x").cast(d19) * col("x").cast(d19))
-            .cast(d38)).otherwise(lit(0).cast(d38))), lit(0).cast(d38))
-          .cast(d38).as(s"sxx_$sfx"),
-        coalesce(sum(when(in, (col("x").cast(d19) * col("y").cast(d19))
-            .cast(d38)).otherwise(lit(0).cast(d38))), lit(0).cast(d38))
-          .cast(d38).as(s"sxy_$sfx"),
-        coalesce(sum(when(in, (col("y").cast(d19) * col("y").cast(d19))
-            .cast(d38)).otherwise(lit(0).cast(d38))), lit(0).cast(d38))
-          .cast(d38).as(s"syy_$sfx"))
-    }
-    val aggs = armAggs(0, "a") ++ armAggs(1, "b")
-    val j = units.agg(aggs.head, aggs.tail: _*)
+    val units = assigned(df, unitExpr, salt,
+      Seq(metric(xExpr, "x"), metric(yExpr, "y")))
+    val j = sums(units, Nil, pivot(ab, cell("n", lit(1L)), cell("sx", col("x")),
+      cell("sy", col("y")), cell("sxx", prod("x", "x"), d38),
+      cell("sxy", prod("x", "y"), d38), cell("syy", prod("y", "y"), d38)))
     // per-arm pieces, each mirrored verbatim in the oracle SQL
     def pieces(s: String): (Column, Column) = {
       val n = col(s"n_$s"); val sx = col(s"sx_$s"); val sy = col(s"sy_$s")
@@ -595,21 +572,7 @@ object Abtest {
   def mdeCard(df: DataFrame, unitExpr: String, convExpr: String,
               salt: String, zAlpha: Double = 1.959964,
               zBeta: Double = 0.841621): DataFrame = {
-    val units = df
-      .select(expr(unitExpr).as("unit"),
-        expr(convExpr).cast("boolean").as("c"))
-      .groupBy(col("unit"))
-      .agg(max(when(col("c"), 1L).otherwise(0L)).as("converted"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    val agg = units.agg(
-      sum(when(col("variant") === 0, 1L).otherwise(0L)).cast("long").as("n_a"),
-      sum(when(col("variant") === 1, 1L).otherwise(0L)).cast("long").as("n_b"),
-      sum(when(col("variant") === 0, col("converted")).otherwise(0L))
-        .cast("long").as("conv_a"),
-      sum(when(col("variant") === 1, col("converted")).otherwise(0L))
-        .cast("long").as("conv_b"))
+    val agg = conversionArms(df, unitExpr, convExpr, salt)
     val p = (col("conv_a") + col("conv_b")).cast("double") /
       (col("n_a") + col("n_b")).cast("double")
     val emptyArm = col("n_a") === 0L || col("n_b") === 0L
@@ -639,21 +602,7 @@ object Abtest {
     *         rate_b, lo_b, hi_b, overlap */
   def wilsonCi(df: DataFrame, unitExpr: String, convExpr: String,
                salt: String, z: Double = 1.959964): DataFrame = {
-    val units = df
-      .select(expr(unitExpr).as("unit"),
-        expr(convExpr).cast("boolean").as("c"))
-      .groupBy(col("unit"))
-      .agg(max(when(col("c"), 1L).otherwise(0L)).as("converted"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    val agg = units.agg(
-      sum(when(col("variant") === 0, 1L).otherwise(0L)).cast("long").as("n_a"),
-      sum(when(col("variant") === 1, 1L).otherwise(0L)).cast("long").as("n_b"),
-      sum(when(col("variant") === 0, col("converted")).otherwise(0L))
-        .cast("long").as("conv_a"),
-      sum(when(col("variant") === 1, col("converted")).otherwise(0L))
-        .cast("long").as("conv_b"))
+    val agg = conversionArms(df, unitExpr, convExpr, salt)
     def bounds(nC: Column, convC: Column): (Column, Column, Column) = {
       val n = nC.cast("double"); val p = convC.cast("double") / n
       val z2 = lit(z) * lit(z)
@@ -695,16 +644,8 @@ object Abtest {
   def srmCheck(df: DataFrame, unitExpr: String, salt: String,
                thrNum: Long = 384L, thrDen: Long = 100L): DataFrame = {
     require(thrNum >= 0 && thrDen >= 1, s"threshold $thrNum/$thrDen invalid")
-    val units = df.select(expr(unitExpr).as("unit")).distinct()
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    val agg = units.agg(
-      coalesce(sum(when(col("variant") === 0L, 1L).otherwise(0L)), lit(0L))
-        .cast("long").as("n_a"),
-      coalesce(sum(when(col("variant") === 1L, 1L).otherwise(0L)), lit(0L))
-        .cast("long").as("n_b"))
-    srmCard(agg, thrNum, thrDen)
+    srmCard(sums(assigned(df, unitExpr, salt, Nil), Nil,
+      pivot(ab, cell("n", lit(1L)))), thrNum, thrDen)
   }
 
   /** [[srmCheck]] read off the experiment store's merged per-arm unit
@@ -712,15 +653,11 @@ object Abtest {
     * [[readoutFromStore]] consumer checks this first, and it costs one
     * scan of the model-sized store. Inherits the store's
     * unit-partitioning contract. */
-  def srmFromStore(spark: org.apache.spark.sql.SparkSession, path: String,
+  def srmFromStore(spark: SparkSession, path: String,
                    thrNum: Long = 384L, thrDen: Long = 100L): DataFrame = {
     require(thrNum >= 0 && thrDen >= 1, s"threshold $thrNum/$thrDen invalid")
-    val agg = mergedArms(spark, path).agg(
-      coalesce(sum(when(col("variant") === 0L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("n_a"),
-      coalesce(sum(when(col("variant") === 1L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("n_b"))
-    srmCard(agg, thrNum, thrDen)
+    srmCard(sums(mergedArms(spark, path), Nil, pivot(ab, stored("n"))),
+      thrNum, thrDen)
   }
 
   /** Emission bound: srm_num = (n_a−n_b)² is a long, so the card
@@ -731,7 +668,6 @@ object Abtest {
     * guardrail exactly when it should alarm). */
   private def srmCard(agg: DataFrame, thrNum: Long, thrDen: Long,
                       gc: Seq[Column] = Nil): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
     val d = col("n_a") - col("n_b")
     agg.select((gc ++ Seq((col("n_a") + col("n_b")).as("n_units"),
       col("n_a"), col("n_b"),
@@ -755,23 +691,11 @@ object Abtest {
     *
     * @return per tag: tag, n_units, n_a, n_b, srm_num, srm_den,
     *         srm_chi2, mismatch */
-  def srmTrace(spark: org.apache.spark.sql.SparkSession, path: String,
+  def srmTrace(spark: SparkSession, path: String,
                thrNum: Long = 384L, thrDen: Long = 100L): DataFrame = {
     require(thrNum >= 0 && thrDen >= 1, s"threshold $thrNum/$thrDen invalid")
-    Stores.requireStore(spark, path, "append experiment batches first")
-    val rows = Stores.freshRead(spark, path)
-    val perTag = rows.groupBy(col("tag")).agg(
-      coalesce(sum(when(col("variant") === 0L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("dn_a"),
-      coalesce(sum(when(col("variant") === 1L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("dn_b"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("tag"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val cum = perTag.select(col("tag"),
-      sum(col("dn_a")).over(w).cast("long").as("n_a"),
-      sum(col("dn_b")).over(w).cast("long").as("n_b"))
-    srmCard(cum, thrNum, thrDen, Seq(col("tag")))
+    srmCard(trace(spark, path, "srmTrace", Seq("n" -> "long")),
+      thrNum, thrDen, Seq(col("tag")))
   }
 
   /** Deterministic permutation test on the conversion lift — the
@@ -800,11 +724,7 @@ object Abtest {
                       salt: String, rounds: Int = 199): DataFrame = {
     require(rounds >= 1 && rounds <= 9999,
       s"rounds in [1, 9999], got $rounds")
-    val units = df
-      .select(expr(unitExpr).as("unit"),
-        expr(convExpr).cast("boolean").as("c"))
-      .groupBy(col("unit"))
-      .agg(max(when(col("c"), 1L).otherwise(0L)).as("converted"))
+    val units = unitGrain(df, unitExpr, Seq(converted(convExpr)))
     // r = -1 is the observed assignment (the salt itself); r ≥ 0 the
     // re-draws — one explode, one keyed aggregation
     val rep = units.select(col("unit"), col("converted"),
@@ -812,18 +732,9 @@ object Abtest {
       .withColumn("saltr",
         when(col("r") === -1L, lit(salt))
           .otherwise(concat(lit(s"$salt#"), col("r").cast("string"))))
-      .withColumn("variant",
-        expr("cast(conv(substring(md5(concat(cast(unit as string), " +
-          "saltr)), 1, 7), 16, 10) as bigint) % 2"))
-    val perR = rep.groupBy(col("r")).agg(
-      sum(when(col("variant") === 0L, 1L).otherwise(0L)).cast("long")
-        .as("n_a"),
-      sum(when(col("variant") === 0L, col("converted")).otherwise(0L))
-        .cast("long").as("conv_a"),
-      sum(when(col("variant") === 1L, 1L).otherwise(0L)).cast("long")
-        .as("n_b"),
-      sum(when(col("variant") === 1L, col("converted")).otherwise(0L))
-        .cast("long").as("conv_b"))
+      .withColumn("variant", variant(col("saltr"), 2))
+    val perR = sums(rep, Seq(col("r")),
+      pivot(ab, cell("n", lit(1L)), cell("conv", col("converted"))))
     val lift = when(col("n_a") === 0L || col("n_b") === 0L,
         lit(null).cast("double"))
       .otherwise(col("conv_b").cast("double") / col("n_b").cast("double") -
@@ -869,21 +780,9 @@ object Abtest {
   def mdeMeanCard(df: DataFrame, unitExpr: String, yExpr: String,
                   salt: String, zAlpha: Double = 1.959964,
                   zBeta: Double = 0.841621): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
-    val units = df
-      .select(expr(unitExpr).as("unit"), expr(yExpr).cast("long").as("yr"))
-      .groupBy(col("unit"))
-      .agg(sum(col("yr")).cast("long").as("y"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    val agg = units.agg(
-      sum(when(col("variant") === 0L, 1L).otherwise(0L)).cast("long")
-        .as("n_a"),
-      sum(when(col("variant") === 1L, 1L).otherwise(0L)).cast("long")
-        .as("n_b"),
-      sum(col("y")).cast("long").as("sy"),
-      sum(col("y").cast(d19) * col("y").cast(d19)).cast(d38).as("syy"))
+    val agg = sums(assigned(df, unitExpr, salt, Seq(metric(yExpr, "y"))), Nil,
+      pivot(ab, cell("n", lit(1L))) ++
+        Seq(total("sy", col("y")), total("syy", prod("y", "y"), d38)))
     val n = col("n_a") + col("n_b")
     val s2num = (n.cast(d19) * col("syy") -
       (col("sy").cast(d19) * col("sy").cast(d19)).cast(d38)).cast(d38)
@@ -916,29 +815,9 @@ object Abtest {
     * @return one row: n_a, n_b, sy_a, sy_b, mean_a, mean_b, lift,
     *         t_welch, df_welch */
   def meanReadout(df: DataFrame, unitExpr: String, yExpr: String,
-                  salt: String): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
-    val units = df
-      .select(expr(unitExpr).as("unit"), expr(yExpr).cast("long").as("yr"))
-      .groupBy(col("unit"))
-      .agg(sum(col("yr")).cast("long").as("y"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    def arm(v: Int, sfx: String): Seq[Column] = {
-      val in = col("variant") === v
-      Seq(
-        coalesce(sum(when(in, 1L).otherwise(0L)), lit(0L)).cast("long")
-          .as(s"n_$sfx"),
-        coalesce(sum(when(in, col("y")).otherwise(0L)), lit(0L))
-          .cast("long").as(s"sy_$sfx"),
-        coalesce(sum(when(in, (col("y").cast(d19) * col("y").cast(d19))
-            .cast(d38)).otherwise(lit(0).cast(d38))), lit(0).cast(d38))
-          .cast(d38).as(s"syy_$sfx"))
-    }
-    val aggs = arm(0, "a") ++ arm(1, "b")
-    meanCard(units.agg(aggs.head, aggs.tail: _*))
-  }
+                  salt: String): DataFrame =
+    meanCard(sums(assigned(df, unitExpr, salt, Seq(metric(yExpr, "y"))), Nil,
+      pivot(ab, meanCells: _*)))
 
   /** WINSORIZED [[meanReadout]] — the heavy-tail-robust Welch card:
     * per-unit metric sums are capped at the POOLED distribution's
@@ -959,15 +838,7 @@ object Abtest {
                             capNum: Int, capDen: Int): DataFrame = {
     require(capNum >= 1 && capDen >= capNum,
       s"cap quantile $capNum/$capDen invalid")
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
-    val units = df
-      .select(expr(unitExpr).as("unit"), expr(yExpr).cast("long").as("yr"))
-      .groupBy(col("unit"))
-      .agg(sum(col("yr")).cast("long").as("y"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-      .persist()
+    val units = assigned(df, unitExpr, salt, Seq(metric(yExpr, "y"))).persist()
     // EAGER count: (a) materializes the persisted unit grain once for
     // its two consumers (the cap histogram and the moment sums), and
     // (b) guards the empty-input case — Quantiles.quantiles takes a
@@ -986,21 +857,10 @@ object Abtest {
     val capped = units.crossJoin(broadcast(capRow))
       .select(col("variant"), col("cap"),
         least(col("y"), col("cap")).as("y"))
-    def arm(v: Int, sfx: String): Seq[Column] = {
-      val in = col("variant") === v
-      Seq(
-        coalesce(sum(when(in, 1L).otherwise(0L)), lit(0L)).cast("long")
-          .as(s"n_$sfx"),
-        coalesce(sum(when(in, col("y")).otherwise(0L)), lit(0L))
-          .cast("long").as(s"sy_$sfx"),
-        coalesce(sum(when(in, (col("y").cast(d19) * col("y").cast(d19))
-            .cast(d38)).otherwise(lit(0).cast(d38))), lit(0).cast(d38))
-          .cast(d38).as(s"syy_$sfx"))
-    }
-    val aggs = max(col("cap")).as("cap") +: (arm(0, "a") ++ arm(1, "b"))
     // the card is ONE row: materialize it (leaf plan), then release
     // the unit grain deterministically — no caller clearCache debt
-    val out = meanCard(capped.agg(aggs.head, aggs.tail: _*),
+    val out = meanCard(sums(capped, Nil,
+      max(col("cap")).as("cap") +: pivot(ab, meanCells: _*)),
       Seq(col("cap"))).localCheckpoint(true)
     units.unpersist()
     out
@@ -1020,55 +880,30 @@ object Abtest {
                  salt: String, thrNum: Long = 384L,
                  thrDen: Long = 100L): DataFrame = {
     require(thrNum >= 0 && thrDen >= 1, s"threshold $thrNum/$thrDen invalid")
-    val units = df
-      .select(expr(segmentExpr).as("segment"), expr(unitExpr).as("unit"))
-      .distinct()
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    val agg = units.groupBy(col("segment")).agg(
-      coalesce(sum(when(col("variant") === 0L, 1L).otherwise(0L)), lit(0L))
-        .cast("long").as("n_a"),
-      coalesce(sum(when(col("variant") === 1L, 1L).otherwise(0L)), lit(0L))
-        .cast("long").as("n_b"))
-    srmCard(agg, thrNum, thrDen, Seq(col("segment")))
+    val units = assigned(df, unitExpr, salt, Nil,
+      Seq(expr(segmentExpr).as("segment")))
+    srmCard(sums(units, Seq(col("segment")), pivot(ab, cell("n", lit(1L)))),
+      thrNum, thrDen, Seq(col("segment")))
   }
 
   /** [[meanReadout]]'s card over the merged experiment store (per-arm
     * n/sy/syy are exactly what [[momentsStoreAppend]] maintains) — the
     * live continuous-metric dashboard next to [[readoutFromStore]]'s
     * conversion one. */
-  def meanReadoutFromStore(spark: org.apache.spark.sql.SparkSession,
+  def meanReadoutFromStore(spark: SparkSession,
                            path: String): DataFrame =
     meanCard(armsToMeanAgg(mergedArms(spark, path)))
 
   /** [[meanReadoutFromStore]] cut at a batch tag — the audit read. */
-  def meanReadoutFromStoreAsOf(spark: org.apache.spark.sql.SparkSession,
+  def meanReadoutFromStoreAsOf(spark: SparkSession,
                                path: String, asOfTag: String): DataFrame =
     meanCard(armsToMeanAgg(mergedArms(spark, path, Some(asOfTag))))
 
-  private def armsToMeanAgg(merged: DataFrame): DataFrame = {
-    val d38 = "decimal(38,0)"
-    merged.agg(
-      coalesce(sum(when(col("variant") === 0L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("n_a"),
-      coalesce(sum(when(col("variant") === 0L, col("sy")).otherwise(0L)),
-        lit(0L)).cast("long").as("sy_a"),
-      coalesce(sum(when(col("variant") === 0L, col("syy"))
-        .otherwise(lit(0).cast(d38))), lit(0).cast(d38)).cast(d38)
-        .as("syy_a"),
-      coalesce(sum(when(col("variant") === 1L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("n_b"),
-      coalesce(sum(when(col("variant") === 1L, col("sy")).otherwise(0L)),
-        lit(0L)).cast("long").as("sy_b"),
-      coalesce(sum(when(col("variant") === 1L, col("syy"))
-        .otherwise(lit(0).cast(d38))), lit(0).cast(d38)).cast(d38)
-        .as("syy_b"))
-  }
+  private def armsToMeanAgg(merged: DataFrame): DataFrame =
+    sums(merged, Nil, pivot(ab, stored("n"), stored("sy"), stored("syy", d38)))
 
   private def meanCard(agg: DataFrame,
                        gc: Seq[Column] = Nil): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
     def v(sfx: String): Column = {
       val n = col(s"n_$sfx")
       ((n.cast(d19) * col(s"syy_$sfx")).cast(d38) -
@@ -1123,16 +958,8 @@ object Abtest {
     require(strata.size >= 2 && strata.size <= 16,
       s"2..16 named strata, got ${strata.size}")
     require(strata.distinct.size == strata.size, "duplicate stratum names")
-    val units = df
-      .select(expr(unitExpr).as("unit"),
-        expr(convExpr).cast("boolean").as("c"),
-        expr(strataExpr).cast("string").as("st"))
-      .groupBy(col("unit"))
-      .agg(max(when(col("c"), 1L).otherwise(0L)).as("converted"),
-        min(col("st")).as("st"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
+    val units = assigned(df, unitExpr, salt, Seq(converted(convExpr),
+      (expr(strataExpr).cast("string").as("st"), min(col("st")).as("st"))))
     val named = col("st").isin(strata.map(_.asInstanceOf[Any]): _*)
     val aggs = Seq(
       coalesce(sum(when(!named || col("st").isNull, 1L).otherwise(0L)),
@@ -1195,17 +1022,10 @@ object Abtest {
     * @return per level: p_label, target_a, lo_a, target_b, lo_b, qte */
   def quantileLift(df: DataFrame, unitExpr: String, yExpr: String,
                    salt: String, bucketWidth: Long,
-                   qs: Seq[(String, Int, Int)]): DataFrame = {
-    val units = df
-      .select(expr(unitExpr).as("unit"), expr(yExpr).cast("long").as("yr"))
-      .groupBy(col("unit"))
-      .agg(sum(col("yr")).cast("long").as("y"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    val hist = Quantiles.histogramBy(units, Seq("variant"), "y", bucketWidth)
-    qteCard(hist, bucketWidth, qs)
-  }
+                   qs: Seq[(String, Int, Int)]): DataFrame =
+    qteCard(Quantiles.histogramBy(
+      assigned(df, unitExpr, salt, Seq(metric(yExpr, "y"))),
+      Seq("variant"), "y", bucketWidth), bucketWidth, qs)
 
   /** The QTE card over a per-arm histogram — shared by the one-shot
     * [[quantileLift]] and the store reads so all emit the SAME
@@ -1237,22 +1057,15 @@ object Abtest {
     * exactly-once via the store's markers. */
   def quantileLiftStoreAppend(df: DataFrame, path: String, batchTag: String,
                               unitExpr: String, yExpr: String, salt: String,
-                              bucketWidth: Long): Unit = {
-    val units = df
-      .select(expr(unitExpr).as("unit"), expr(yExpr).cast("long").as("yr"))
-      .groupBy(col("unit"))
-      .agg(sum(col("yr")).cast("long").as("y"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % 2"))
-    Quantiles.storeAppendBy(units, path, batchTag, Seq("variant"), "y",
-      bucketWidth)
-  }
+                              bucketWidth: Long): Unit =
+    Quantiles.storeAppendBy(
+      assigned(df, unitExpr, salt, Seq(metric(yExpr, "y"))),
+      path, batchTag, Seq("variant"), "y", bucketWidth)
 
   /** [[quantileLift]]'s card over the merged per-arm histogram store —
     * the maintained heavy-tail dashboard: reads only the model-sized
     * (arm × bucket) rows, never unit history. */
-  def quantileLiftFromStore(spark: org.apache.spark.sql.SparkSession,
+  def quantileLiftFromStore(spark: SparkSession,
                             path: String, bucketWidth: Long,
                             qs: Seq[(String, Int, Int)]): DataFrame =
     qteCard(Quantiles.fromStoreBy(spark, path, Seq("variant")),
@@ -1260,7 +1073,7 @@ object Abtest {
 
   /** [[quantileLiftFromStore]] cut at a batch tag — the QTE card's
     * decision-audit read. */
-  def quantileLiftFromStoreAsOf(spark: org.apache.spark.sql.SparkSession,
+  def quantileLiftFromStoreAsOf(spark: SparkSession,
                                 path: String, asOfTag: String,
                                 bucketWidth: Long,
                                 qs: Seq[(String, Int, Int)]): DataFrame =
@@ -1278,7 +1091,7 @@ object Abtest {
     *
     * @return per (tag, level): tag, p_label, target_a, lo_a,
     *         target_b, lo_b, qte */
-  def quantileLiftTrace(spark: org.apache.spark.sql.SparkSession,
+  def quantileLiftTrace(spark: SparkSession,
                         path: String, bucketWidth: Long,
                         qs: Seq[(String, Int, Int)]): DataFrame = {
     Stores.requireStore(spark, path, "append experiment batches first")
@@ -1337,29 +1150,16 @@ object Abtest {
     * metric/covariate summed), then one row per arm. */
   private def armMoments(df: DataFrame, unitExpr: String, convExpr: String,
                          yExpr: String, xExpr: String, salt: String,
-                         k: Int = 2): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
-    val units = df
-      .select(expr(unitExpr).as("unit"),
-        expr(convExpr).cast("boolean").as("c"),
-        expr(yExpr).cast("long").as("yr"),
-        expr(xExpr).cast("long").as("xr"))
-      .groupBy(col("unit"))
-      .agg(max(when(col("c"), 1L).otherwise(0L)).as("converted"),
-        sum(col("yr")).cast("long").as("y"),
-        sum(col("xr")).cast("long").as("x"))
-      .withColumn("variant",
-        expr(s"cast(conv(substring(md5(concat(cast(unit as string), " +
-          s"'$salt')), 1, 7), 16, 10) as bigint) % $k"))
-    units.groupBy(col("variant")).agg(
+                         k: Int = 2): DataFrame =
+    assigned(df, unitExpr, salt, Seq(converted(convExpr), metric(yExpr, "y"),
+      metric(xExpr, "x")), k = k).groupBy(col("variant")).agg(
       count(lit(1)).cast("long").as("n"),
       sum(col("converted")).cast("long").as("conv"),
       sum(col("y")).cast("long").as("sy"),
       sum(col("x")).cast("long").as("sx"),
-      sum(col("x").cast(d19) * col("x").cast(d19)).cast(d38).as("sxx"),
-      sum(col("x").cast(d19) * col("y").cast(d19)).cast(d38).as("sxy"),
-      sum(col("y").cast(d19) * col("y").cast(d19)).cast(d38).as("syy"))
-  }
+      sum(prod("x", "x")).cast(d38).as("sxx"),
+      sum(prod("x", "y")).cast(d38).as("sxy"),
+      sum(prod("y", "y")).cast(d38).as("syy"))
 
   /** The store's merged per-arm state (plain sums — the additive
     * contract), optionally cut at a batch tag (`tag <= asOfTag`) for
@@ -1371,12 +1171,11 @@ object Abtest {
     * arms from the 0..k−1 axis — plausible-but-wrong dashboard numbers.
     * The assert rides the model-sized per-arm rows at zero plan cost
     * (the axisGuard convention); two-arm readers keep the default 1. */
-  private def mergedArms(spark: org.apache.spark.sql.SparkSession,
+  private def mergedArms(spark: SparkSession,
                          path: String,
                          asOfTag: Option[String] = None,
                          maxVariant: Long = 1L): DataFrame = {
     Stores.requireStore(spark, path, "append experiment batches first")
-    val d38 = "decimal(38,0)"
     val read = Stores.freshRead(spark, path)
     asOfTag.fold(read)(t => read.filter(col("tag") <= t))
       .groupBy(col("variant")).agg(
@@ -1398,7 +1197,7 @@ object Abtest {
   /** [[readout]]'s card over the merged store — the maintained
     * conversion dashboard (rates, lift, z), never rescanning unit
     * history. */
-  def readoutFromStore(spark: org.apache.spark.sql.SparkSession,
+  def readoutFromStore(spark: SparkSession,
                        path: String): DataFrame =
     readoutOverArms(mergedArms(spark, path))
 
@@ -1413,37 +1212,10 @@ object Abtest {
     *
     * @return per tag: tag, n_a, conv_a, n_b, conv_b, rate_a, rate_b,
     *         lift, z */
-  def readoutTrace(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame = {
-    Stores.requireStore(spark, path, "append experiment batches first")
-    val rows = Stores.freshRead(spark, path)
-    val perTag = rows.groupBy(col("tag")).agg(
-      coalesce(sum(when(col("variant") === 0L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("dn_a"),
-      coalesce(sum(when(col("variant") === 0L, col("conv")).otherwise(0L)),
-        lit(0L)).cast("long").as("dc_a"),
-      coalesce(sum(when(col("variant") === 1L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("dn_b"),
-      coalesce(sum(when(col("variant") === 1L, col("conv")).otherwise(0L)),
-        lit(0L)).cast("long").as("dc_b"),
-      max(col("variant")).as("max_var"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("tag"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    // loud two-arm guard (the mergedArms maxVariant convention): a
-    // store appended with k > 2 must not render a silently-wrong trace
-    val varGuard = coalesce(assert_true(col("max_var") <= 1L,
-      concat(lit(s"experiment store $path holds variant "),
-        col("max_var").cast("string"),
-        lit(" — readoutTrace reads two-arm stores only"))).cast("long"),
-      lit(0L))
-    val cum = perTag.select(col("tag"),
-      (sum(col("dn_a")).over(w).cast("long") + varGuard).as("n_a"),
-      sum(col("dc_a")).over(w).cast("long").as("conv_a"),
-      sum(col("dn_b")).over(w).cast("long").as("n_b"),
-      sum(col("dc_b")).over(w).cast("long").as("conv_b"))
-    readoutCard(cum, Seq(col("tag")))
-  }
+  def readoutTrace(spark: SparkSession,
+                   path: String): DataFrame =
+    readoutCard(trace(spark, path, "readoutTrace",
+      Seq("n" -> "long", "conv" -> "long")), Seq(col("tag")))
 
   /** [[readoutTrace]]'s CONTINUOUS-metric twin — one Welch-t
     * [[meanReadout]] row per batch tag over the cumulative store
@@ -1456,44 +1228,38 @@ object Abtest {
     *
     * @return per tag: tag, n_a, n_b, sy_a, sy_b, mean_a, mean_b,
     *         lift, t_welch, df_welch */
-  def meanReadoutTrace(spark: org.apache.spark.sql.SparkSession,
-                       path: String): DataFrame = {
+  def meanReadoutTrace(spark: SparkSession,
+                       path: String): DataFrame =
+    meanCard(trace(spark, path, "meanReadoutTrace",
+      Seq("n" -> "long", "sy" -> "long", "syy" -> d38)), Seq(col("tag")))
+
+  /** The one trace body: per batch tag, [[pivot]] the store's per-arm
+    * columns `armed` (and sum the `pooled` ones) into deltas `d<name>`,
+    * then one window over `tag` (≤ #batches model-sized rows; unit
+    * history is never rescanned) folds them into the cumulative prefix.
+    * Row t is the merged store cut at t, i.e. the as-of read. A loud
+    * two-arm guard (the [[mergedArms]] maxVariant convention) rides
+    * `n_a`: a store appended with k > 2 raises, naming `fn`. */
+  private def trace(spark: SparkSession, path: String, fn: String,
+                    armed: Seq[(String, String)],
+                    pooled: Seq[(String, String)] = Nil): DataFrame = {
     Stores.requireStore(spark, path, "append experiment batches first")
-    val d38 = "decimal(38,0)"
-    val rows = Stores.freshRead(spark, path)
-    val perTag = rows.groupBy(col("tag")).agg(
-      coalesce(sum(when(col("variant") === 0L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("dn_a"),
-      coalesce(sum(when(col("variant") === 0L, col("sy")).otherwise(0L)),
-        lit(0L)).cast("long").as("dsy_a"),
-      coalesce(sum(when(col("variant") === 0L, col("syy"))
-        .otherwise(lit(0).cast(d38))), lit(0).cast(d38)).cast(d38)
-        .as("dsyy_a"),
-      coalesce(sum(when(col("variant") === 1L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("dn_b"),
-      coalesce(sum(when(col("variant") === 1L, col("sy")).otherwise(0L)),
-        lit(0L)).cast("long").as("dsy_b"),
-      coalesce(sum(when(col("variant") === 1L, col("syy"))
-        .otherwise(lit(0).cast(d38))), lit(0).cast(d38)).cast(d38)
-        .as("dsyy_b"),
-      max(col("variant")).as("max_var"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("tag"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    // loud two-arm guard — the readoutTrace/mergedArms convention
-    val varGuard = coalesce(assert_true(col("max_var") <= 1L,
+    val perTag = sums(Stores.freshRead(spark, path), Seq(col("tag")),
+      pivot(ab, armed.map { case (c, t) => cell(s"d$c", col(c), t) }: _*) ++
+        pooled.map { case (c, t) => total(s"d$c", col(c), t) } :+
+        max(col("variant")).as("max_var"))
+    val w = Window.orderBy(col("tag"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val guard = coalesce(assert_true(col("max_var") <= 1L,
       concat(lit(s"experiment store $path holds variant "),
         col("max_var").cast("string"),
-        lit(" — meanReadoutTrace reads two-arm stores only"))).cast("long"),
-      lit(0L))
-    val cum = perTag.select(col("tag"),
-      (sum(col("dn_a")).over(w).cast("long") + varGuard).as("n_a"),
-      sum(col("dsy_a")).over(w).cast("long").as("sy_a"),
-      sum(col("dsyy_a")).over(w).cast(d38).as("syy_a"),
-      sum(col("dn_b")).over(w).cast("long").as("n_b"),
-      sum(col("dsy_b")).over(w).cast("long").as("sy_b"),
-      sum(col("dsyy_b")).over(w).cast(d38).as("syy_b"))
-    meanCard(cum, Seq(col("tag")))
+        lit(s" — $fn reads two-arm stores only"))).cast("long"), lit(0L))
+    val outs = (for (arm <- ab; (c, t) <- armed) yield (s"${c}_$arm", t)) ++
+      pooled
+    perTag.select(col("tag") +: outs.map { case (name, t) =>
+      val cum = sum(col(s"d$name")).over(w).cast(t)
+      (if (name == outs.head._1) cum + guard else cum).as(name)
+    }: _*)
   }
 
   /** [[boundaryTrace]]'s CONTINUOUS-metric twin — the alpha-spending
@@ -1507,51 +1273,11 @@ object Abtest {
     *
     * @return per tag: tag, look, n_a, n_b, t (6-dp), t_bound,
     *         crossed, stopped */
-  def boundaryTraceMean(spark: org.apache.spark.sql.SparkSession,
+  def boundaryTraceMean(spark: SparkSession,
                         path: String,
-                        bounds: Seq[Double] = ObrienFleming3): DataFrame = {
-    require(bounds.nonEmpty && bounds.size <= 64,
-      s"1..64 planned looks, got ${bounds.size}")
-    val wOrd = org.apache.spark.sql.expressions.Window.orderBy(col("tag"))
-    val wCum = wOrd.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.currentRow)
-    // look indices ride lexicographic tag order, and the spending
-    // schedule attaches statistical meaning to that order: 'b10'
-    // sorting before 'b2' would hand looks the WRONG bounds silently.
-    // Fixed-width (zero-padded) tags make lexicographic = append
-    // order; mixed widths raise loudly ([[boundaryTrace]]'s guard).
-    val wAll = wOrd.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val widthGuard = coalesce(assert_true(
-      min(length(col("tag"))).over(wAll) ===
-        max(length(col("tag"))).over(wAll),
-      lit("boundaryTraceMean: batch tags must be fixed-width " +
-        "(zero-padded) so lexicographic look order is append order"))
-      .cast("long"), lit(0L))
-    val looked = meanReadoutTrace(spark, path)
-      .withColumn("look", row_number().over(wOrd).cast("long") + widthGuard)
-    val bound = bounds.zipWithIndex.tail
-      .foldLeft(when(col("look") === 1L, lit(bounds.head))) {
-        case (acc, (b, i)) => acc.when(col("look") === (i + 1).toLong, lit(b))
-      }
-      .otherwise(raise_error(concat(
-        lit("boundaryTraceMean: look "), col("look").cast("string"),
-        lit(s" exceeds the ${bounds.size}-look spending schedule")))
-        .cast("double"))
-    val tr = round(col("t_welch"), 6)
-    looked
-      .withColumn("t_bound", bound)
-      .withColumn("crossed",
-        when(col("t_welch").isNull, lit(null).cast("boolean"))
-          .otherwise(abs(tr) >= col("t_bound")))
-      .withColumn("stopped",
-        max(coalesce(col("crossed"), lit(false)).cast("int")).over(wCum)
-          === 1)
-      .select(col("tag"), col("look"), col("n_a"), col("n_b"),
-        tr.as("t"), col("t_bound"), col("crossed"), col("stopped"))
-  }
+                        bounds: Seq[Double] = ObrienFleming3): DataFrame =
+    spendingBoundary("boundaryTraceMean", bounds,
+      meanReadoutTrace(spark, path), "t_welch", "t", Seq("n_a", "n_b"))
 
   /** O'Brien–Fleming two-sided group-sequential z boundaries for
     * K = 3 equally-spaced looks at overall α = 0.05 (O'Brien &
@@ -1583,103 +1309,87 @@ object Abtest {
     *               defaults to [[ObrienFleming3]]
     * @return per tag: tag, look, n_a, conv_a, n_b, conv_b, z (6-dp),
     *         z_bound, crossed, stopped */
-  def boundaryTrace(spark: org.apache.spark.sql.SparkSession, path: String,
-                    bounds: Seq[Double] = ObrienFleming3): DataFrame = {
+  def boundaryTrace(spark: SparkSession, path: String,
+                    bounds: Seq[Double] = ObrienFleming3): DataFrame =
+    spendingBoundary("boundaryTrace", bounds, readoutTrace(spark, path),
+      "z", "z", Seq("n_a", "conv_a", "n_b", "conv_b"))
+
+  /** The one spending-boundary body behind [[boundaryTrace]] and
+    * [[boundaryTraceMean]]: look k is the k-th row of `tr` in tag
+    * order; `stat` rounded to 6 dp is emitted as `out` next to its
+    * bound `<out>_bound`, with `keep` passed through. Error messages
+    * name the public `fn`; `tr` is by name so the bounds check runs
+    * before the store is read. */
+  private def spendingBoundary(fn: String, bounds: Seq[Double],
+                               tr: => DataFrame, stat: String, out: String,
+                               keep: Seq[String]): DataFrame = {
     require(bounds.nonEmpty && bounds.size <= 64,
       s"1..64 planned looks, got ${bounds.size}")
-    val wOrd = org.apache.spark.sql.expressions.Window.orderBy(col("tag"))
-    val wCum = wOrd.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.currentRow)
-    // the spending schedule attaches statistical meaning to the trace's
-    // lexicographic tag order — require fixed-width (zero-padded) tags
-    // so look k provably maps to append k (see boundaryTraceMean)
-    val wAll = wOrd.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.unboundedFollowing)
+    val wOrd = Window.orderBy(col("tag"))
+    val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // look indices ride lexicographic tag order, and the spending
+    // schedule attaches statistical meaning to that order: 'b10'
+    // sorting before 'b2' would hand looks the WRONG bounds silently.
+    // Fixed-width (zero-padded) tags make lexicographic = append
+    // order; mixed widths raise loudly.
+    val wAll = wOrd.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
     val widthGuard = coalesce(assert_true(
       min(length(col("tag"))).over(wAll) ===
         max(length(col("tag"))).over(wAll),
-      lit("boundaryTrace: batch tags must be fixed-width " +
+      lit(s"$fn: batch tags must be fixed-width " +
         "(zero-padded) so lexicographic look order is append order"))
       .cast("long"), lit(0L))
-    val looked = readoutTrace(spark, path)
+    val looked = tr
       .withColumn("look", row_number().over(wOrd).cast("long") + widthGuard)
     val bound = bounds.zipWithIndex.tail
       .foldLeft(when(col("look") === 1L, lit(bounds.head))) {
         case (acc, (b, i)) => acc.when(col("look") === (i + 1).toLong, lit(b))
       }
       .otherwise(raise_error(concat(
-        lit("boundaryTrace: look "), col("look").cast("string"),
+        lit(s"$fn: look "), col("look").cast("string"),
         lit(s" exceeds the ${bounds.size}-look spending schedule")))
         .cast("double"))
-    val zr = round(col("z"), 6)
+    val shown = round(col(stat), 6)
     looked
-      .withColumn("z_bound", bound)
+      .withColumn(s"${out}_bound", bound)
       .withColumn("crossed",
-        when(col("z").isNull, lit(null).cast("boolean"))
-          .otherwise(abs(zr) >= col("z_bound")))
+        when(col(stat).isNull, lit(null).cast("boolean"))
+          .otherwise(abs(shown) >= col(s"${out}_bound")))
       .withColumn("stopped",
         max(coalesce(col("crossed"), lit(false)).cast("int")).over(wCum)
           === 1)
-      .select(col("tag"), col("look"), col("n_a"), col("conv_a"),
-        col("n_b"), col("conv_b"), zr.as("z"), col("z_bound"),
-        col("crossed"), col("stopped"))
+      .select((Seq(col("tag"), col("look")) ++ keep.map(col) ++
+        Seq(shown.as(out), col(s"${out}_bound"), col("crossed"),
+          col("stopped"))): _*)
   }
 
   /** [[readoutFromStore]] cut at a batch tag — "what did the dashboard
     * say as of batch N": the decision-audit read (append-only rows
     * make the cut exact; prunes on the tag column's min/max). */
-  def readoutFromStoreAsOf(spark: org.apache.spark.sql.SparkSession,
+  def readoutFromStoreAsOf(spark: SparkSession,
                            path: String, asOfTag: String): DataFrame =
     readoutOverArms(mergedArms(spark, path, Some(asOfTag)))
 
-  private def readoutOverArms(merged: DataFrame): DataFrame = {
-    val agg = merged.agg(
-      coalesce(sum(when(col("variant") === 0L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("n_a"),
-      coalesce(sum(when(col("variant") === 0L, col("conv")).otherwise(0L)),
-        lit(0L)).cast("long").as("conv_a"),
-      coalesce(sum(when(col("variant") === 1L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("n_b"),
-      coalesce(sum(when(col("variant") === 1L, col("conv")).otherwise(0L)),
-        lit(0L)).cast("long").as("conv_b"))
-    readoutCard(agg, Nil)
-  }
+  private def readoutOverArms(merged: DataFrame): DataFrame =
+    readoutCard(sums(merged, Nil, pivot(ab, stored("n"), stored("conv"))), Nil)
 
   /** [[cupedReadout]]'s card over the merged store — the maintained
     * variance-reduced lift (theta re-estimated from the cumulative
     * pooled moments at every read, exactly as the one-shot does). */
-  def cupedFromStore(spark: org.apache.spark.sql.SparkSession,
+  def cupedFromStore(spark: SparkSession,
                      path: String): DataFrame =
     cupedOverArms(mergedArms(spark, path))
 
   /** [[cupedFromStore]] cut at a batch tag — the CUPED card's
     * decision-audit read. */
-  def cupedFromStoreAsOf(spark: org.apache.spark.sql.SparkSession,
+  def cupedFromStoreAsOf(spark: SparkSession,
                          path: String, asOfTag: String): DataFrame =
     cupedOverArms(mergedArms(spark, path, Some(asOfTag)))
 
-  private def cupedOverArms(merged: DataFrame): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val agg = merged.agg(
-      coalesce(sum(when(col("variant") === 0L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("n_a"),
-      coalesce(sum(when(col("variant") === 1L, col("n")).otherwise(0L)),
-        lit(0L)).cast("long").as("n_b"),
-      coalesce(sum(when(col("variant") === 0L, col("sy")).otherwise(0L)),
-        lit(0L)).cast("long").as("sy_a"),
-      coalesce(sum(when(col("variant") === 1L, col("sy")).otherwise(0L)),
-        lit(0L)).cast("long").as("sy_b"),
-      coalesce(sum(when(col("variant") === 0L, col("sx")).otherwise(0L)),
-        lit(0L)).cast("long").as("sx_a"),
-      coalesce(sum(when(col("variant") === 1L, col("sx")).otherwise(0L)),
-        lit(0L)).cast("long").as("sx_b"),
-      coalesce(sum(col("sxx")), lit(0).cast(d38)).cast(d38).as("sxx"),
-      coalesce(sum(col("sxy")), lit(0).cast(d38)).cast(d38).as("sxy"),
-      coalesce(sum(col("syy")), lit(0).cast(d38)).cast(d38).as("syy"))
-    cupedCard(agg)
-  }
+  private def cupedOverArms(merged: DataFrame): DataFrame =
+    cupedCard(sums(merged, Nil, pivot(ab, stored("n"), stored("sy"), stored("sx")) ++
+      Seq("sxx", "sxy", "syy").map(c => total(c, col(c), d38))))
 
   /** DuckDB mirror over `src(<groupCols...>, unit, c)` with c already
     * 0/1 — CTEs ending in `ab(<groupCols...>, n_a, conv_a, n_b, conv_b,

@@ -18,6 +18,26 @@ class AbtestSpec extends SparkTestBase {
     val r2 = Abtest.readout(df, Nil, "u", "c", "s1").collect().head
     assert(r.getAs[Long]("n_a") === r2.getAs[Long]("n_a") &&
       r.getAs[Long]("conv_a") === r2.getAs[Long]("conv_a"))
+    // the salt is hashed exactly as given: a quote must not break the
+    // query and a backslash escape must not be reinterpreted — each
+    // unit's arm (read off a per-unit grouped readout) equals a
+    // MessageDigest replay of md5(unit || salt)
+    def armOf(u: Long, salt: String): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest((u.toString + salt).getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      java.lang.Long.parseLong(hex.take(7), 16) % 2
+    }
+    val ids = (1L to 40L).map(u => (u, false)).toDF("u", "c")
+    for (salt <- Seq("o'brien", "a\\tb")) {
+      val perUnit = Abtest.readout(ids, Seq("u"), "u", "c", salt).collect()
+      assert(perUnit.length === 40)
+      perUnit.foreach { pu =>
+        val u = pu.getAs[Long]("u")
+        assert(pu.getAs[Long]("n_b") === armOf(u, salt),
+          s"unit $u under salt <$salt>")
+      }
+    }
   }
 
   test("z identity on known counts; a planted large effect is significant") {
@@ -811,6 +831,62 @@ class AbtestSpec extends SparkTestBase {
       Abtest.readoutTrace(spark, store).collect()
     }
     assert(e3.getMessage.contains("two-arm"))
+    // and every other two-arm trace, its message naming the trace
+    val unguarded = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "srmTrace" -> (() => Abtest.srmTrace(spark, store)),
+      "cupedTrace" -> (() => Abtest.cupedTrace(spark, store)),
+      "meanReadoutTrace" -> (() => Abtest.meanReadoutTrace(spark, store))
+    ).flatMap { case (fn, tr) =>
+      scala.util.Try(tr().collect().toSeq) match {
+        case scala.util.Failure(ei) if ei.getMessage.contains("two-arm") &&
+          ei.getMessage.contains(fn) => Nil
+        case other => Seq(s"$fn: $other")
+      }
+    }
+    assert(unguarded.isEmpty, unguarded.mkString("; "))
+  }
+
+  test("one-shot two-arm cards on empty input: zero counts, NULL statistics") {
+    val empty = Seq.empty[(Long, Boolean, Long, Long)].toDF("u", "c", "y", "x")
+    // card -> (columns reading 0, columns reading NULL, columns reading false)
+    val cases = Seq[(String, org.apache.spark.sql.DataFrame,
+        Seq[String], Seq[String], Seq[String])](
+      ("readout", Abtest.readout(empty, Nil, "u", "c", "e"),
+        Seq("n_a", "conv_a", "n_b", "conv_b"),
+        Seq("rate_a", "rate_b", "lift", "z"), Nil),
+      ("cupedReadout", Abtest.cupedReadout(empty, "u", "y", "x", "e"),
+        Seq("n_a", "n_b", "sy_a", "sy_b"),
+        Seq("theta", "lift_raw", "lift_cuped", "var_reduction"), Nil),
+      ("mdeCard", Abtest.mdeCard(empty, "u", "c", "e"),
+        Seq("n_a", "n_b", "conv_a", "conv_b"), Seq("p_pool", "mde_abs"), Nil),
+      ("wilsonCi", Abtest.wilsonCi(empty, "u", "c", "e"),
+        Seq("n_a", "conv_a", "n_b", "conv_b"),
+        Seq("rate_a", "lo_a", "hi_a", "rate_b", "lo_b", "hi_b", "overlap"),
+        Nil),
+      ("mdeMeanCard", Abtest.mdeMeanCard(empty, "u", "y", "e"),
+        Seq("n_a", "n_b", "sy"), Seq("s2", "mde_abs"), Nil),
+      ("srmCheck", Abtest.srmCheck(empty, "u", "e"),
+        Seq("n_units", "n_a", "n_b", "srm_num", "srm_den"), Seq("srm_chi2"),
+        Seq("mismatch")),
+      ("ratioReadout", Abtest.ratioReadout(empty, "u", "x", "y", "e"),
+        Seq("n_a", "n_b", "sx_a", "sy_a", "sx_b", "sy_b"),
+        Seq("ratio_a", "ratio_b", "diff", "z"), Nil),
+      ("meanReadout", Abtest.meanReadout(empty, "u", "y", "e"),
+        Seq("n_a", "n_b", "sy_a", "sy_b"),
+        Seq("mean_a", "mean_b", "lift", "t_welch", "df_welch"), Nil))
+    val wrong = cases.flatMap { case (card, df, zeros, nulls, falses) =>
+      val rows = df.collect()
+      assert(rows.length === 1, s"$card: one card row")
+      val r = rows.head
+      assert(r.schema.fieldNames.toSet === (zeros ++ nulls ++ falses).toSet,
+        s"$card: every column is covered")
+      def bad(cols: Seq[String], want: Any) = cols.collect {
+        case c if r.get(r.fieldIndex(c)) != want =>
+          s"$card.$c = ${r.get(r.fieldIndex(c))}, want $want"
+      }
+      bad(zeros, 0L) ++ bad(nulls, null) ++ bad(falses, false)
+    }
+    assert(wrong.isEmpty, wrong.mkString("; "))
   }
 
   test("boundaryTrace: mixed-width batch tags die loudly (look order = tag order)") {

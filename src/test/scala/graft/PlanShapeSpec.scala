@@ -267,6 +267,41 @@ class PlanShapeSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  // Exchange-count pins for ops.Abtest's shared builders, values measured
+  // before the builders were shared: a card is one unit-grain aggregation
+  // and one per-arm aggregation, a trace one per-tag aggregation under one
+  // window. A unit grain (or a per-tag aggregation) computed twice gives
+  // 4 instead of 2.
+  test("Abtest cards: one unit grain, one per-arm aggregation (exchange count pinned)") {
+    import spark.implicits._
+    // q_ab_readout's shape (batch_suite's Abtest path) on the sf0.001 events
+    val ro = planString(graft.ops.Abtest.readout(
+      graft.core.Tables.events(spark, sf0001), Nil, "user_id",
+      "event_type = 'purchase' AND value > 110", "exp1"))
+    assert(exchanges(ro) === 2, s"readout:\n$ro")
+    val df = (1L to 300L).map(u => (u, u % 9 == 0, u % 7 * 2L, u % 5 * 3L))
+      .toDF("u", "c", "y", "x")
+    val mr = planString(graft.ops.Abtest.meanReadout(df, "u", "y", "p1"))
+    assert(exchanges(mr) === 2, s"meanReadout:\n$mr")
+    val cr = planString(graft.ops.Abtest.cupedReadout(df, "u", "y", "x", "p1"))
+    assert(exchanges(cr) === 2, s"cupedReadout:\n$cr")
+  }
+
+  test("Abtest traces: one per-tag pivot under one window (exchange count pinned)") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("plan_ab").toString + "/s"
+    val rows = (1L to 300L).map(u => (u, u % 9 == 0, u % 7 * 2L, 0L))
+      .toDF("u", "c", "y", "x")
+    (0L to 2L).foreach { k =>
+      graft.ops.Abtest.momentsStoreAppend(rows.filter($"u" % 3 === k), store,
+        s"b$k", "u", "c", "y", "x", salt = "p1")
+    }
+    val tr = planString(graft.ops.Abtest.readoutTrace(spark, store))
+    assert(exchanges(tr) === 2, s"readoutTrace:\n$tr")
+    val bt = planString(graft.ops.Abtest.boundaryTrace(spark, store))
+    assert(exchanges(bt) === 2, s"boundaryTrace:\n$bt")
+  }
+
   test("degreeAssortativity: degree table broadcast on both end joins") {
     import spark.implicits._
     val edges = (1L to 200L).map(i => (i, i % 40 + 500)).toDF("src", "dst")
