@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,6 +37,11 @@ import org.apache.spark.sql.functions._
   * unquantized high-cardinality value single-partition-sort a 100×
   * corpus. Long-emitted numerators document their bounds; grouped
   * forms keep each group under them.
+  *
+  * Every card with a grouped form has one body, which takes
+  * `groupCols`: one row per group, and with `Nil` the one-row
+  * whole-input card (one row even on an empty input). The forms
+  * without `groupCols` pass `Nil`.
   */
 object Stats {
 
@@ -203,6 +208,29 @@ object Stats {
           .as("rank_biserial")): _*)
   }
 
+  /** Joins two per-group frames on `groupCols`. Over no group columns
+    * both are one-row whole-input aggregates, so the join is a cross
+    * join (inner, left-outer and cross give the same row). */
+  private def joinGroups(l: DataFrame, r: DataFrame, groupCols: Seq[String],
+                         how: String = "inner"): DataFrame =
+    if (groupCols.isEmpty) l.crossJoin(r) else l.join(r, groupCols, how)
+
+  /** The whole-input card broadcasts its distinct-value-sized side
+    * (rank tables, the cell pair side, the excluded-row count); a
+    * grouped card leaves it to shuffle on the group, co-partitioned
+    * with the row side. */
+  private def broadcastIfGlobal(df: DataFrame,
+                                groupCols: Seq[String]): DataFrame =
+    if (groupCols.isEmpty) broadcast(df) else df
+
+  /** The four boolean-cell counts o11, o10, o01, o00 of the 2×2 table
+    * `a` × `b`, each 0 (not NULL) on an empty input. */
+  private def cells2x2(a: Column, b: Column): Seq[Column] =
+    Seq("o11" -> (a && b), "o10" -> (a && !b), "o01" -> (!a && b),
+      "o00" -> (!a && !b)).map { case (name, c) =>
+      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L)).cast("long").as(name)
+    }
+
   /** Exact odds ratio for a 2×2 table — [[chi2x2]]'s effect-size
     * companion: OR = (o11·o00)/(o10·o01) as an exact integer fraction
     * plus one division. NULL when a discordant cell is empty (the
@@ -212,17 +240,10 @@ object Stats {
     * @return one row: n, o11, o10, o01, o00, or_num, or_den,
     *         odds_ratio */
   def oddsRatio2x2(df: DataFrame, aExpr: String, bExpr: String): DataFrame = {
-    val f = df.select(expr(aExpr).cast("boolean").as("a"),
-      expr(bExpr).cast("boolean").as("b"))
-    f.agg(
-        sum(when(col("a") && col("b"), 1L).otherwise(0L)).cast("long")
-          .as("o11"),
-        sum(when(col("a") && !col("b"), 1L).otherwise(0L)).cast("long")
-          .as("o10"),
-        sum(when(!col("a") && col("b"), 1L).otherwise(0L)).cast("long")
-          .as("o01"),
-        sum(when(!col("a") && !col("b"), 1L).otherwise(0L)).cast("long")
-          .as("o00"))
+    val cells = cells2x2(col("a"), col("b"))
+    df.select(expr(aExpr).cast("boolean").as("a"),
+        expr(bExpr).cast("boolean").as("b"))
+      .agg(cells.head, cells.tail: _*)
       .select(
         (col("o11") + col("o10") + col("o01") + col("o00")).as("n"),
         col("o11"), col("o10"), col("o01"), col("o00"),
@@ -250,50 +271,15 @@ object Stats {
     * CLASS axis (cardinality-bounded). NULL kappa when chance
     * agreement is total (den 0). Long-safe to N ≈ 3·10^9 rows.
     *
-    * @return one row: n, n_agree, pe_num (= Σ r_k·c_k), kappa_num,
-    *         kappa_den, kappa */
-  def kappa(df: DataFrame, actualExpr: String, predExpr: String): DataFrame = {
-    val cells = df.select(expr(actualExpr).as("ka"), expr(predExpr).as("kp"))
-      .groupBy(col("ka"), col("kp")).agg(count(lit(1)).cast("long").as("cnt"))
-      .persist()
-    val rm = cells.groupBy(col("ka").as("k")).agg(sum(col("cnt")).as("r"))
-    val cm = cells.groupBy(col("kp").as("k")).agg(sum(col("cnt")).as("c"))
-    val pe = rm.join(cm, "k")
-      .agg(coalesce(sum((col("r").cast("decimal(19,0)") *
-          col("c").cast("decimal(19,0)")).cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)")).as("pe_num"))
-    val tot = cells.agg(
-      coalesce(sum(col("cnt")), lit(0L)).as("n"),
-      coalesce(sum(when(col("ka") === col("kp"), col("cnt"))
-        .otherwise(0L)), lit(0L)).as("n_agree"))
-    val j = tot.crossJoin(pe)
-    val num = ((col("n").cast("decimal(19,0)") *
-      col("n_agree").cast("decimal(19,0)")).cast("decimal(38,0)") -
-      col("pe_num")).cast("decimal(38,0)")
-    val den = ((col("n").cast("decimal(19,0)") *
-      col("n").cast("decimal(19,0)")).cast("decimal(38,0)") -
-      col("pe_num")).cast("decimal(38,0)")
-    val out = j.select(col("n"), col("n_agree"),
-      col("pe_num").cast("long").as("pe_num"),
-      num.cast("long").as("kappa_num"), den.cast("long").as("kappa_den"),
-      when(den === lit(0).cast("decimal(38,0)"), lit(null).cast("double"))
-        .otherwise(num.cast("double") / den.cast("double")).as("kappa"))
-    out
-  }
-
-  /** GROUPED [[kappa]] — one agreement card per group (the per-source
+    * Grouped, one agreement card per group (the per-source
     * classifier-drift screen: which ingest source is the heuristic
-    * quietly failing on?). Same exact arithmetic per group; marginal
-    * products aggregate over each group's class axis, and groups with
-    * no class present in both labelings get pe_num = 0 via the outer
-    * join (never dropped). groupCols must be non-empty — use the
-    * ungrouped form otherwise.
+    * quietly failing on?); groups with no class present in both
+    * labelings get pe_num = 0 via the outer join (never dropped).
     *
-    * @return per group: groupCols..., n, n_agree, pe_num, kappa_num,
-    *         kappa_den, kappa */
+    * @return per group: groupCols..., n, n_agree, pe_num
+    *         (= Σ r_k·c_k), kappa_num, kappa_den, kappa */
   def kappa(df: DataFrame, groupCols: Seq[String], actualExpr: String,
             predExpr: String): DataFrame = {
-    require(groupCols.nonEmpty, "grouped kappa needs groupCols")
     val gc = groupCols.map(col)
     val cells = df
       .select((gc :+ expr(actualExpr).as("ka") :+ expr(predExpr).as("kp")): _*)
@@ -306,14 +292,14 @@ object Stats {
       .agg(sum(col("cnt")).as("c"))
     val pe = rm.join(cm, groupCols :+ "k")
       .groupBy(gc: _*)
-      .agg(sum((col("r").cast("decimal(19,0)") *
-          col("c").cast("decimal(19,0)")).cast("decimal(38,0)"))
-        .cast("decimal(38,0)").as("pe0"))
+      .agg(coalesce(sum((col("r").cast("decimal(19,0)") *
+          col("c").cast("decimal(19,0)")).cast("decimal(38,0)")),
+        lit(0).cast("decimal(38,0)")).cast("decimal(38,0)").as("pe0"))
     val tot = cells.groupBy(gc: _*).agg(
-      sum(col("cnt")).cast("long").as("n"),
-      sum(when(col("ka") === col("kp"), col("cnt")).otherwise(0L))
-        .cast("long").as("n_agree"))
-    val j = tot.join(pe, groupCols, "left_outer")
+      coalesce(sum(col("cnt")), lit(0L)).cast("long").as("n"),
+      coalesce(sum(when(col("ka") === col("kp"), col("cnt")).otherwise(0L)),
+        lit(0L)).cast("long").as("n_agree"))
+    val j = joinGroups(tot, pe, groupCols, "left_outer")
       .withColumn("pe_num",
         coalesce(col("pe0"), lit(0).cast("decimal(38,0)")))
     val num = ((col("n").cast("decimal(19,0)") *
@@ -329,6 +315,9 @@ object Stats {
         .otherwise(num.cast("double") / den.cast("double")).as("kappa")): _*)
   }
 
+  def kappa(df: DataFrame, actualExpr: String, predExpr: String): DataFrame =
+    kappa(df, Nil, actualExpr, predExpr)
+
   /** 2×2 chi-square association between two boolean properties —
     * exact-rational in the 2×2 case: chi2 = N·det² / (r1·r0·c1·c0)
     * with det = o11·o00 − o10·o01 (the general r×c chi-square's
@@ -337,58 +326,20 @@ object Stats {
     * is the signed ±1-bounded effect size. NULL on any zero margin.
     * DECIMAL(38)-exact to N ≈ 3·10^7 per table (group beyond).
     *
-    * @return one row: n, o11, o10, o01, o00, det, chi2, phi */
-  def chi2x2(df: DataFrame, aExpr: String, bExpr: String): DataFrame = {
-    val f = df.select(expr(aExpr).cast("boolean").as("a"),
-      expr(bExpr).cast("boolean").as("b"))
-    val agg = f.agg(
-      sum(when(col("a") && col("b"), 1L).otherwise(0L)).cast("long").as("o11"),
-      sum(when(col("a") && !col("b"), 1L).otherwise(0L)).cast("long").as("o10"),
-      sum(when(!col("a") && col("b"), 1L).otherwise(0L)).cast("long").as("o01"),
-      sum(when(!col("a") && !col("b"), 1L).otherwise(0L)).cast("long").as("o00"))
-    val n = col("o11") + col("o10") + col("o01") + col("o00")
-    val det = ((col("o11").cast("decimal(19,0)") * col("o00").cast("decimal(19,0)"))
-      .cast("decimal(38,0)") -
-      (col("o10").cast("decimal(19,0)") * col("o01").cast("decimal(19,0)"))
-        .cast("decimal(38,0)")).cast("decimal(38,0)")
-    val r1 = col("o11") + col("o10"); val r0 = col("o01") + col("o00")
-    val c1 = col("o11") + col("o01"); val c0 = col("o10") + col("o00")
-    val chiNum = (n.cast("decimal(19,0)") * (det * det).cast("decimal(38,0)"))
-      .cast("decimal(38,0)")
-    val chiDen = ((r1.cast("decimal(19,0)") * r0.cast("decimal(19,0)"))
-      .cast("decimal(38,0)") *
-      (c1.cast("decimal(19,0)") * c0.cast("decimal(19,0)")).cast("decimal(38,0)"))
-      .cast("decimal(38,0)")
-    val degenerate = r1 === 0L || r0 === 0L || c1 === 0L || c0 === 0L
-    agg.select(n.as("n"), col("o11"), col("o10"), col("o01"), col("o00"),
-      det.cast("long").as("det"),
-      when(degenerate, lit(null).cast("double"))
-        .otherwise(chiNum.cast("double") / chiDen.cast("double")).as("chi2"),
-      when(degenerate, lit(null).cast("double"))
-        .otherwise(det.cast("double") /
-          (sqrt((r1 * r0).cast("double")) * sqrt((c1 * c0).cast("double"))))
-        .as("phi"))
-  }
-
-  /** GROUPED [[chi2x2]] — one association card per group (the
-    * per-segment interaction screen: does "converted × long-doc"
-    * association hold in every segment, or is one driving it —
-    * Simpson's-paradox triage). Same determinant-exact arithmetic per
-    * group; each group's table aggregates map-side to four counts.
+    * Grouped, one association card per group (the per-segment
+    * interaction screen: does "converted × long-doc" association hold
+    * in every segment, or is one driving it — Simpson's-paradox
+    * triage); each group's table aggregates map-side to four counts.
     *
     * @return per group: groupCols..., n, o11, o10, o01, o00, det,
     *         chi2, phi */
   def chi2x2(df: DataFrame, groupCols: Seq[String], aExpr: String,
              bExpr: String): DataFrame = {
-    require(groupCols.nonEmpty, "grouped chi2x2 needs groupCols")
     val gc = groupCols.map(col)
-    val f = df.select((gc :+ expr(aExpr).cast("boolean").as("a") :+
-      expr(bExpr).cast("boolean").as("b")): _*)
-    val agg = f.groupBy(gc: _*).agg(
-      sum(when(col("a") && col("b"), 1L).otherwise(0L)).cast("long").as("o11"),
-      sum(when(col("a") && !col("b"), 1L).otherwise(0L)).cast("long").as("o10"),
-      sum(when(!col("a") && col("b"), 1L).otherwise(0L)).cast("long").as("o01"),
-      sum(when(!col("a") && !col("b"), 1L).otherwise(0L)).cast("long").as("o00"))
+    val cells = cells2x2(col("a"), col("b"))
+    val agg = df.select((gc :+ expr(aExpr).cast("boolean").as("a") :+
+        expr(bExpr).cast("boolean").as("b")): _*)
+      .groupBy(gc: _*).agg(cells.head, cells.tail: _*)
     val n = col("o11") + col("o10") + col("o01") + col("o00")
     val det = ((col("o11").cast("decimal(19,0)") * col("o00").cast("decimal(19,0)"))
       .cast("decimal(38,0)") -
@@ -413,6 +364,9 @@ object Stats {
         .as("phi")): _*)
   }
 
+  def chi2x2(df: DataFrame, aExpr: String, bExpr: String): DataFrame =
+    chi2x2(df, Nil, aExpr, bExpr)
+
   /** Goodman–Kruskal lambda (1954): proportional reduction in error
     * predicting Y once X is known — the general-r×c association card
     * that stays integer-exact (unlike the general chi-square):
@@ -420,38 +374,16 @@ object Stats {
     * tells you nothing; 1 = X determines Y. NULL when Y is constant
     * (den 0). Aggregates over the (x,y) cell axis only.
     *
-    * @return one row: n, sum_modal (= Σ_x max_y O_xy), modal_y (the
-    *         majority-class count max_y c_y), lambda_num, lambda_den,
-    *         lambda_gk */
-  def gkLambda(df: DataFrame, xExpr: String, yExpr: String): DataFrame = {
-    val cells = df.select(expr(xExpr).as("x"), expr(yExpr).as("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).cast("long").as("cnt"))
-      .persist()
-    val perX = cells.groupBy(col("x")).agg(max(col("cnt")).as("mx"))
-      .agg(coalesce(sum(col("mx")), lit(0L)).as("sum_modal"))
-    val perY = cells.groupBy(col("y")).agg(sum(col("cnt")).as("cy"))
-      .agg(coalesce(max(col("cy")), lit(0L)).as("modal_y"))
-    val tot = cells.agg(coalesce(sum(col("cnt")), lit(0L)).as("n"))
-    tot.crossJoin(perX).crossJoin(perY)
-      .select(col("n"), col("sum_modal"), col("modal_y"),
-        (col("sum_modal") - col("modal_y")).as("lambda_num"),
-        (col("n") - col("modal_y")).as("lambda_den"),
-        when(col("n") === col("modal_y"), lit(null).cast("double"))
-          .otherwise((col("sum_modal") - col("modal_y")).cast("double") /
-            (col("n") - col("modal_y")).cast("double")).as("lambda_gk"))
-  }
-
-  /** GROUPED [[gkLambda]] — one proportional-reduction-in-error card
-    * per group (does the predictor's value hold across segments, or
-    * only where one segment's majority class happens to align?).
-    * Inner joins are safe: every group has at least one cell in each
-    * derived relation.
+    * Grouped, one card per group (does the predictor's value hold
+    * across segments, or only where one segment's majority class
+    * happens to align?). Inner joins are safe: every group has at
+    * least one cell in each derived relation.
     *
-    * @return per group: groupCols..., n, sum_modal, modal_y,
-    *         lambda_num, lambda_den, lambda_gk */
+    * @return per group: groupCols..., n, sum_modal (= Σ_x max_y O_xy),
+    *         modal_y (the majority-class count max_y c_y), lambda_num,
+    *         lambda_den, lambda_gk */
   def gkLambda(df: DataFrame, groupCols: Seq[String], xExpr: String,
                yExpr: String): DataFrame = {
-    require(groupCols.nonEmpty, "grouped gkLambda needs groupCols")
     val gc = groupCols.map(col)
     val cells = df
       .select((gc :+ expr(xExpr).as("x") :+ expr(yExpr).as("y")): _*)
@@ -460,12 +392,15 @@ object Stats {
       .persist()
     val perX = cells.groupBy((gc :+ col("x")): _*)
       .agg(max(col("cnt")).as("mx"))
-      .groupBy(gc: _*).agg(sum(col("mx")).cast("long").as("sum_modal"))
+      .groupBy(gc: _*)
+      .agg(coalesce(sum(col("mx")), lit(0L)).cast("long").as("sum_modal"))
     val perY = cells.groupBy((gc :+ col("y")): _*)
       .agg(sum(col("cnt")).as("cy"))
-      .groupBy(gc: _*).agg(max(col("cy")).cast("long").as("modal_y"))
-    val tot = cells.groupBy(gc: _*).agg(sum(col("cnt")).cast("long").as("n"))
-    tot.join(perX, groupCols).join(perY, groupCols)
+      .groupBy(gc: _*)
+      .agg(coalesce(max(col("cy")), lit(0L)).cast("long").as("modal_y"))
+    val tot = cells.groupBy(gc: _*)
+      .agg(coalesce(sum(col("cnt")), lit(0L)).cast("long").as("n"))
+    joinGroups(joinGroups(tot, perX, groupCols), perY, groupCols)
       .select((gc :+ col("n") :+ col("sum_modal") :+ col("modal_y") :+
         (col("sum_modal") - col("modal_y")).as("lambda_num") :+
         (col("n") - col("modal_y")).as("lambda_den") :+
@@ -473,6 +408,9 @@ object Stats {
           .otherwise((col("sum_modal") - col("modal_y")).cast("double") /
             (col("n") - col("modal_y")).cast("double")).as("lambda_gk")): _*)
   }
+
+  def gkLambda(df: DataFrame, xExpr: String, yExpr: String): DataFrame =
+    gkLambda(df, Nil, xExpr, yExpr)
 
   /** Spearman rank correlation between two long-valued columns of one
     * relation — Pearson over doubled midranks, so ties are handled
@@ -486,56 +424,17 @@ object Stats {
     * relation (this targets per-entity AGGREGATE relations, which are
     * entity-bounded; group or sample beyond).
     *
-    * @return one row: n, s_xy (= n·Σdxdy − Σdx·Σdy), s_x, s_y, rho */
-  def spearman(df: DataFrame, xExpr: String, yExpr: String): DataFrame = {
-    val base = df.select(expr(xExpr).cast("long").as("x"),
-      expr(yExpr).cast("long").as("y"))
-    def rankTable(c: String): DataFrame = {
-      val w = Window.orderBy(col(c).asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      val t = base.groupBy(col(c)).agg(count(lit(1)).cast("long").as("cnt"))
-      t.withColumn("cum", sum(col("cnt")).over(w) + axisGuard(t, wAll))
-        .select(col(c), (lit(2L) * col("cum") - col("cnt") + 1L).as(s"d$c"))
-    }
-    val withRanks = base
-      .join(broadcast(rankTable("x")), "x")
-      .join(broadcast(rankTable("y")), "y")
-    val dx = col("dx").cast("decimal(19,0)"); val dy = col("dy").cast("decimal(19,0)")
-    val agg = withRanks.agg(
-      count(lit(1)).cast("long").as("n"),
-      sum(dx).cast("decimal(38,0)").as("sdx"),
-      sum(dy).cast("decimal(38,0)").as("sdy"),
-      sum((dx * dy).cast("decimal(38,0)")).cast("decimal(38,0)").as("sxy"),
-      sum((dx * dx).cast("decimal(38,0)")).cast("decimal(38,0)").as("sxx"),
-      sum((dy * dy).cast("decimal(38,0)")).cast("decimal(38,0)").as("syy"))
-    val nD = col("n").cast("decimal(19,0)")
-    val num = (nD * col("sxy") - (col("sdx") * col("sdy")).cast("decimal(38,0)"))
-      .cast("decimal(38,0)")
-    val sx = (nD * col("sxx") - (col("sdx") * col("sdx")).cast("decimal(38,0)"))
-      .cast("decimal(38,0)")
-    val sy = (nD * col("syy") - (col("sdy") * col("sdy")).cast("decimal(38,0)"))
-      .cast("decimal(38,0)")
-    agg.select(col("n"), num.cast("long").as("s_xy"),
-      sx.cast("long").as("s_x"), sy.cast("long").as("s_y"),
-      when(sx === lit(0).cast("decimal(38,0)") ||
-          sy === lit(0).cast("decimal(38,0)"), lit(null).cast("double"))
-        .otherwise(num.cast("double") /
-          (sqrt(sx.cast("double")) * sqrt(sy.cast("double")))).as("rho"))
-  }
-
-  /** GROUPED [[spearman]] — one monotone-association card per group
-    * (is the activity↔spend relation the same every day-of-week /
-    * per segment?). Rank tables partition by the group, so each
-    * group's distinct-value pass is independent and the [[axisGuard]]
-    * ceiling applies per group; no broadcast hint — the rank join
-    * shuffles on (group, value), co-partitioned with the row side.
+    * Grouped, one card per group (is the activity↔spend relation the
+    * same every day-of-week / per segment?). Rank tables partition by
+    * the group, so each group's distinct-value pass is independent and
+    * the [[axisGuard]] ceiling applies per group; no broadcast hint —
+    * the rank join shuffles on (group, value), co-partitioned with the
+    * row side.
     *
-    * @return per group: groupCols..., n, s_xy, s_x, s_y, rho */
+    * @return per group: groupCols..., n, s_xy (= n·Σdxdy − Σdx·Σdy),
+    *         s_x, s_y, rho */
   def spearman(df: DataFrame, groupCols: Seq[String], xExpr: String,
                yExpr: String): DataFrame = {
-    require(groupCols.nonEmpty, "grouped spearman needs groupCols")
     val gc = groupCols.map(col)
     val base = df.select((gc :+ expr(xExpr).cast("long").as("x") :+
       expr(yExpr).cast("long").as("y")): _*)
@@ -546,9 +445,11 @@ object Stats {
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       val t = base.groupBy((gc :+ col(c)): _*)
         .agg(count(lit(1)).cast("long").as("cnt"))
-      t.withColumn("cum", sum(col("cnt")).over(w) + axisGuard(t, wAll))
-        .select((gc :+ col(c) :+
-          (lit(2L) * col("cum") - col("cnt") + 1L).as(s"d$c")): _*)
+      broadcastIfGlobal(
+        t.withColumn("cum", sum(col("cnt")).over(w) + axisGuard(t, wAll))
+          .select((gc :+ col(c) :+
+            (lit(2L) * col("cum") - col("cnt") + 1L).as(s"d$c")): _*),
+        groupCols)
     }
     val withRanks = base
       .join(rankTable("x"), groupCols :+ "x")
@@ -577,6 +478,9 @@ object Stats {
           (sqrt(sx.cast("double")) * sqrt(sy.cast("double")))).as("rho")): _*)
   }
 
+  def spearman(df: DataFrame, xExpr: String, yExpr: String): DataFrame =
+    spearman(df, Nil, xExpr, yExpr)
+
   /** Kruskal–Wallis H (1952): the k-GROUP extension of
     * [[mannWhitney]] — did ANY of k named sources/arms shift the value
     * distribution? Midranks are doubled (integer under ties, the
@@ -591,87 +495,18 @@ object Stats {
     * is all-tied. Values outside the named groups are EXCLUDED and
     * counted loudly in n_other.
     *
-    * @return one row: n, n_other, n_<g>..., r2_<g>... (exact), tie_t,
-    *         h, h_corrected */
-  def kruskalWallis(df: DataFrame, valueExpr: String, groupExpr: String,
-                    groups: Seq[String]): DataFrame = {
-    require(groups.size >= 2 && groups.size <= 16,
-      s"2..16 named groups, got ${groups.size}")
-    require(groups.distinct.size == groups.size, "duplicate group names")
-    val f = df.select(expr(valueExpr).cast("long").as("v"),
-      expr(groupExpr).cast("string").as("g"))
-    val inG = col("g").isin(groups.map(_.asInstanceOf[Any]): _*)
-    val other = f.agg(coalesce(sum(when(!inG || col("g").isNull, 1L)
-      .otherwise(0L)), lit(0L)).cast("long").as("n_other"))
-    val kept = f.filter(inG)
-    // distinct-value pass (the ranked convention, axis-guarded):
-    // per-(value) counts + per-(value, group) counts in one relation
-    val pcAggs = count(lit(1)).cast("long").as("cnt") +:
-      groups.map(g => sum(when(col("g") === g, 1L).otherwise(0L))
-        .cast("long").as(s"cnt_$g"))
-    val pc = kept.groupBy(col("v")).agg(pcAggs.head, pcAggs.tail: _*)
-    val wCum = Window.orderBy(col("v").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val ranked = pc
-      .withColumn("cum", sum(col("cnt")).over(wCum) + axisGuard(pc, wAll))
-      .withColumn("d2", lit(2L) * col("cum") - col("cnt") + 1L)
-    val aggCols =
-      Seq(coalesce(sum(col("cnt")), lit(0L)).cast("long").as("n"),
-        coalesce(sum((col("cnt").cast("decimal(19,0)") *
-            col("cnt").cast("decimal(19,0)") * col("cnt").cast("decimal(19,0)")
-            - col("cnt").cast("decimal(19,0)")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).cast("decimal(38,0)").as("tie_t")) ++
-      groups.flatMap { g =>
-        Seq(coalesce(sum(col(s"cnt_$g")), lit(0L)).cast("long").as(s"n_$g"),
-          coalesce(sum((col(s"cnt_$g").cast("decimal(19,0)") *
-              col("d2").cast("decimal(19,0)")).cast("decimal(38,0)")),
-            lit(0).cast("decimal(38,0)")).cast("decimal(38,0)")
-            .cast("long").as(s"r2_$g"))
-      }
-    val agg = ranked.agg(aggCols.head, aggCols.tail: _*)
-    val n = col("n").cast("double")
-    // Σ_g r2_g²/(4 n_g), folded in the caller's declared group order —
-    // each term and the fold mirrored verbatim in the oracle SQL
-    val sumTerms = groups.map { g =>
-      (col(s"r2_$g").cast("double") * col(s"r2_$g").cast("double")) /
-        (lit(4.0) * col(s"n_$g").cast("double"))
-    }.reduce(_ + _)
-    val h = lit(12.0) * sumTerms / (n * (n + lit(1.0))) -
-      lit(3.0) * (n + lit(1.0))
-    val tieFrac = col("tie_t").cast("double") / (n * n * n - n)
-    val anyEmpty = groups.map(g => col(s"n_$g") === 0L).reduce(_ || _)
-    val allTied = (col("n").cast("decimal(19,0)") *
-      col("n").cast("decimal(19,0)") * col("n").cast("decimal(19,0)") -
-      col("n").cast("decimal(19,0)")).cast("decimal(38,0)") === col("tie_t")
-    val nullD = lit(null).cast("double")
-    agg.crossJoin(broadcast(other)).select(
-      (Seq(col("n"), col("n_other")) ++
-        groups.map(g => col(s"n_$g")) ++ groups.map(g => col(s"r2_$g")) ++
-        Seq(col("tie_t").cast("long").as("tie_t"),
-          when(anyEmpty, nullD).otherwise(h).as("h"),
-          // nested guard: the tie divisor n³−n is 0 when n < 2
-          when(anyEmpty || col("n") < 2L, nullD).otherwise(
-            when(allTied, nullD)
-              .otherwise(h / (lit(1.0) - tieFrac))).as("h_corrected"))): _*)
-  }
-
-  /** GROUPED [[kruskalWallis]] — one k-group omnibus card PER SEGMENT
-    * (the drift-triage completion the grouped kappa/chi2/lambda/
-    * spearman cards started: which segment do the named sources
-    * actually differ in?). Same doubled-midrank exact arithmetic per
-    * segment; windows partition by the segment (each segment's
-    * distinct-value axis is independent and axis-guarded). A segment
-    * whose rows are ALL outside the named groups still emits a row
-    * (n = 0, NULL h — routed to review, never dropped).
+    * Grouped, one k-group omnibus card PER SEGMENT (which segment do
+    * the named sources actually differ in?); windows partition by the
+    * segment (each segment's distinct-value axis is independent and
+    * axis-guarded). A segment whose rows are ALL outside the named
+    * groups still emits a row (n = 0, NULL h — routed to review, never
+    * dropped).
     *
     * @return per segment: groupCols..., n, n_other, n_<g>...,
-    *         r2_<g>..., tie_t, h, h_corrected */
+    *         r2_<g>... (exact), tie_t, h, h_corrected */
   def kruskalWallis(df: DataFrame, groupCols: Seq[String],
                     valueExpr: String, groupExpr: String,
                     groups: Seq[String]): DataFrame = {
-    require(groupCols.nonEmpty, "use the ungrouped kruskalWallis")
     require(groups.size >= 2 && groups.size <= 16,
       s"2..16 named groups, got ${groups.size}")
     require(groups.distinct.size == groups.size, "duplicate group names")
@@ -684,6 +519,8 @@ object Stats {
       coalesce(sum(when(!inG || col("g").isNull, 1L).otherwise(0L)),
         lit(0L)).cast("long").as("n_other"))
     val kept = f.filter(inG)
+    // distinct-value pass (the ranked convention, axis-guarded):
+    // per-(value) counts + per-(value, group) counts in one relation
     val pcAggs = count(lit(1)).cast("long").as("cnt") +:
       groups.map(g => sum(when(col("g") === g, 1L).otherwise(0L))
         .cast("long").as(s"cnt_$g"))
@@ -710,7 +547,8 @@ object Stats {
     val agg = ranked.groupBy(gc: _*).agg(aggCols.head, aggCols.tail: _*)
     // every segment seen anywhere emits a row: left from `other`
     // (which sees all rows), zero-filled where no named-group rows
-    val j = other.join(agg, groupCols, "left_outer")
+    val j = joinGroups(broadcastIfGlobal(other, groupCols), agg, groupCols,
+        "left_outer")
       .select((gc :+ col("n_other") :+
         coalesce(col("n"), lit(0L)).as("n") :+
         coalesce(col("tie_dec"), lit(0).cast(d38)).as("tie_dec")) ++
@@ -718,6 +556,8 @@ object Stats {
           coalesce(col(s"n_$g"), lit(0L)).as(s"n_$g"),
           coalesce(col(s"r2_$g"), lit(0L)).as(s"r2_$g"))): _*)
     val n = col("n").cast("double")
+    // Σ_g r2_g²/(4 n_g), folded in the caller's declared group order —
+    // each term and the fold mirrored verbatim in the oracle SQL
     val sumTerms = groups.map { g =>
       (col(s"r2_$g").cast("double") * col(s"r2_$g").cast("double")) /
         (lit(4.0) * col(s"n_$g").cast("double"))
@@ -734,10 +574,15 @@ object Stats {
         groups.map(g => col(s"n_$g")) ++ groups.map(g => col(s"r2_$g")) ++
         Seq(col("tie_dec").cast("long").as("tie_t"),
           when(anyEmpty, nullD).otherwise(h).as("h"),
+          // nested guard: the tie divisor n³−n is 0 when n < 2
           when(anyEmpty || col("n") < 2L, nullD).otherwise(
             when(allTied, nullD)
               .otherwise(h / (lit(1.0) - tieFrac))).as("h_corrected"))): _*)
   }
+
+  def kruskalWallis(df: DataFrame, valueExpr: String, groupExpr: String,
+                    groups: Seq[String]): DataFrame =
+    kruskalWallis(df, Nil, valueExpr, groupExpr, groups)
 
   /** Cochran's Q (1950): did ANY of k classifiers/treatments graded on
     * the SAME items differ — the k-way [[mcnemar]] (k = 2 reduces to
@@ -755,64 +600,16 @@ object Stats {
     * complete item all-success or all-failure: no discordance to
     * test).
     *
-    * @return one row: k, n_items, bad_items, n_success (= N),
-    *         sum_tj2 (= ΣT_j²), sum_ui2 (= Σu_i²) — all three sums
-    *         over complete items only — q_num, q_den, q */
-  def cochranQ(df: DataFrame, itemExpr: String, treatmentExpr: String,
-               successExpr: String, k: Int): DataFrame = {
-    require(k >= 2, s"need >= 2 treatments, got $k")
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
-    val cells = df.select(expr(itemExpr).as("item"),
-        expr(treatmentExpr).as("t"),
-        when(expr(successExpr), 1L).otherwise(0L).as("s"))
-      .persist()
-    val perItem = cells.groupBy(col("item"))
-      .agg(count(lit(1)).cast("long").as("votes"),
-        sum(col("s")).cast("long").as("u"))
-    val items = perItem.agg(
-      count(lit(1)).cast("long").as("n_items"),
-      coalesce(sum(when(col("votes") =!= k.toLong, 1L).otherwise(0L)),
-        lit(0L)).cast("long").as("bad_items"),
-      coalesce(sum(when(col("votes") === k.toLong,
-          (col("u").cast(d19) * col("u").cast(d19)).cast(d38))
-          .otherwise(lit(0).cast(d38))),
-        lit(0).cast(d38)).cast(d38).cast("long").as("sum_ui2"))
-    // per-treatment sums over COMPLETE items only (semi-join on the
-    // item axis — item-hash-partitioned both sides, no skew hazard)
-    val goodCells = cells.join(
-      perItem.filter(col("votes") === k.toLong).select(col("item")),
-      Seq("item"), "left_semi")
-    val perT = goodCells.groupBy(col("t"))
-      .agg(sum(col("s")).cast("long").as("tj"))
-      .agg(coalesce(sum(col("tj")), lit(0L)).cast("long").as("n_success"),
-        coalesce(sum((col("tj").cast(d19) * col("tj").cast(d19)).cast(d38)),
-          lit(0).cast(d38)).cast(d38).cast("long").as("sum_tj2"))
-    val j = items.crossJoin(perT)
-    val qNum = (lit(k.toLong - 1L).cast(d19) *
-      ((lit(k.toLong).cast(d19) * col("sum_tj2").cast(d19)).cast(d38) -
-        (col("n_success").cast(d19) * col("n_success").cast(d19)).cast(d38))
-        .cast(d38)).cast(d38)
-    val qDen = lit(k.toLong) * col("n_success") - col("sum_ui2")
-    j.select(lit(k).as("k"), col("n_items"), col("bad_items"),
-      col("n_success"), col("sum_tj2"), col("sum_ui2"),
-      qNum.cast("long").as("q_num"), qDen.as("q_den"),
-      when(qDen === 0L, lit(null).cast("double"))
-        .otherwise(qNum.cast("double") / qDen.cast("double")).as("q"))
-  }
-
-  /** GROUPED [[cochranQ]] — one k-way agreement omnibus PER SEGMENT
-    * (which ingest source do the k classifiers actually disagree on?):
-    * completes the per-segment omnibus set next to the grouped
-    * Kruskal–Wallis and Kendall cards. Same complete-case discipline
-    * per segment (items with votes ≠ k are counted in that segment's
-    * bad_items and excluded from its sums).
+    * Grouped, one k-way agreement omnibus PER SEGMENT (which ingest
+    * source do the k classifiers actually disagree on?), with the same
+    * complete-case discipline per segment.
     *
     * @return per segment: groupCols..., k, n_items, bad_items,
-    *         n_success, sum_tj2, sum_ui2, q_num, q_den, q */
+    *         n_success (= N), sum_tj2 (= ΣT_j²), sum_ui2 (= Σu_i²) —
+    *         all three sums over complete items only — q_num, q_den, q */
   def cochranQ(df: DataFrame, groupCols: Seq[String], itemExpr: String,
                treatmentExpr: String, successExpr: String,
                k: Int): DataFrame = {
-    require(groupCols.nonEmpty, "use the ungrouped cochranQ")
     require(k >= 2, s"need >= 2 treatments, got $k")
     val gc = groupCols.map(col)
     val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
@@ -831,6 +628,8 @@ object Stats {
           (col("u").cast(d19) * col("u").cast(d19)).cast(d38))
           .otherwise(lit(0).cast(d38))),
         lit(0).cast(d38)).cast(d38).cast("long").as("sum_ui2"))
+    // per-treatment sums over COMPLETE items only (semi-join on the
+    // item axis — item-hash-partitioned both sides, no skew hazard)
     val goodCells = cells.join(
       perItem.filter(col("votes") === k.toLong)
         .select((gc :+ col("item")): _*),
@@ -843,7 +642,7 @@ object Stats {
           lit(0).cast(d38)).cast(d38).cast("long").as("sum_tj2"))
     // a segment whose items are ALL incomplete has no perT row: left
     // join, zero-fill — it still emits (bad_items loud, NULL q)
-    val j = items.join(perT, groupCols, "left_outer")
+    val j = joinGroups(items, perT, groupCols, "left_outer")
       .select((gc :+ col("n_items") :+ col("bad_items") :+
         col("sum_ui2") :+
         coalesce(col("n_success"), lit(0L)).as("n_success") :+
@@ -860,6 +659,10 @@ object Stats {
         .otherwise(qNum.cast("double") / qDen.cast("double")).as("q")): _*)
   }
 
+  def cochranQ(df: DataFrame, itemExpr: String, treatmentExpr: String,
+               successExpr: String, k: Int): DataFrame =
+    cochranQ(df, Nil, itemExpr, treatmentExpr, successExpr, k)
+
   /** Kendall concordance over the QUANTIZED cell relation — the
     * ordinal-association card: concordant/discordant pair masses C, D
     * computed EXACTLY from (x, y, cnt) cells (one ordered-pair pass:
@@ -872,75 +675,17 @@ object Stats {
     * quadratic in the corpus when it is not. NULL gamma when C + D =
     * 0; NULL tau_b on a zero tie-adjusted denominator.
     *
-    * @return one row: n, n_cells, c_pairs, d_pairs, gamma, tau_b */
-  def kendallCells(df: DataFrame, xExpr: String, yExpr: String): DataFrame = {
-    val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
-    val cells = df.select(expr(xExpr).cast("long").as("x"),
-        expr(yExpr).cast("long").as("y"))
-      .groupBy(col("x"), col("y"))
-      .agg(count(lit(1)).cast("long").as("cnt"))
-      .persist()
-    val a = cells.select(col("x").as("x1"), col("y").as("y1"),
-      col("cnt").as("c1"))
-    val b = cells.select(col("x").as("x2"), col("y").as("y2"),
-      col("cnt").as("c2"))
-    // ordered on x so every cross-x pair is visited once
-    val pairs = a.join(broadcast(b), col("x1") < col("x2"))
-      .agg(
-        coalesce(sum(when(col("y1") < col("y2"),
-            (col("c1").cast(d19) * col("c2").cast(d19)).cast(d38))
-          .otherwise(lit(0).cast(d38))), lit(0).cast(d38)).cast(d38)
-          .as("c_pairs"),
-        coalesce(sum(when(col("y1") > col("y2"),
-            (col("c1").cast(d19) * col("c2").cast(d19)).cast(d38))
-          .otherwise(lit(0).cast(d38))), lit(0).cast(d38)).cast(d38)
-          .as("d_pairs"))
-    val tot = cells.agg(
-      coalesce(sum(col("cnt")), lit(0L)).cast("long").as("n"),
-      count(lit(1)).cast("long").as("n_cells"))
-    def tieMass(c: String): DataFrame = cells.groupBy(col(c))
-      .agg(sum(col("cnt")).cast("long").as("m"))
-      .agg(coalesce(sum(((col("m").cast(d19) * (col("m") - 1L).cast(d19))
-        .cast(d38))), lit(0).cast(d38)).cast(d38).as(s"t2_$c"))
-    val j = tot.crossJoin(pairs).crossJoin(tieMass("x"))
-      .crossJoin(tieMass("y"))
-    // doubled pair masses (avoid /2 everywhere): 2n0 = n(n−1),
-    // 2n1 = Σ m_x(m_x−1), 2n2 = Σ m_y(m_y−1)
-    val n02 = (col("n").cast(d19) * (col("n") - 1L).cast(d19)).cast(d38)
-    val cd = (col("c_pairs") - col("d_pairs")).cast(d38)
-    val den1 = (n02 - col("t2_x")).cast(d38)
-    val den2 = (n02 - col("t2_y")).cast(d38)
-    val nullD = lit(null).cast("double")
-    j.select(col("n"), col("n_cells"),
-      col("c_pairs").cast("long").as("c_pairs"),
-      col("d_pairs").cast("long").as("d_pairs"),
-      when((col("c_pairs") + col("d_pairs")).cast(d38) ===
-          lit(0).cast(d38), nullD)
-        .otherwise(cd.cast("double") /
-          (col("c_pairs") + col("d_pairs")).cast("double")).as("gamma"),
-      when(den1 === lit(0).cast(d38) || den2 === lit(0).cast(d38), nullD)
-        // pair masses above are UNDOUBLED (each unordered pair once),
-        // denominators doubled — scale by 2 to match: tau = 2(C−D)/
-        // √(2n0−2n1)·√(2n0−2n2)
-        .otherwise(lit(2.0) * cd.cast("double") /
-          (sqrt(den1.cast("double")) * sqrt(den2.cast("double"))))
-        .as("tau_b"))
-  }
-
-  /** GROUPED [[kendallCells]] — one ordinal-association card per
-    * segment over the per-segment quantized cell relation: the
-    * grouped Spearman's tie-robust companion in the per-segment
-    * drift-triage set. The cell self-join is an EQUI-join on the
-    * segment with the x-order predicate on top, so each segment pays
-    * its own |cells_g|²/2 and segments never cross; a segment with a
-    * single distinct x (no cross-x pairs) emits zero pair masses and
-    * NULL gamma, never a dropped row.
+    * Grouped, one card per segment over the per-segment cell relation
+    * (the grouped Spearman's tie-robust companion). The cell self-join
+    * is then an EQUI-join on the segment with the x-order predicate on
+    * top, so each segment pays its own |cells_g|²/2 and segments never
+    * cross; a segment with a single distinct x (no cross-x pairs) emits
+    * zero pair masses and NULL gamma, never a dropped row.
     *
     * @return per segment: groupCols..., n, n_cells, c_pairs, d_pairs,
     *         gamma, tau_b */
   def kendallCells(df: DataFrame, groupCols: Seq[String], xExpr: String,
                    yExpr: String): DataFrame = {
-    require(groupCols.nonEmpty, "use the ungrouped kendallCells")
     val gc = groupCols.map(col)
     val d19 = "decimal(19,0)"; val d38 = "decimal(38,0)"
     val cells = df.select((gc :+ expr(xExpr).cast("long").as("x") :+
@@ -952,9 +697,10 @@ object Stats {
       col("cnt").as("c1")): _*)
     val b = cells.select((groupCols.map(g => col(g).as(s"r_$g")) :+
       col("x").as("x2") :+ col("y").as("y2") :+ col("cnt").as("c2")): _*)
-    val joinCond = groupCols.map(g => col(g) === col(s"r_$g"))
-      .reduce(_ && _) && col("x1") < col("x2")
-    val pairs = a.join(b, joinCond)
+    // ordered on x so every cross-x pair is visited once
+    val joinCond = (groupCols.map(g => col(g) === col(s"r_$g")) :+
+      (col("x1") < col("x2"))).reduce(_ && _)
+    val pairs = a.join(broadcastIfGlobal(b, groupCols), joinCond)
       .groupBy(gc: _*)
       .agg(
         coalesce(sum(when(col("y1") < col("y2"),
@@ -975,14 +721,15 @@ object Stats {
       .agg(coalesce(sum(((col("m").cast(d19) * (col("m") - 1L).cast(d19))
         .cast(d38))), lit(0).cast(d38)).cast(d38).as(s"t2_$c"))
     // a single-x segment has no cross-x pairs: left join, zero-fill
-    val j = tot
-      .join(pairs, groupCols, "left_outer")
-      .join(tieMass("x"), groupCols)
-      .join(tieMass("y"), groupCols)
+    val withPairs = joinGroups(tot, pairs, groupCols, "left_outer")
+    val j = joinGroups(joinGroups(withPairs, tieMass("x"), groupCols),
+        tieMass("y"), groupCols)
       .select((gc :+ col("n") :+ col("n_cells") :+
         coalesce(col("c_pairs"), lit(0).cast(d38)).as("c_pairs") :+
         coalesce(col("d_pairs"), lit(0).cast(d38)).as("d_pairs") :+
         col("t2_x") :+ col("t2_y")): _*)
+    // doubled pair masses (avoid /2 everywhere): 2n0 = n(n−1),
+    // 2n1 = Σ m_x(m_x−1), 2n2 = Σ m_y(m_y−1)
     val n02 = (col("n").cast(d19) * (col("n") - 1L).cast(d19)).cast(d38)
     val cd = (col("c_pairs") - col("d_pairs")).cast(d38)
     val den1 = (n02 - col("t2_x")).cast(d38)
@@ -996,10 +743,16 @@ object Stats {
         .otherwise(cd.cast("double") /
           (col("c_pairs") + col("d_pairs")).cast("double")).as("gamma") :+
       when(den1 === lit(0).cast(d38) || den2 === lit(0).cast(d38), nullD)
+        // pair masses above are UNDOUBLED (each unordered pair once),
+        // denominators doubled — scale by 2 to match: tau = 2(C−D)/
+        // √(2n0−2n1)·√(2n0−2n2)
         .otherwise(lit(2.0) * cd.cast("double") /
           (sqrt(den1.cast("double")) * sqrt(den2.cast("double"))))
         .as("tau_b")): _*)
   }
+
+  def kendallCells(df: DataFrame, xExpr: String, yExpr: String): DataFrame =
+    kendallCells(df, Nil, xExpr, yExpr)
 
   /** Wilcoxon signed-rank test (Wilcoxon 1945): the PAIRED two-sample
     * shift test — per unit a before/after (x, y), d = y − x, zeros
@@ -1024,7 +777,8 @@ object Stats {
     val r = ranked(nz, Seq())
       .withColumn("d2", lit(2L) * col("cum") - col("cnt") + 1L)
     val zeros = dd.agg(count(lit(1)).cast("long").as("n_pairs"),
-      sum(when(col("dv") === 0L, 1L).otherwise(0L)).cast("long").as("n_zero"))
+      coalesce(sum(when(col("dv") === 0L, 1L).otherwise(0L)), lit(0L))
+        .cast("long").as("n_zero"))
     val agg = r.agg(
       coalesce(max(col("n")), lit(0L)).as("n_r"),
       coalesce(sum(col("cnt_a").cast("decimal(19,0)") *
@@ -1067,11 +821,8 @@ object Stats {
               correct2Expr: String): DataFrame = {
     val f = df.select(expr(correct1Expr).cast("boolean").as("c1"),
       expr(correct2Expr).cast("boolean").as("c2"))
-    f.agg(count(lit(1)).cast("long").as("n"),
-        sum(when(col("c1") && !col("c2"), 1L).otherwise(0L)).cast("long")
-          .as("b"),
-        sum(when(!col("c1") && col("c2"), 1L).otherwise(0L)).cast("long")
-          .as("c"))
+    val Seq(_, o10, o01, _) = cells2x2(col("c1"), col("c2"))
+    f.agg(count(lit(1)).cast("long").as("n"), o10.as("b"), o01.as("c"))
       .select(col("n"), col("b"), col("c"),
         ((col("b") - col("c")) * (col("b") - col("c"))).as("mcnemar_num"),
         (col("b") + col("c")).as("mcnemar_den"),
@@ -1366,15 +1117,16 @@ object Stats {
     * (ks_num·thrDen > thrNum·ks_den), so the drift verdict itself is
     * engine-exact, not a float comparison. The reference never
     * re-scans history (that is the store's contract); the batch is
-    * scanned once into a model-sized histogram.
+    * scanned once into a model-sized histogram. An empty reference or
+    * batch emits NULL d/drift: it routes to review, not to a pass.
     *
     * @return one row: n_ref, n_batch, ks_num, ks_den, d, at_bucket
     *         (smallest bucket attaining D), drift */
   def ksDriftFromStore(spark: SparkSession, path: String, batch: DataFrame,
                        valueExpr: String, bucketWidth: Long,
                        thrNum: Long, thrDen: Long): DataFrame =
-    ksAgainstRef(Quantiles.fromStore(spark, path), batch, valueExpr,
-      bucketWidth, thrNum, thrDen)
+    ksDrift(Quantiles.fromStore(spark, path),
+      Quantiles.histogram(batch, valueExpr, bucketWidth), Nil, thrNum, thrDen)
 
   /** [[ksDriftFromStore]] with the reference cut STRICTLY BEFORE a
     * batch tag (`tag < beforeTag` on the store's version axis) — the
@@ -1394,7 +1146,8 @@ object Stats {
     val ref = Stores.freshRead(spark, path)
       .filter(col("tag") < beforeTag)
       .groupBy("bucket").agg(sum(col("cnt")).cast("long").as("cnt"))
-    ksAgainstRef(ref, batch, valueExpr, bucketWidth, thrNum, thrDen)
+    ksDrift(ref, Quantiles.histogram(batch, valueExpr, bucketWidth), Nil,
+      thrNum, thrDen)
   }
 
   /** Total-variation drift vs the additive histogram store — the L1
@@ -1442,7 +1195,7 @@ object Stats {
       // long compare like the KS verdict (ANSI overflow is loud, and
       // the long emission bound already applies to tvd_num/tvd_den).
       // An empty reference or batch routes to review (NULL), not to a
-      // pass — same contract as [[ksDriftFromStoreBy]]: tvd_num is 0
+      // pass — same contract as [[ksDriftFromStore]]: tvd_num is 0
       // on an empty side, which a boolean would misread as healthy.
       when(col("n_ref") === 0L || col("n_batch") === 0L,
         lit(null).cast("boolean"))
@@ -1465,15 +1218,22 @@ object Stats {
   def ksDriftFromStoreBy(spark: SparkSession, path: String,
                          groupCols: Seq[String], batch: DataFrame,
                          valueExpr: String, bucketWidth: Long,
-                         thrNum: Long, thrDen: Long): DataFrame = {
+                         thrNum: Long, thrDen: Long): DataFrame =
+    ksDrift(Quantiles.fromStoreBy(spark, path, groupCols),
+      Quantiles.histogramBy(batch, groupCols, valueExpr, bucketWidth),
+      groupCols, thrNum, thrDen)
+
+  /** The KS drift card of a batch histogram against a reference
+    * histogram, both (groupCols..., bucket, cnt): one verdict per
+    * group, one row over no group columns. */
+  private def ksDrift(ref: DataFrame, batch: DataFrame,
+                      groupCols: Seq[String], thrNum: Long,
+                      thrDen: Long): DataFrame = {
     require(thrNum >= 0 && thrDen >= 1, s"threshold $thrNum/$thrDen invalid")
-    require(groupCols.nonEmpty, "use ksDriftFromStore for the global form")
     val gc = groupCols.map(col)
-    val ref = Quantiles.fromStoreBy(spark, path, groupCols)
-      .withColumnRenamed("cnt", "cnt_ref")
-    val b = Quantiles.histogramBy(batch, groupCols, valueExpr, bucketWidth)
-      .withColumnRenamed("cnt", "cnt_b")
-    val joined = ref.join(b, groupCols :+ "bucket", "full_outer")
+    val joined = ref.withColumnRenamed("cnt", "cnt_ref")
+      .join(batch.withColumnRenamed("cnt", "cnt_b"), groupCols :+ "bucket",
+        "full_outer")
       .select((gc :+ col("bucket") :+
         coalesce(col("cnt_ref"), lit(0L)).as("cr") :+
         coalesce(col("cnt_b"), lit(0L)).as("cb")): _*)
@@ -1504,44 +1264,5 @@ object Stats {
         when(emptySide, lit(null).cast("boolean"))
           .otherwise(col("ks_num") * lit(thrDen) > lit(thrNum) *
             (col("n_ref") * col("n_batch"))).as("drift")): _*)
-  }
-
-  private def ksAgainstRef(ref0: DataFrame, batch: DataFrame,
-                           valueExpr: String, bucketWidth: Long,
-                           thrNum: Long, thrDen: Long): DataFrame = {
-    require(thrNum >= 0 && thrDen >= 1, s"threshold $thrNum/$thrDen invalid")
-    val ref = ref0.withColumnRenamed("cnt", "cnt_ref")
-    val b = Quantiles.histogram(batch, valueExpr, bucketWidth)
-      .withColumnRenamed("cnt", "cnt_b")
-    val joined = ref.join(b, Seq("bucket"), "full_outer")
-      .select(col("bucket"),
-        coalesce(col("cnt_ref"), lit(0L)).as("cr"),
-        coalesce(col("cnt_b"), lit(0L)).as("cb"))
-    val wCum = Window.orderBy(col("bucket").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val cum = joined
-      .withColumn("cum_r", sum(col("cr")).over(wCum) +
-        axisGuard(joined, wAll))
-      .withColumn("cum_b", sum(col("cb")).over(wCum))
-      .withColumn("n_ref", sum(col("cr")).over(wAll))
-      .withColumn("n_batch", sum(col("cb")).over(wAll))
-      .withColumn("diff_num",
-        abs(col("cum_r") * col("n_batch") - col("cum_b") * col("n_ref")))
-    cum.agg(
-        max(col("n_ref")).as("n_ref"), max(col("n_batch")).as("n_batch"),
-        max(col("diff_num")).as("ks_num"),
-        max_by(col("bucket"), struct(col("diff_num"), negate(col("bucket"))))
-          .as("at_bucket"))
-      .select(col("n_ref"), col("n_batch"), col("ks_num"),
-        (col("n_ref") * col("n_batch")).as("ks_den"),
-        when(col("n_ref") === 0L || col("n_batch") === 0L,
-          lit(null).cast("double"))
-          .otherwise(col("ks_num").cast("double") /
-            (col("n_ref") * col("n_batch")).cast("double")).as("d"),
-        col("at_bucket"),
-        (col("ks_num") * lit(thrDen) > lit(thrNum) *
-          (col("n_ref") * col("n_batch"))).as("drift"))
   }
 }

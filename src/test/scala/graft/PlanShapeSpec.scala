@@ -302,6 +302,46 @@ class PlanShapeSpec extends SparkTestBase {
     assert(exchanges(bt) === 2, s"boundaryTrace:\n$bt")
   }
 
+  // Plan pins for ops.Stats' shared bodies (one body per statistic, the
+  // whole-input card being the grouped one over no group columns), values
+  // taken before the ungrouped and grouped copies were merged. The
+  // whole-input card broadcasts its distinct-value-sized sides; the
+  // grouped card keys its joins on the segment. Size-based broadcasting
+  // is off in the join test so that only the body's own hints broadcast.
+  test("Stats cards: global rank and pair sides broadcast, grouped pairs key on the segment") {
+    import spark.implicits._
+    val df = (1L to 120L).map(i => (s"s${i % 2}", i % 11, i * 7 % 13))
+      .toDF("seg", "x", "y")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val sp = planString(graft.ops.Stats.spearman(df, "x", "y"))
+      assert("BroadcastHashJoin".r.findAllMatchIn(sp).size === 2,
+        s"both rank tables broadcast:\n$sp")
+      assert(!sp.contains("SortMergeJoin"), s"spearman:\n$sp")
+      val kc = planString(graft.ops.Stats.kendallCells(df, "x", "y"))
+      assert(raw"BroadcastNestedLoopJoin BuildRight, Inner, \(x1#\d+L < x2#\d+L\)"
+        .r.findFirstIn(kc).nonEmpty, s"pair side broadcast:\n$kc")
+      val kg = planString(graft.ops.Stats.kendallCells(df, Seq("seg"), "x", "y"))
+      assert(raw"Join \[seg#\d+\], \[r_seg#\d+\], Inner".r.findFirstIn(kg)
+        .nonEmpty, s"pair join keys on the segment:\n$kg")
+      assert(!kg.contains("NestedLoopJoin") && !kg.contains("CartesianProduct"),
+        s"segments never cross:\n$kg")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    spark.catalog.clearCache()
+  }
+
+  test("Stats kappa: exchange count pinned, global and by segment") {
+    import spark.implicits._
+    val lab = (1L to 200L).map(i => (s"s${i % 3}", s"c${i % 4}", s"c${i * 3 % 5}"))
+      .toDF("seg", "act", "pred")
+    val kg = planString(graft.ops.Stats.kappa(lab, "act", "pred"))
+    assert(exchanges(kg) === 12, s"kappa:\n$kg")
+    val kb = planString(graft.ops.Stats.kappa(lab, Seq("seg"), "act", "pred"))
+    assert(exchanges(kb) === 12, s"kappa by segment:\n$kb")
+    spark.catalog.clearCache()
+  }
+
   test("degreeAssortativity: degree table broadcast on both end joins") {
     import spark.implicits._
     val edges = (1L to 200L).map(i => (i, i % 40 + 500)).toDF("src", "dst")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Quantiles, Stats}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Statistical testing family: hand-computed fixtures for the exact
@@ -684,6 +685,97 @@ class StatsSpec extends SparkTestBase {
     assert(reads(1L) === oneShot, "live readout must equal the one-shot")
   }
 
+  // ------------------------------------- whole-input and grouped cards
+
+  test("every ungrouped card is one row on an empty input: zero counts, NULL statistic") {
+    val e = Seq.empty[(Long, Long, Boolean, Boolean, String, String)]
+      .toDF("x", "y", "a", "b", "s", "t")
+    // (card, output, count columns, final statistic)
+    val cards: Seq[(String, DataFrame, Seq[String], String)] = Seq(
+      ("kappa", Stats.kappa(e, "s", "t"), Seq("n", "n_agree", "pe_num"),
+        "kappa"),
+      ("chi2x2", Stats.chi2x2(e, "a", "b"),
+        Seq("n", "o11", "o10", "o01", "o00"), "chi2"),
+      ("oddsRatio2x2", Stats.oddsRatio2x2(e, "a", "b"),
+        Seq("n", "o11", "o10", "o01", "o00"), "odds_ratio"),
+      ("mcnemar", Stats.mcnemar(e, "a", "b"), Seq("n", "b", "c"), "mcnemar"),
+      ("gkLambda", Stats.gkLambda(e, "s", "t"),
+        Seq("n", "sum_modal", "modal_y"), "lambda_gk"),
+      ("spearman", Stats.spearman(e, "x", "y"), Seq("n"), "rho"),
+      ("kruskalWallis", Stats.kruskalWallis(e, "x", "s", Seq("p", "q")),
+        Seq("n", "n_other", "n_p", "n_q", "r2_p", "r2_q", "tie_t"), "h"),
+      ("cochranQ", Stats.cochranQ(e, "x", "s", "a", k = 2),
+        Seq("n_items", "bad_items", "n_success", "sum_tj2", "sum_ui2"), "q"),
+      ("kendallCells", Stats.kendallCells(e, "x", "y"),
+        Seq("n", "n_cells", "c_pairs", "d_pairs"), "gamma"),
+      ("wilcoxonSignedRank", Stats.wilcoxonSignedRank(e, "x", "y"),
+        Seq("n_pairs", "n_zero", "n_r", "w2_pos", "tie_t"), "z"),
+      ("fleissKappa", Stats.fleissKappa(e, "x", "s", raters = 2),
+        Seq("n_items", "bad_items", "s2", "pe_num"), "kappa"))
+    val wrong = cards.flatMap { case (name, out, counts, stat) =>
+      out.collect() match {
+        case Array(r) =>
+          def v(c: String) = s"$name.$c = ${r.get(r.fieldIndex(c))}"
+          counts.filter(c => r.isNullAt(r.fieldIndex(c)) || r.getAs[Long](c) != 0L)
+            .map(v) ++ Seq(stat).filterNot(c => r.isNullAt(r.fieldIndex(c))).map(v)
+        case rows => Seq(s"$name: ${rows.length} rows")
+      }
+    }
+    assert(wrong === Nil)
+  }
+
+  test("every grouped card's row for a segment equals the ungrouped card on that slice") {
+    // three segments with different x/y relations, label agreement,
+    // kruskal group effects and complete three-treatment cochran items
+    val k = col("id") % 3; val i = expr("id div 3")
+    val rows = spark.range(0, 90).select(
+      concat(lit("s"), k.cast("string")).as("seg"),
+      (i % 5 + k).as("x"), (i * (k + 2) % 7).as("y"),
+      (i % 2 === 0).as("a"), ((i + k) % 3 === 0).as("b"),
+      element_at(array(lit("p"), lit("q"), lit("r")), (i % 3 + 1).cast("int"))
+        .as("g"),
+      expr("id div 9").as("item"), i.as("i"))
+    val slice = (s: String) => rows.filter($"seg" === s)
+    val ksRef = rows.filter($"i" < 15); val ksBatch = rows.filter($"i" >= 15)
+    val dir = java.nio.file.Files.createTempDirectory("ksslice").toString
+    Quantiles.storeAppendBy(ksRef, s"$dir/by", "b0", Seq("seg"), "y", 1L)
+    val segs = Seq("s0", "s1", "s2")
+    segs.foreach(s => Quantiles.storeAppend(ksRef.filter($"seg" === s),
+      s"$dir/$s", "b0", "y", 1L))
+    val ka = "cast(x % 3 as string)"; val kp = "cast(y % 3 as string)"
+    val success = "(x + y) % 2 = 0"
+    // (card, grouped output, the ungrouped card on one segment's slice)
+    val cards: Seq[(String, DataFrame, String => DataFrame)] = Seq(
+      ("kappa", Stats.kappa(rows, Seq("seg"), ka, kp),
+        s => Stats.kappa(slice(s), ka, kp)),
+      ("chi2x2", Stats.chi2x2(rows, Seq("seg"), "a", "b"),
+        s => Stats.chi2x2(slice(s), "a", "b")),
+      ("gkLambda", Stats.gkLambda(rows, Seq("seg"), ka, kp),
+        s => Stats.gkLambda(slice(s), ka, kp)),
+      ("spearman", Stats.spearman(rows, Seq("seg"), "x", "y"),
+        s => Stats.spearman(slice(s), "x", "y")),
+      ("kruskalWallis",
+        Stats.kruskalWallis(rows, Seq("seg"), "y", "g", Seq("p", "q", "r")),
+        s => Stats.kruskalWallis(slice(s), "y", "g", Seq("p", "q", "r"))),
+      ("cochranQ",
+        Stats.cochranQ(rows, Seq("seg"), "item", "g", success, k = 3),
+        s => Stats.cochranQ(slice(s), "item", "g", success, k = 3)),
+      ("kendallCells", Stats.kendallCells(rows, Seq("seg"), "x", "y"),
+        s => Stats.kendallCells(slice(s), "x", "y")),
+      ("ksDrift", Stats.ksDriftFromStoreBy(spark, s"$dir/by", Seq("seg"),
+          ksBatch, "x", 1L, 1L, 4L),
+        s => Stats.ksDriftFromStore(spark, s"$dir/$s",
+          ksBatch.filter($"seg" === s), "x", 1L, 1L, 4L)))
+    cards.foreach { case (name, grouped, solo) =>
+      val by = grouped.collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+      assert(by.keySet === segs.toSet, name)
+      segs.foreach { s =>
+        assert(by(s) === solo(s).collect().head.toSeq,
+          s"$name: segment $s must equal the ungrouped card on its slice")
+      }
+    }
+  }
+
   // ---------------------------------------------- KS drift from store
 
   test("ksDriftFromStore: identical batch is flat, shifted batch drifts") {
@@ -703,6 +795,18 @@ class StatsSpec extends SparkTestBase {
     assert(shifted.getAs[Double]("d") === 1.0)
     assert(shifted.getAs[Long]("at_bucket") === 4L)
     assert(shifted.getAs[Boolean]("drift"))
+    // an empty batch, or a reference cut before the store's first tag,
+    // routes to review (NULL), never reads as a pass
+    val noBatch = Stats.ksDriftFromStore(spark, store,
+      (0L until 10L).toDF("v").limit(0), "v", 2L, 1L, 2L).collect().head
+    assert(noBatch.getAs[Long]("n_batch") === 0L)
+    assert(noBatch.isNullAt(noBatch.fieldIndex("d")))
+    assert(noBatch.isNullAt(noBatch.fieldIndex("drift")))
+    val noRef = Stats.ksDriftFromStoreBefore(spark, store, "b0",
+      (0L until 10L).toDF("v"), "v", 2L, 1L, 2L).collect().head
+    assert(noRef.getAs[Long]("n_ref") === 0L)
+    assert(noRef.isNullAt(noRef.fieldIndex("d")))
+    assert(noRef.isNullAt(noRef.fieldIndex("drift")))
   }
 
   test("tvdDriftFromStore: exact L1 displacement; sees what KS's sup underrates") {
